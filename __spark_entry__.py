@@ -90,8 +90,6 @@ def _index(spark: SparkSession, sf_dir: str):
             text_col="text",
             dense_id_col="doc_id",
             capacity=128,
-            hot_df_threshold=64,
-            salt_buckets=4,
             aux_fields=["lang", "source", "authz"],
             numeric_aux_fields=["n_chars"],
         )
@@ -352,8 +350,6 @@ def _loaded_index(spark: SparkSession, sf_dir: str):
             dense_id_col="doc_id",
             capacity=128,
             wave_size=16,
-            hot_df_threshold=64,
-            salt_buckets=4,
         )
         _INDEX_CACHE[key] = load_index(spark, idx_dir)
     return _INDEX_CACHE[key]

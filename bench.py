@@ -66,7 +66,6 @@ def build_corpus_index(spark, n_rows: int, fixed_layout: bool = False):
         text_col="content",
         natural_key=["repo", "path", "commit"],
         capacity=1024,
-        hot_df_threshold=max(200, n_rows // 10),
         cache=True,
         strategy="fused",
         spread=96 if fixed_layout else None,
@@ -114,7 +113,7 @@ def run_suite() -> dict:
     warm = build_index(
         corpus_df(spark, 2000), text_col="content",
         natural_key=["repo", "path", "commit"], capacity=1024,
-        hot_df_threshold=0, cache=False, strategy="fused", pack_partitions=96,
+        cache=False, strategy="fused", pack_partitions=96,
     )
     warm.packed.count()
     warm.unpersist()
@@ -126,8 +125,7 @@ def run_suite() -> dict:
         if idx is not None:
             idx.unpersist()
         t0 = time.perf_counter()
-        idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024,
-                          hot_df_threshold=64, salt_buckets=4)
+        idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024)
         idx.packed.count()
         idx.flat.count()
         best = min(best, time.perf_counter() - t0)
@@ -255,7 +253,7 @@ def _scaling_child(cpus: int, n_rows: int) -> None:
     warm = build_index(
         corpus_df(spark, 20000), text_col="content",
         natural_key=["repo", "path", "commit"], capacity=1024,
-        hot_df_threshold=0, cache=False, strategy="fused", pack_partitions=96,
+        cache=False, strategy="fused", pack_partitions=96,
     )
     warm.packed.count()
     dps, n_postings, dt = build_corpus_index(spark, n_rows, fixed_layout=True)
@@ -295,7 +293,7 @@ def _scaling_cluster_child(workers: int, cores_per: int, n_rows: int) -> None:
     warm = build_index(
         corpus_df(spark, 20000), text_col="content",
         natural_key=["repo", "path", "commit"], capacity=1024,
-        hot_df_threshold=0, cache=False, strategy="fused", pack_partitions=96,
+        cache=False, strategy="fused", pack_partitions=96,
     )
     warm.packed.count()
     warm.unpersist()

@@ -49,8 +49,7 @@ def main() -> None:
     items: dict[str, object] = {}
 
     def build_docs():
-        idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024,
-                          hot_df_threshold=64, salt_buckets=4)
+        idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024)
         idx.packed.count()
         idx.flat.count()
         idx.unpersist()
@@ -63,8 +62,7 @@ def main() -> None:
     def _idx():
         nonlocal idx
         if idx is None:
-            idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024,
-                              hot_df_threshold=64, salt_buckets=4)
+            idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024)
             fulltext.top_k(idx, "the", k=10).collect()  # warm
         return idx
 

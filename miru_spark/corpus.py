@@ -16,7 +16,7 @@ on a real cluster (partition count scales with `spark.range`'s parallelism).
 Content mirrors the fixture spec: 50-2000 tokens drawn Zipf(s=1.1) from a
 20k-identifier vocabulary + language keyword tables + operators, with hot
 terms ("license", "copyright", "the", "import") injected into >60% of rows
-to exercise skew salting (FIXTURES.md §5).
+to exercise hot-term skew (FIXTURES.md §5).
 """
 
 from __future__ import annotations

@@ -23,12 +23,12 @@ Layout under ``index_dir``:
     aux/                     field postings; repair deltas in aux_delta/wave=K
     removed/batch_*/         tombstone instance batches, manifest-listed
 
-Build = waves of doc-partitions (each wave: tokenize → flat → salted
-segments → pack → write → manifest commit), then a final merge stage that
+Build = waves of doc-partitions (each wave: tokenize → flat → shuffle-sort
+pack → write segments → manifest commit), then a final merge stage that
 range-partitions all segments by term (the north_rule's repartitionByRange
 merge; hot terms span multiple (part) rows so the range partitioner splits
-them across output files — plus the in-wave salting already bounded any
-single aggregation). A killed build resumes at wave granularity without
+them across output files — and in-wave, one posting list is bounded by
+``capacity``). A killed build resumes at wave granularity without
 recomputing finished waves.
 
 Repair/append (``upsert_docs``) is O(delta), mirroring the reference's
@@ -118,8 +118,6 @@ def build_persistent(
     dense_id_col: str | None = None,
     natural_key: list[str] | None = None,
     capacity: int = B.DEFAULT_CAPACITY,
-    hot_df_threshold: int = B.DEFAULT_HOT_TERM_DF,
-    salt_buckets: int = B.DEFAULT_SALT_BUCKETS,
     wave_size: int = 8,
     merge_partitions: int | None = None,
     fail_after_wave: int | None = None,
@@ -173,7 +171,6 @@ def build_persistent(
         "capacity": capacity,
         "text_col": text_col,
         "id": dense_id_col or ",".join(natural_key or []),
-        "salt_buckets": salt_buckets,
         "aux": ",".join(aux_fields or []),
         "num_aux": ",".join(numeric_aux_fields or []),
         "stopwords": ",".join(sorted(stopwords or [])),
@@ -821,12 +818,10 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
     return B.IndexHandle(
         docs=docs,
         flat=B.unpack_postings(packed),
-        segments=None,
         packed=packed,
         stats=stats,
         lens=lens.select("part", "doc_id", "doc_key", "dl"),
         corpus=B.CorpusStats(n_docs=int(info["n_docs"]), avgdl=float(info["avgdl"])),
-        hot_terms=[],
         lazy=True,
         aux=aux,
         forward=forward,

@@ -1,14 +1,18 @@
 """Inverted-index construction (SURVEY.md §2.3, §3.1).
 
-Pipeline (idiomatic Spark, every stage declarative until the final pack):
+Pipeline (idiomatic Spark; the Python lives in Arrow-batched kernels):
 
-    docs        = source rows + (part, doc_id, dl, tokens, content_sha)
-    flat        = explode(tokens) → groupBy(part, term, doc_id).count()   [tf]
-    segments    = groupBy(part, term).agg(sorted (doc_id, tf) list, df, Σtf)
-                  — with explicit salting of hot terms (two-stage agg)
-    packed      = delta+varint binary + block-max metadata (mapInArrow)
+    docs        = source rows + (part, doc_id, doc_key, content_sha)
+    flat        = Arrow tokenize + per-doc tf count, map-side      [tf, dl]
+    packed      = delta+varint binary + block-max metadata, by one of two
+                  routes: 'sort' (flat → repartition(part, term) + sort →
+                  streaming pack, packed_from_flat) or 'fused' (tokenize and
+                  pack per doc-partition in one task, packed_fused)
     term_stats  = groupBy(term).agg(Σdf, Σtf)     [global BM25/TF-IDF stats]
     doclens     = (part, doc_id, dl)              [BM25 norms]
+
+Both routes tokenize through ``_batch_doc_term_counts`` and emit the same
+``PACKED_SCHEMA`` rows byte for byte.
 
 Reference parity:
   * partition-local dense doc ids — MiruPartitionedActivity.index
@@ -20,18 +24,17 @@ Reference parity:
   * global Σtf cell per term (docId=-1) — LabFieldIndex.mergeCardinalities
     (miru-service/.../index/lab/LabFieldIndex.java:510-535) → our
     ``term_stats.cum_tf``;
-  * delta→merge with skew control — LargestFirstMergeChits recast as a
-    shuffle with explicit hot-term salting (north_rule).
+  * delta→merge — LargestFirstMergeChits recast as a shuffle-sort merge.
 
 Scale notes (100 TB / 1000 executors):
-  * both groupBys are map-side combinable; keys (part, term[, doc_id]) are
-    high-cardinality, so no reducer sees more than one posting list;
-  * a hot term's list within one part is bounded by ``capacity``; the salting
-    path bounds the *sort* cost of collect_list for hot terms by splitting
-    the aggregation into S sub-lists merged in a second (tiny) agg;
+  * the pack exchange hashes (part, term): one posting list never spans
+    reducers, a hot term's per-part lists hash to different reducers, and
+    one list is bounded by ``capacity`` (per-part df) — that is the skew
+    bound, so no salting stage is needed to cap a reducer's input;
+  * the pack is a streaming external sort, never a JVM array per list;
   * term_stats aggregates ≤ n_parts rows per term (partial agg), never raw
     postings — no skew;
-  * no driver-side loops; the only Python is the Arrow-batched pack.
+  * no driver-side loops; the only Python is the Arrow-batched kernels.
 """
 
 from __future__ import annotations
@@ -49,8 +52,6 @@ from miru_spark import codec
 from miru_spark.tokenize import content_sha_col
 
 DEFAULT_CAPACITY = 1_000_000  # docs per partition (Miru: "millions", README.md:12)
-DEFAULT_SALT_BUCKETS = 8
-DEFAULT_HOT_TERM_DF = 100_000  # per-part df above which a term is salted
 
 # fused-kernel buffered bytes per posting: int64 intern code + int32 doc_id +
 # int32 tf, plus amortized intern-dict/chunk-list overhead
@@ -179,7 +180,7 @@ def prepare_docs(
     return out
 
 
-def _batch_doc_term_counts(texts, stop: frozenset | None):
+def _batch_doc_term_counts(texts, stop: frozenset | None, stem):
     """Vectorized per-doc term-frequency counting for one Arrow batch.
 
     pyarrow.compute does the tokenize (RE2 split of the lowered text — the
@@ -189,10 +190,12 @@ def _batch_doc_term_counts(texts, stop: frozenset | None):
     Returns (row_idx int64[], codes int64[], tfs int32[], dict_terms) where
     row_idx indexes the batch's rows (docs with zero surviving tokens are
     simply absent), codes index dict_terms (batch-local intern), and the
-    (row_idx, codes) pairs are unique. Replaces the per-doc Python
-    findall+Counter+setdefault loop — ~5× less kernel CPU on the code
-    corpus — and is only used when no stemmer is active (stemmers are
-    per-token Python callables)."""
+    (row_idx, codes) pairs are unique.
+
+    Stopwords drop raw tokens; ``stem`` (a per-token callable, applied after
+    the stopword filter) then runs once per DISTINCT token of the batch
+    dictionary, and the codes are remapped onto the re-encoded stems before
+    the count — so tokens that stem alike merge into one (doc, term) tf."""
     import pyarrow.compute as pc
 
     from miru_spark.tokenize import TOKEN_SPLIT_RE
@@ -221,6 +224,11 @@ def _batch_doc_term_counts(texts, stop: frozenset | None):
     enc = flat.dictionary_encode()
     codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     dict_arr = enc.dictionary
+    if stem is not None:
+        stems = pa.array([stem(t) for t in dict_arr.to_pylist()], pa.string())
+        enc = stems.dictionary_encode()
+        codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)[codes]
+        dict_arr = enc.dictionary
     k = len(dict_arr)
     key = row_of_token * k + codes
     order = np.argsort(key, kind="stable")
@@ -249,136 +257,43 @@ def flat_postings(
 
     Token semantics are identical to tokenize.tokens_col (asserted in tests):
     re.findall("[a-z0-9_']+", lower) ≡ split-on-complement + drop-empties.
+    Stopwords and the stemmer apply inside the same kernel
+    (_batch_doc_term_counts), so analyzed builds stay vectorized too.
     """
-    import re
-
-    from miru_spark.tokenize import TOKEN_SPLIT_RE
-
     from miru_spark.stem import get_stemmer
 
-    find_re = re.compile(TOKEN_SPLIT_RE.replace("[^", "[", 1))
     stop = stopwords or None
     st = get_stemmer(stemmer)
 
     def _tok(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from collections import Counter
-
         for batch in batches:
             parts = batch.column("part").to_numpy(zero_copy_only=False)
             doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
             keys = batch.column("doc_key").to_numpy(zero_copy_only=False)
-            if st is None:
-                # vectorized tokenize+count (no per-token Python); identical
-                # rows up to ordering — downstream is aggregation/sort-only
-                ridx, codes, tfs, dict_arr = _batch_doc_term_counts(
-                    batch.column(text_col), stop
-                )
-                if len(ridx) == 0:
-                    continue
-                doc_starts = np.concatenate(
-                    ([0], np.flatnonzero(ridx[1:] != ridx[:-1]) + 1)
-                )
-                run_lens = np.diff(np.concatenate((doc_starts, [len(ridx)])))
-                dl_doc = np.add.reduceat(tfs.astype(np.int64), doc_starts)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(parts[ridx].astype(np.int32)),
-                        dict_arr.take(pa.array(codes)),
-                        pa.array(doc_ids[ridx].astype(np.int32)),
-                        pa.array(tfs),
-                        pa.array(np.repeat(dl_doc, run_lens).astype(np.int32)),
-                        pa.array(keys[ridx].astype(np.int64)),
-                    ],
-                    names=["part", "term", "doc_id", "tf", "dl", "doc_key"],
-                )
+            ridx, codes, tfs, dict_arr = _batch_doc_term_counts(
+                batch.column(text_col), stop, st
+            )
+            if len(ridx) == 0:
                 continue
-            texts = batch.column(text_col).to_pylist()
-            o_part, o_doc, o_term, o_tf, o_dl, o_key = [], [], [], [], [], []
-            for p, d, ky, txt in zip(parts, doc_ids, keys, texts):
-                if not txt:
-                    continue
-                toks = find_re.findall(txt.lower())
-                if stop:
-                    toks = [t for t in toks if t not in stop]
-                if st:
-                    toks = list(map(st, toks))
-                counts = Counter(toks)
-                if not counts:
-                    continue
-                o_part.append(np.full(len(counts), p, dtype=np.int32))
-                o_doc.append(np.full(len(counts), d, dtype=np.int32))
-                o_term.extend(counts.keys())
-                o_tf.append(np.fromiter(counts.values(), dtype=np.int32, count=len(counts)))
-                o_dl.append(np.full(len(counts), len(toks), dtype=np.int32))
-                o_key.append(np.full(len(counts), ky, dtype=np.int64))
-            if o_term:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(o_part)),
-                        pa.array(o_term, pa.string()),
-                        pa.array(np.concatenate(o_doc)),
-                        pa.array(np.concatenate(o_tf)),
-                        pa.array(np.concatenate(o_dl)),
-                        pa.array(np.concatenate(o_key)),
-                    ],
-                    names=["part", "term", "doc_id", "tf", "dl", "doc_key"],
-                )
+            doc_starts = np.concatenate(
+                ([0], np.flatnonzero(ridx[1:] != ridx[:-1]) + 1)
+            )
+            run_lens = np.diff(np.concatenate((doc_starts, [len(ridx)])))
+            dl_doc = np.add.reduceat(tfs.astype(np.int64), doc_starts)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(parts[ridx].astype(np.int32)),
+                    dict_arr.take(pa.array(codes)),
+                    pa.array(doc_ids[ridx].astype(np.int32)),
+                    pa.array(tfs),
+                    pa.array(np.repeat(dl_doc, run_lens).astype(np.int32)),
+                    pa.array(keys[ridx].astype(np.int64)),
+                ],
+                names=["part", "term", "doc_id", "tf", "dl", "doc_key"],
+            )
 
     return docs.select("part", "doc_id", "doc_key", F.col(text_col)).mapInArrow(
         _tok, "part int, term string, doc_id int, tf int, dl int, doc_key long"
-    )
-
-
-def detect_hot_terms(flat: DataFrame, hot_df_threshold: int, max_hot: int = 1024) -> list[str]:
-    """Terms whose per-part df exceeds the threshold anywhere — salting set.
-
-    Data-driven, not hard-coded (SURVEY.md §7 risk list); cheap because the
-    count aggregates map-side first.
-    """
-    rows = (
-        flat.groupBy("part", "term")
-        .count()
-        .filter(F.col("count") > hot_df_threshold)
-        .select("term")
-        .distinct()
-        .limit(max_hot)
-        .collect()
-    )
-    return sorted(r["term"] for r in rows)
-
-
-def build_segments(
-    flat: DataFrame,
-    hot_terms: list[str] | None = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Per-(part, term) sorted posting lists with df / Σtf.
-
-    Hot terms take a two-stage aggregation: stage 1 groups on an extra
-    ``salt = doc_id % S`` so no single reducer sorts the whole hot list;
-    stage 2 merges the S sub-lists. Output is byte-identical either way
-    (asserted in tests) — the salt only reshapes the shuffle.
-    """
-    plist = F.struct(F.col("doc_id"), F.col("tf"), F.col("dl"), F.col("doc_key"))
-    if not hot_terms:
-        return flat.groupBy("part", "term").agg(
-            F.sort_array(F.collect_list(plist)).alias("plist"),
-            F.count(F.lit(1)).alias("df_part"),
-            F.sum("tf").alias("cum_tf_part"),
-        )
-    is_hot = F.col("term").isin(hot_terms)
-    salted = flat.withColumn(
-        "salt", F.when(is_hot, F.pmod(F.col("doc_id"), F.lit(salt_buckets))).otherwise(F.lit(0))
-    )
-    sub = salted.groupBy("part", "term", "salt").agg(
-        F.sort_array(F.collect_list(plist)).alias("subplist"),
-        F.count(F.lit(1)).alias("df_s"),
-        F.sum("tf").alias("cum_s"),
-    )
-    return sub.groupBy("part", "term").agg(
-        F.sort_array(F.flatten(F.collect_list("subplist"))).alias("plist"),
-        F.sum("df_s").alias("df_part"),
-        F.sum("cum_s").alias("cum_tf_part"),
     )
 
 
@@ -495,10 +410,10 @@ def packed_from_flat(flat: DataFrame, num_partitions: int | None = None) -> Data
     delivers each (part, term) posting list as a contiguous sorted run;
     a streaming mapInArrow detects run boundaries (pyarrow compute), packs
     every complete run vectorized, and carries the partition-trailing run
-    across Arrow batches. Replaces the hash-agg + collect_list path, which
-    materializes every posting list as a JVM array — measured to stop
-    scaling beyond ~50k docs from allocation/GC pressure. This is the
-    LSM-merge of the reference (delta segments merged sorted,
+    across Arrow batches. A groupBy + collect_list pack materializes every
+    posting list as a JVM array and was measured to stop scaling beyond
+    ~50k docs from allocation/GC pressure; this route never does. This is
+    the LSM-merge of the reference (delta segments merged sorted,
     LabInvertedIndex.setIndex) as a shuffle-sort.
     """
     spark = flat.sparkSession
@@ -628,16 +543,12 @@ def packed_fused(
     Per-task state is O(postings of its parts) — bounded by ``capacity``
     exactly like the reference's per-partition in-memory delta index; size
     ``capacity`` so one partition's postings fit an executor (Miru's own
-    sizing rule). Output rows are byte-identical to the other strategies
-    (ids sorted per (part, term)); only row order differs.
+    sizing rule). Output rows are byte-identical to packed_from_flat's (ids
+    sorted per (part, term)), with or without stopwords and a stemmer; only
+    row order differs.
     """
-    import re
-
-    from miru_spark.tokenize import TOKEN_SPLIT_RE
-
     from miru_spark.stem import get_stemmer
 
-    find_re = re.compile(TOKEN_SPLIT_RE.replace("[^", "[", 1))
     stop = stopwords or None
     st = get_stemmer(stemmer)
     spark = docs.sparkSession
@@ -645,8 +556,6 @@ def packed_fused(
     src = docs.select("part", "doc_id", "doc_key", F.col(text_col)).repartition(n, "part")
 
     def _tok_pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from collections import Counter
-
         # per part: term interner + chunked (code, doc_id, tf, key) buffers
         interns: dict[int, dict[str, int]] = {}
         bufs: dict[int, list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]]] = {}
@@ -654,66 +563,32 @@ def packed_fused(
             parts = batch.column("part").to_numpy(zero_copy_only=False)
             doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
             keys_in = batch.column("doc_key").to_numpy(zero_copy_only=False)
-            if st is None:
-                # vectorized tokenize+count; the per-part intern maps only
-                # each batch-dictionary term once (not every posting).
-                # Output bytes are unchanged: intern order only feeds
-                # code_rank, and the final per-part lexsort is by term
-                # STRING — any intern order yields the same packed rows.
-                ridx, codes, tfs, dict_arr = _batch_doc_term_counts(
-                    batch.column(text_col), stop
-                )
-                if len(ridx) == 0:
-                    continue
-                dict_terms = dict_arr.to_pylist()
-                lut = np.empty(len(dict_terms), dtype=np.int64)
-                p_rows = parts[ridx]
-                for p in np.unique(p_rows):
-                    m = p_rows == p
-                    intern = interns.setdefault(int(p), {})
-                    for c in np.unique(codes[m]):
-                        lut[c] = intern.setdefault(dict_terms[c], len(intern))
-                    bufs.setdefault(int(p), []).append(
-                        (
-                            lut[codes[m]],
-                            doc_ids[ridx][m].astype(np.int32),
-                            tfs[m],
-                            keys_in[ridx][m].astype(np.int64),
-                        )
-                    )
+            # vectorized tokenize+count; the per-part intern maps only each
+            # batch-dictionary term once (not every posting). Output bytes
+            # are unchanged: intern order only feeds code_rank, and the
+            # final per-part lexsort is by term STRING — any intern order
+            # yields the same packed rows.
+            ridx, codes, tfs, dict_arr = _batch_doc_term_counts(
+                batch.column(text_col), stop, st
+            )
+            if len(ridx) == 0:
                 continue
-            texts = batch.column(text_col).to_pylist()
-            b_code, b_doc, b_tf, b_part, b_key = [], [], [], [], []
-            for p, d, ky, txt in zip(parts, doc_ids, keys_in, texts):
-                if not txt:
-                    continue
-                toks = find_re.findall(txt.lower())
-                if stop:
-                    toks = [t for t in toks if t not in stop]
-                if st:
-                    toks = list(map(st, toks))
-                counts = Counter(toks)
-                if not counts:
-                    continue
+            dict_terms = dict_arr.to_pylist()
+            lut = np.empty(len(dict_terms), dtype=np.int64)
+            p_rows = parts[ridx]
+            for p in np.unique(p_rows):
+                m = p_rows == p
                 intern = interns.setdefault(int(p), {})
-                codes = [
-                    intern.setdefault(t, len(intern)) for t in counts.keys()
-                ]
-                k = len(codes)
-                b_part.append(np.full(k, p, dtype=np.int32))
-                b_code.append(np.fromiter(codes, dtype=np.int64, count=k))
-                b_doc.append(np.full(k, d, dtype=np.int32))
-                b_tf.append(np.fromiter(counts.values(), dtype=np.int32, count=k))
-                b_key.append(np.full(k, ky, dtype=np.int64))
-            if b_code:
-                pc_ = np.concatenate(b_part)
-                cc = np.concatenate(b_code)
-                dd = np.concatenate(b_doc)
-                tt = np.concatenate(b_tf)
-                kk = np.concatenate(b_key)
-                for p in np.unique(pc_):
-                    m = pc_ == p
-                    bufs.setdefault(int(p), []).append((cc[m], dd[m], tt[m], kk[m]))
+                for c in np.unique(codes[m]):
+                    lut[c] = intern.setdefault(dict_terms[c], len(intern))
+                bufs.setdefault(int(p), []).append(
+                    (
+                        lut[codes[m]],
+                        doc_ids[ridx][m].astype(np.int32),
+                        tfs[m],
+                        keys_in[ridx][m].astype(np.int64),
+                    )
+                )
         for p in sorted(bufs):
             codes = np.concatenate([c for c, _, _, _ in bufs[p]])
             docs_ = np.concatenate([d for _, d, _, _ in bufs[p]])
@@ -779,55 +654,8 @@ def packed_fused(
     return src.mapInArrow(_tok_pack, PACKED_SCHEMA)
 
 
-def pack_segments(segments: DataFrame) -> DataFrame:
-    """Delta+varint-pack posting lists and attach block-max metadata.
-
-    Arrow-batched AND fully vectorized: the whole batch's lists are encoded
-    as one flattened varint stream, then re-split zero-copy via Arrow
-    offsets (no per-row Python at all).
-    """
-
-    def _pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            plist = batch.column("plist")
-            if isinstance(plist, pa.ChunkedArray):  # pragma: no cover
-                plist = plist.combine_chunks()
-            offsets = np.asarray(plist.offsets, dtype=np.int64)
-            base = offsets[0]
-            offsets = offsets - base
-            child = plist.values
-            doc_ids = np.asarray(child.field("doc_id"))[base : base + offsets[-1]]
-            tfs = np.asarray(child.field("tf"))[base : base + offsets[-1]]
-            dls = np.asarray(child.field("dl"))[base : base + offsets[-1]]
-            keys = np.asarray(child.field("doc_key"))[base : base + offsets[-1]]
-            ids_col, tfs_col, dls_col, keys_col, bl_col, bm_col = _pack_arrays(
-                offsets, doc_ids, tfs, dls, keys
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("part"),
-                    batch.column("term"),
-                    batch.column("df_part"),
-                    batch.column("cum_tf_part"),
-                    ids_col, tfs_col, dls_col, keys_col, bl_col, bm_col,
-                    pa.array(
-                        np.asarray(doc_ids[offsets[:-1]], dtype=np.int32)
-                        if len(doc_ids) else np.empty(len(offsets) - 1, np.int32)
-                    ),
-                ],
-                names=[
-                    "part", "term", "df_part", "cum_tf_part",
-                    "ids", "tfs", "dls", "keys",
-                    "block_last", "block_max_tf", "first_id",
-                ],
-            )
-
-    cols = ["part", "term", "df_part", "cum_tf_part", "plist"]
-    return segments.select(*cols).mapInArrow(_pack, PACKED_SCHEMA)
-
-
 def unpack_postings(packed: DataFrame) -> DataFrame:
-    """Inverse of pack_segments → flat (part, term, doc_id, tf, dl, doc_key)."""
+    """Inverse of the pack kernels → flat (part, term, doc_id, tf, dl, doc_key)."""
 
     def _unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -906,7 +734,6 @@ class IndexHandle:
 
     docs: DataFrame          # source + (part, doc_id, doc_key, dl, tokens, content_sha)
     flat: DataFrame          # (part, term, doc_id, tf, dl, doc_key) — self-contained for scoring
-    segments: DataFrame      # (part, term, plist, df_part, cum_tf_part)
     packed: DataFrame        # delta+varint blocks
     stats: DataFrame         # (term, df, cum_tf)
     # (part, doc_id, doc_key, dl) — OFF the hot query path since postings
@@ -914,7 +741,6 @@ class IndexHandle:
     # fallback (pure-negation trees), TIME-with-tree, and first/latest.
     lens: DataFrame
     corpus: CorpusStats
-    hot_terms: list[str]
     # loaded-from-disk index: ``flat`` is unpack_postings(packed), a Python
     # map Catalyst can NOT push term predicates through — query paths must
     # filter ``packed`` (parquet, term-sorted files → row-group pruning)
@@ -967,10 +793,7 @@ class IndexHandle:
 
     def unpersist(self, blocking: bool = False) -> None:
         for df in self.cached:
-            try:
-                df.unpersist(blocking)
-            except Exception:
-                pass
+            df.unpersist(blocking)
         self.cached.clear()
 
 
@@ -1038,8 +861,6 @@ def build_index(
     dense_id_col: str | None = None,
     natural_key: list[str] | None = None,
     capacity: int = DEFAULT_CAPACITY,
-    hot_df_threshold: int = DEFAULT_HOT_TERM_DF,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
     cache: bool = True,
     spread: int | None = None,
     strategy: str = "sort",
@@ -1050,9 +871,10 @@ def build_index(
     stopwords: frozenset | None = None,
     stemmer: str | None = None,
 ) -> IndexHandle:
-    """``strategy``: 'sort' (default — shuffle-sort streaming pack) or
-    'hash_agg' (collect_list + explicit hot-term salting; byte-identical
-    output, kept for the salting semantics and small builds).
+    """``strategy``: 'sort' (default — shuffle-sort streaming pack,
+    packed_from_flat) or 'fused' (per-partition tokenize+pack in one task,
+    packed_fused; capacity-guarded). Both produce byte-identical packed rows;
+    any other value raises ValueError.
 
     ``spread``: explicit input repartition width for the tokenize stage.
     None → 3× defaultParallelism; 0 → keep the source layout. A numbered
@@ -1065,6 +887,8 @@ def build_index(
     selection (text_col = the cardinality field, aux_fields = indexed
     single-term fields) and validates that every schema field exists in the
     source, mirroring the reference's registered-schema contract."""
+    if strategy not in ("sort", "fused"):
+        raise ValueError(f"unknown strategy {strategy!r}; expected 'sort' or 'fused'")
     if schema is not None:
         missing = [f.name for f in schema.fields if f.name not in docs_source.columns]
         if missing:
@@ -1118,7 +942,6 @@ def build_index(
         # sentinel DL_TERM posting row emitted by the kernel; flat is a
         # decode view over cached packed, and queries term-prune the packed
         # relation first (lazy=True).
-        hot, segments = [], None
         packed_all = packed_fused(docs, text_col, pack_partitions, stopwords, stemmer)
         # packed_all feeds ≥3 consumers (postings filter → stats/queries,
         # the DL sentinel → doc lengths, corpus-stats action) — persist it
@@ -1157,28 +980,18 @@ def build_index(
             flat = flat.cache()
             cached.extend([slim, flat])
         meta = doc_meta(slim, flat)
-        if strategy == "sort":
-            # sort-based merge: shuffle-sort delivers each posting list as a
-            # contiguous run, packed streaming — no JVM array
-            # materialization, hot terms handled by the external sort.
-            # pack partition count should derive from DATA VOLUME at cluster
-            # scale (callers size it); default falls back to cluster width
-            hot, segments = [], None
-            packed = packed_from_flat(flat, pack_partitions)
-            if cache:
-                # packed is compact (delta+varint binaries); caching it
-                # keeps term_stats and the WAND query path from re-running
-                # the shuffle-sort pack
-                packed = packed.cache()
-                cached.append(packed)
-        else:
-            # hash-agg strategy with explicit hot-term salting: detection
-            # only matters when a per-part list can exceed the threshold
-            # (per-part df is bounded by capacity).
-            detect = hot_df_threshold and hot_df_threshold < capacity
-            hot = detect_hot_terms(flat, hot_df_threshold) if detect else []
-            segments = build_segments(flat, hot, salt_buckets)
-            packed = pack_segments(segments)
+        # sort-based merge: shuffle-sort delivers each posting list as a
+        # contiguous run, packed streaming — no JVM array materialization,
+        # hot terms handled by the external sort. pack partition count
+        # should derive from DATA VOLUME at cluster scale (callers size it);
+        # default falls back to cluster width
+        packed = packed_from_flat(flat, pack_partitions)
+        if cache:
+            # packed is compact (delta+varint binaries); caching it keeps
+            # term_stats and the WAND query path from re-running the
+            # shuffle-sort pack
+            packed = packed.cache()
+            cached.append(packed)
     stats = term_stats(packed.select("term", "df_part", "cum_tf_part"))
     if cache:
         stats = stats.cache()
@@ -1199,12 +1012,10 @@ def build_index(
     return IndexHandle(
         docs=docs,
         flat=flat,
-        segments=segments,
         packed=packed,
         stats=stats,
         lens=meta.select("part", "doc_id", "doc_key", "dl"),
         corpus=CorpusStats(n_docs=int(n_docs), avgdl=float(total_dl) / n_docs),
-        hot_terms=hot,
         aux=(
             aux_postings(docs, aux_fields or [], numeric_aux_fields)
             if (aux_fields or numeric_aux_fields)

@@ -3,8 +3,8 @@
 Local-mode settings mirror what a real cluster submit would set per-executor;
 `shuffle_partitions` should track total cores (local) or 2-3x total cluster
 cores (real deployment). AQE stays on so skewed merges re-plan at runtime —
-our explicit hot-term salting (operators/build.py) handles the first-order
-skew, AQE catches the residual.
+the (part, term)-hashed pack exchange with per-list ``capacity`` bound
+(operators/build.py) handles the first-order skew, AQE catches the residual.
 """
 
 from __future__ import annotations

@@ -7,8 +7,9 @@ Porter-family stemmer after stopword removal. This is a faithful pure-Python
 implementation of the ORIGINAL published algorithm (M. F. Porter, "An
 algorithm for suffix stripping", Program 14(3) 1980 — public knowledge),
 applied IDENTICALLY at ingest and query time like the stopword set: one
-deterministic analyzer, threaded through both Arrow tokenize kernels, the
-query parser, and the persistent-index fingerprint.
+deterministic analyzer, threaded through the Arrow tokenize kernel
+(build._batch_doc_term_counts, shared by both pack routes), the query
+parser, and the persistent-index fingerprint.
 
 Default OFF: for a source-code corpus, stemming identifiers is wrong (the
 LogMill-regex analyzer stays the default); the dialect exists for prose
@@ -17,8 +18,9 @@ FTS extension (unavailable offline), so stemmed builds are pytest-gated
 against golden vectors from the paper + a brute-force Python BM25 oracle,
 not driver-gated.
 
-Stemming is per-token and tokens repeat heavily, so ``stem_cached`` memoizes
-— in the Arrow kernels the amortized cost is one dict lookup per token.
+Stemming is per-token and tokens repeat heavily: the Arrow kernel stems each
+batch dictionary's DISTINCT tokens once, and ``stem_cached`` memoizes across
+batches, so most calls are one dict lookup per distinct token.
 """
 
 from __future__ import annotations

@@ -168,7 +168,7 @@ def streaming_index_sip(
             return
         docs = B.prepare_docs(batch_df, text_col, dense_id_col, None, capacity)
         flat = B.flat_postings(docs, text_col)
-        packed = B.pack_segments(B.build_segments(flat))
+        packed = B.packed_from_flat(flat)
         packed.write.mode("overwrite").parquet(f"{index_dir}/segments/epoch={epoch_id}")
         B.doc_meta(docs, flat).write.mode("overwrite").parquet(
             f"{index_dir}/doclens/epoch={epoch_id}"

@@ -45,7 +45,7 @@ def main() -> None:
     )
     build_persistent(
         docs, idx_dir, text_col="text", dense_id_col="doc_id",
-        capacity=1024, hot_df_threshold=512, wave_size=8, merge_partitions=8,
+        capacity=1024, wave_size=8, merge_partitions=8,
     )
     # dense-id scheme: doc_key == the dense id (prepare_docs does this at
     # build time; load_index keeps `docs` verbatim, so attach it here)

@@ -46,8 +46,7 @@ def main() -> None:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
 
-    idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024,
-                      hot_df_threshold=64, salt_buckets=4)
+    idx = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=1024)
     fulltext.top_k(idx, "the", k=10).collect()  # warm the stats memo
     fulltext.top_k(idx, "spark join merge", k=100).collect()
     fulltext.top_k(idx, parse_query("spark AND (join OR merge) NOT window", k=100)).collect()

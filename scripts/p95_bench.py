@@ -4,8 +4,9 @@
 Protocol (also embedded in the output JSON so the number is self-described):
 
 * corpus: the synthetic source-code corpus at ``--rows`` (input_hint shape),
-  materialized on tmpfs, indexed once (capacity 1024, hot-term salting) —
-  the same build the headline bench measures.
+  materialized on tmpfs, indexed once (capacity 1024, fused route; the
+  persistent sort route with ``--loaded``) — the same build the headline
+  bench measures.
 * queries: the materialized reference query set
   ``BENCH/queries_code_20k.jsonl`` when rows == 20000 (50 queries: 20
   single-term, 15 AND, 5 OR, 5 AND-NOT, 5 prefix; bm25 + miru_tfidf mix per
@@ -100,7 +101,7 @@ def main() -> None:
     warm = build_index(
         corpus_df(spark, 2000), text_col="content",
         natural_key=["repo", "path", "commit"], capacity=1024,
-        hot_df_threshold=0, cache=False, strategy="fused", pack_partitions=96,
+        cache=False, strategy="fused", pack_partitions=96,
     )
     warm.packed.count()
     warm.unpersist()
@@ -113,14 +114,12 @@ def main() -> None:
             build_persistent(
                 src, idx_dir, text_col="content",
                 natural_key=["repo", "path", "commit"], capacity=1024,
-                hot_df_threshold=max(200, args.rows // 10),
             )
         idx = load_index(spark, idx_dir)
     else:
         idx = build_index(
             src, text_col="content", natural_key=["repo", "path", "commit"],
-            capacity=1024, hot_df_threshold=max(200, args.rows // 10),
-            cache=True, strategy="fused",
+            capacity=1024, cache=True, strategy="fused",
         )
         idx.packed.count()
     build_sec = time.perf_counter() - t0

@@ -89,7 +89,7 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     idx_small = build_index(
         docs, text_col="text", dense_id_col="doc_id", capacity=4096,
-        hot_df_threshold=64, salt_buckets=4, cache=True,
+        cache=True,
     )
     idx_small.packed.count()
     small = bench_queries(
@@ -108,7 +108,7 @@ def main() -> None:
     src = spark.read.parquet(cpath)
     idx_big = build_index(
         src, text_col="content", natural_key=["repo", "path", "commit"],
-        capacity=1024, hot_df_threshold=50_000, cache=True, strategy="fused",
+        capacity=1024, cache=True, strategy="fused",
     )
     idx_big.packed.count()
     hot = [

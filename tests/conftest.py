@@ -30,12 +30,10 @@ def documents(spark, sf_dir):
 def doc_index(documents):
     from miru_spark.operators.build import build_index
 
-    # capacity 128 → multiple partitions even on the 500-row fixture;
-    # hot_df_threshold 64 → the fixture's common terms exercise salting.
-    return build_index(
-        documents, text_col="text", dense_id_col="doc_id", capacity=128, hot_df_threshold=64,
-        salt_buckets=4,
-    )
+    # capacity 128 → multiple partitions even on the 500-row fixture, so the
+    # fixture's common terms have one posting list per part (the default
+    # 'sort' route; test_salting_plans asserts how they spread).
+    return build_index(documents, text_col="text", dense_id_col="doc_id", capacity=128)
 
 
 @pytest.fixture(scope="session")

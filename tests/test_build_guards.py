@@ -1,6 +1,6 @@
 """Round-3 guards: field-leaf parser routing, natural-key null/duplicate
-handling, fused capacity fail-fast, cache bookkeeping, and the zero-decode
-first/latest metadata path."""
+handling, fused capacity fail-fast, unknown-strategy rejection, cache
+bookkeeping, and the zero-decode first/latest metadata path."""
 
 from __future__ import annotations
 
@@ -73,6 +73,15 @@ def test_fused_capacity_guard_fails_fast(spark, documents):
             dense_id_col="doc_id",
             capacity=max(B.DEFAULT_CAPACITY, limit * 10),
             strategy="fused",
+        )
+
+
+def test_unknown_strategy_rejected(spark, documents):
+    # a typo must not silently pick some other build route
+    with pytest.raises(ValueError, match="'sort' or 'fused'"):
+        B.build_index(
+            documents, text_col="text", dense_id_col="doc_id", capacity=128,
+            strategy="hash_sort",
         )
 
 

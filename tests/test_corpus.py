@@ -34,7 +34,7 @@ def test_corpus_df_matches_pandas_and_is_partition_invariant(spark):
         pd.testing.assert_frame_equal(g, w)
 
 
-def test_hot_terms_injected():
+def test_hot_tokens_injected():
     pdf = corpus_pandas(200)
     frac = pdf["content"].str.contains("license").mean()
     assert frac > 0.55  # FIXTURES.md: hot terms in >60% of rows (±sampling)
@@ -50,8 +50,6 @@ def corpus_ix(spark, tmp_path_factory):
         text_col="content",
         natural_key=["repo", "path", "commit"],
         capacity=1 << 20,
-        hot_df_threshold=60,
-        salt_buckets=4,
     )
     con = duckdb.connect()
     con.execute(f"CREATE VIEW code AS SELECT * FROM '{path}/*.parquet'")
@@ -64,7 +62,7 @@ def test_natural_key_doc_ids_stable(spark, corpus_ix):
     re_src = idx.docs.select("repo", "path", "commit", "lang", "content").repartition(13)
     idx2 = build_index(
         re_src, text_col="content", natural_key=["repo", "path", "commit"],
-        capacity=1 << 20, hot_df_threshold=0, cache=False,
+        capacity=1 << 20, cache=False,
     )
     a = idx.docs.select("repo", "path", "commit", "doc_key").toPandas().sort_values("doc_key")
     b = idx2.docs.select("repo", "path", "commit", "doc_key").toPandas().sort_values("doc_key")

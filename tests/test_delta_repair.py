@@ -30,7 +30,7 @@ from miru_spark.operators import wand as wand_ops
 
 KW = dict(
     text_col="text", dense_id_col="doc_id", capacity=128,
-    hot_df_threshold=64, salt_buckets=4, wave_size=4, merge_partitions=4,
+    wave_size=4, merge_partitions=4,
     aux_fields=["lang", "source"],
 )
 

@@ -192,7 +192,7 @@ def test_tree_combination_paranoia_sweep(doc_index, documents):
 
     idx = build_index(
         documents, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, aux_fields=["lang", "source"],
+        aux_fields=["lang", "source"],
         numeric_aux_fields=["n_chars"],
     )
     try:

@@ -26,8 +26,7 @@ def activity_index(spark):
             (i, f"user{i % 10}", f"doc{i}", " ".join(toks), 1000 + i)
         )
     df = spark.createDataFrame(rows, "row_id long, user string, doc string, text string, ts long")
-    return build_index(df, text_col="text", dense_id_col="row_id", capacity=8,
-                       hot_df_threshold=0), df
+    return build_index(df, text_col="text", dense_id_col="row_id", capacity=8), df
 
 
 def test_tfidf_scores_in_unit_interval(activity_index):

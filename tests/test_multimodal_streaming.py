@@ -87,12 +87,8 @@ def test_streaming_index_sip(spark, sf_dir, tmp_path):
     # postings must equal the batch build's
     from miru_spark.operators import build as B
 
-    batch = B.pack_segments(
-        B.build_segments(
-            B.flat_postings(
-                B.prepare_docs(static, "text", "doc_id", None, 128), "text"
-            )
-        )
+    batch = B.packed_from_flat(
+        B.flat_postings(B.prepare_docs(static, "text", "doc_id", None, 128), "text")
     )
     a = packed.selectExpr("sum(df_part)", "sum(cum_tf_part)", "count(*)").collect()[0]
     b = batch.selectExpr("sum(df_part)", "sum(cum_tf_part)", "count(*)").collect()[0]

@@ -50,7 +50,6 @@ def num_index(docs):
         text_col="text",
         dense_id_col="doc_id",
         capacity=128,
-        hot_df_threshold=64,
         aux_fields=["lang"],
         numeric_aux_fields=["n_chars"],
     )

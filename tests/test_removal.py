@@ -28,7 +28,7 @@ def docs(spark):
 def base_index(docs):
     return build_index(
         docs, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, aux_fields=["lang", "source"],
+        aux_fields=["lang", "source"],
     )
 
 

@@ -29,7 +29,7 @@ def built_dirs(spark, documents, tmp_path_factory):
     resumed_dir = str(base / "resumed")
     kw = dict(
         text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, salt_buckets=4, wave_size=2, merge_partitions=4,
+        wave_size=2, merge_partitions=4,
     )
     # uninterrupted build
     rep = build_persistent(documents, clean_dir, **kw)
@@ -171,7 +171,7 @@ def test_upsert_repairs_doc_and_matches_fresh_build(spark, documents, tmp_path_f
     idx_dir = str(base / "idx")
     kw = dict(
         text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, salt_buckets=4, wave_size=4, merge_partitions=4,
+        wave_size=4, merge_partitions=4,
         aux_fields=["lang", "source"],
     )
     build_persistent(documents, idx_dir, **kw)
@@ -245,7 +245,7 @@ def test_wand_survives_terms_tombstoned_out_of_stats(spark, documents, tmp_path_
     idx_dir = str(base / "idx")
     kw = dict(
         text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, salt_buckets=4, wave_size=4, merge_partitions=4,
+        wave_size=4, merge_partitions=4,
     )
     build_persistent(documents, idx_dir, **kw)
     victim = int(

@@ -1,51 +1,103 @@
-"""Skew-salting correctness (FIXTURES.md §5) + physical-plan quality gates:
-filters must reach the parquet scan, small sides must broadcast."""
+"""Pack correctness and hot-term skew on the sort route (FIXTURES.md §5) +
+physical-plan quality gates: filters must reach the parquet scan, small
+sides must broadcast."""
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from miru_spark import codec
 from miru_spark.operators import build as B
 
 
-def _packed_bytes(packed_df):
-    rows = packed_df.select("part", "term", "ids", "tfs").collect()
-    return sorted((r["part"], r["term"], bytes(r["ids"]), bytes(r["tfs"])) for r in rows)
+def _packed_rows(packed_df):
+    return sorted(
+        (
+            r["part"], r["term"], r["df_part"], r["cum_tf_part"],
+            bytes(r["ids"]), bytes(r["tfs"]), bytes(r["dls"]), bytes(r["keys"]),
+            list(r["block_last"]), list(r["block_max_tf"]), r["first_id"],
+        )
+        for r in packed_df.collect()
+    )
 
 
-def test_salted_segments_byte_identical(spark, documents):
-    docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=128)
+def _reference_packed(flat_pdf):
+    """PACKED_SCHEMA rows from the scalar codec, one sorted (part, term)
+    group at a time — no Spark, no vectorized pack."""
+    rows = []
+    ordered = flat_pdf.sort_values(["part", "term", "doc_id"])
+    for (part, term), g in ordered.groupby(["part", "term"], sort=False):
+        ids = g["doc_id"].to_numpy(np.int64)
+        tfs = g["tf"].to_numpy(np.int64)
+        block_last, block_max_tf = codec.block_metadata(ids, tfs)
+        rows.append((
+            int(part), term, len(ids), int(tfs.sum()),
+            codec.delta_pack(ids), codec.tf_pack(tfs),
+            codec.tf_pack(g["dl"].to_numpy(np.int64)),
+            codec.delta_pack(g["doc_key"].to_numpy(np.int64)),
+            block_last.tolist(), block_max_tf.tolist(), int(ids[0]),
+        ))
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("num_partitions", [1, 5])
+def test_sort_pack_byte_identical_to_reference(spark, documents, num_partitions):
+    """The streaming sort-based pack (run detection + carry across Arrow
+    batches) must equal a per-list scalar packer byte for byte, block
+    metadata included. capacity 256 → two parts, and lists long enough to
+    span more than one block."""
+    docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=256)
     flat = B.flat_postings(docs, "text").cache()
-    hot = B.detect_hot_terms(flat, hot_df_threshold=64)
-    assert len(hot) >= 4  # fixture's common terms exceed the threshold
-    unsalted = B.pack_segments(B.build_segments(flat, hot_terms=None))
-    salted = B.pack_segments(B.build_segments(flat, hot_terms=hot, salt_buckets=4))
-    assert _packed_bytes(salted) == _packed_bytes(unsalted)
+    try:
+        want = _reference_packed(flat.toPandas())
+        assert max(r[2] for r in want) > codec.BLOCK_SIZE
+        got = _packed_rows(B.packed_from_flat(flat, num_partitions=num_partitions))
+        assert got == want
+    finally:
+        flat.unpersist()
 
 
 def test_salting_changes_plan(spark, documents):
+    """The sort route needs no salting stage: its pack plan has no salt
+    column and no collect_list aggregate, and its one exchange hashes
+    (part, term), so a hot term is already cut into per-part lists."""
     docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=128)
     flat = B.flat_postings(docs, "text")
-    plain = B.build_segments(flat, hot_terms=None)
-    salted = B.build_segments(flat, hot_terms=["the", "a"], salt_buckets=4)
-    plan_plain = plain._jdf.queryExecution().executedPlan().toString()
-    plan_salted = salted._jdf.queryExecution().executedPlan().toString()
-    # the salted plan has the two-stage aggregate on (part, term, salt)
-    assert "salt" in plan_salted and "salt" not in plan_plain
+    packed = B.packed_from_flat(flat, num_partitions=5)
+    plan = packed._jdf.queryExecution().executedPlan().toString()
+    assert "salt" not in plan, plan
+    assert "collect_list" not in plan and "ObjectHashAggregate" not in plan, plan
+    assert re.search(r"hashpartitioning\(part#\d+, term#\d+, 5", plan), plan
 
 
 def test_hot_term_spreads_across_salt_buckets(spark, documents):
-    docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=128)
-    flat = B.flat_postings(docs, "text")
-    salted = flat.withColumn(
-        "salt",
-        F.when(F.col("term") == "the", F.pmod(F.col("doc_id"), F.lit(4))).otherwise(F.lit(0)),
-    )
-    n_buckets = (
-        salted.filter(F.col("term") == "the")
-        .select("salt").distinct().count()
-    )
-    assert n_buckets >= 4  # FIXTURES.md §5: hot terms split across ≥4 buckets
+    """On the sort route the parts play the salt buckets' role: the
+    highest-df term splits into ≥4 per-part lists (FIXTURES.md §5), which
+    leave several pack tasks, and no list (hence no reducer's share of it)
+    exceeds capacity."""
+    capacity = 128
+    docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=capacity)
+    flat = B.flat_postings(docs, "text").cache()
+    try:
+        packed = B.packed_from_flat(flat, num_partitions=5)
+        hot = (
+            flat.groupBy("term").count()
+            .orderBy(F.desc("count"), "term").first()["term"]
+        )
+        rows = (
+            packed.withColumn("task", F.spark_partition_id())
+            .filter(F.col("term") == hot)
+            .select("task", "df_part").collect()
+        )
+        assert len(rows) >= 4, rows
+        assert len({r["task"] for r in rows}) >= 2, rows
+        assert max(r["df_part"] for r in rows) <= capacity
+    finally:
+        flat.unpersist()
 
 
 def test_term_filter_pushed_to_parquet_scan(spark, documents, tmp_path):
@@ -57,7 +109,7 @@ def test_term_filter_pushed_to_parquet_scan(spark, documents, tmp_path):
     index_dir = str(tmp_path / "idx")
     build_persistent(
         documents, index_dir, text_col="text", dense_id_col="doc_id",
-        capacity=128, hot_df_threshold=64, wave_size=8, merge_partitions=4,
+        capacity=128, wave_size=8, merge_partitions=4,
     )
     idx = load_index(spark, index_dir, documents)
     plan = (
@@ -123,23 +175,6 @@ def test_gather_preserves_winner_whose_doc_row_vanished(doc_index):
     assert by_doc[lost_key]["lang"] is None and by_doc[lost_key]["source"] is None
     others = [r for r in gathered if r["doc"] != lost_key]
     assert all(r["lang"] is not None for r in others)
-
-
-def test_sort_strategy_byte_identical_to_hash_agg(spark, documents):
-    """The streaming sort-based pack (default) must produce byte-identical
-    posting lists to the hash-agg + salting path."""
-    docs = B.prepare_docs(documents, "text", dense_id_col="doc_id", capacity=128)
-    flat = B.flat_postings(docs, "text").cache()
-    via_sort = B.packed_from_flat(flat, num_partitions=5)
-    hot = B.detect_hot_terms(flat, hot_df_threshold=64)
-    via_agg = B.pack_segments(B.build_segments(flat, hot, salt_buckets=4))
-    a = _packed_bytes(via_sort)
-    b = _packed_bytes(via_agg)
-    assert a == b
-    # block metadata identical too
-    sa = sorted(tuple(r) for r in via_sort.select("part", "term", "df_part", "cum_tf_part", "block_last", "block_max_tf").collect())
-    sb = sorted(tuple(r) for r in via_agg.select("part", "term", "df_part", "cum_tf_part", "block_last", "block_max_tf").collect())
-    assert sa == sb
 
 
 def test_score_path_is_self_contained(doc_index):

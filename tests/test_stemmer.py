@@ -68,7 +68,7 @@ def test_unknown_stemmer_raises():
 def stemmed_index(documents):
     return build_index(
         documents, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, stemmer="porter",
+        stemmer="porter",
     )
 
 
@@ -117,11 +117,11 @@ def test_stemmed_topk_matches_brute_oracle(stemmed_index, documents):
 def test_fused_and_sort_strategies_agree_with_stemmer(spark, documents):
     a = build_index(
         documents, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=0, stemmer="porter", strategy="sort", cache=False,
+        stemmer="porter", strategy="sort", cache=False,
     )
     b = build_index(
         documents, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=0, stemmer="porter", strategy="fused", cache=False,
+        stemmer="porter", strategy="fused", cache=False,
     )
     pa_ = sorted(
         (r["part"], r["term"], bytes(r["ids"]), bytes(r["tfs"]))

@@ -50,7 +50,7 @@ def stop_index(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     return build_index(
         docs, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, stopwords=ENGLISH_STOPWORDS,
+        stopwords=ENGLISH_STOPWORDS,
     )
 
 
@@ -77,8 +77,6 @@ def test_dialects_differ_without_stopwords(spark, stop_index):
     # sanity: the stopworded index's avgdl differs from the default build's
     # (proves dl/stats really exclude stopwords, not just the dictionary)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plain = build_index(
-        docs, text_col="text", dense_id_col="doc_id", capacity=128, hot_df_threshold=64,
-    )
+    plain = build_index(docs, text_col="text", dense_id_col="doc_id", capacity=128)
     assert stop_index.corpus.avgdl < plain.corpus.avgdl
     plain.unpersist()

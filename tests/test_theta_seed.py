@@ -27,7 +27,7 @@ def loaded(spark, documents, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("seed") / "idx")
     build_persistent(
         documents, d, text_col="text", dense_id_col="doc_id", capacity=128,
-        hot_df_threshold=64, salt_buckets=4, wave_size=2, merge_partitions=4,
+        wave_size=2, merge_partitions=4,
     )
     return load_index(spark, d, documents)
 
