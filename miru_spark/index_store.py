@@ -23,13 +23,17 @@ Layout under ``index_dir``:
     aux/                     field postings; repair deltas in aux_delta/wave=K
     removed/batch_*/         tombstone instance batches, manifest-listed
 
-Build = waves of doc-partitions (each wave: tokenize → flat → shuffle-sort
-pack → write segments → manifest commit), then a final merge stage that
-range-partitions all segments by term (the north_rule's repartitionByRange
-merge; hot terms span multiple (part) rows so the range partitioner splits
-them across output files — and in-wave, one posting list is bounded by
-``capacity``). A killed build resumes at wave granularity without
-recomputing finished waves.
+Build = waves of doc-partitions. One writer (``_write_wave``) serves the
+build and the repair: from one flat posting relation it writes segments/
+(shuffle-sort pack) and forward/ (doc-sorted flat rows) — flat is not
+persisted, so each of the two writes runs the tokenize kernel; doclens/ is
+Σtf over the forward wave just written (JVM-only, no further tokenize, no
+decode of the segments); then the manifest commits the wave. A final
+merge stage range-partitions all segments by term (the north_rule's
+repartitionByRange merge; hot terms span multiple (part) rows so the range
+partitioner splits them across output files — and in-wave, one posting list
+is bounded by ``capacity``). A killed build resumes at wave granularity
+without recomputing finished waves.
 
 Repair/append (``upsert_docs``) is O(delta), mirroring the reference's
 in-memory delta + chit-budget merge (miru-service/.../partition/
@@ -55,6 +59,7 @@ from pyspark.sql import functions as F
 
 from miru_spark.checkpoint import Manifest
 from miru_spark.operators import build as B
+from miru_spark.schema import resolve_fields
 
 # Bumped whenever the on-disk layout changes (e.g. the first_id packed column,
 # per-wave forward flags; v3: removed/ stores (part, doc_id, doc_key) instances
@@ -102,6 +107,68 @@ def _read_committed(spark: SparkSession, index_dir: str, sub: str, waves: list[i
     )
 
 
+def _write_wave(
+    index_dir: str,
+    wave_id: int,
+    wave_docs: DataFrame,
+    spread: int,
+    text_col: str,
+    stopwords: frozenset | None,
+    stemmer: str | None,
+) -> dict:
+    """Write one wave's segments/, forward/ and doclens/ from ONE flat
+    posting relation and return its per-part lineage counters (segments and
+    postings per part, plus docs and the part's doc_key range for timeRange
+    pruning). ``spread`` as in build_index (0 keeps the layout of
+    ``wave_docs``). Every write is an idempotent per-wave overwrite that
+    stays invisible until the caller's manifest commit."""
+    spark = wave_docs.sparkSession
+    tokenize_src = wave_docs.repartition(spread) if spread else wave_docs
+    flat = B.flat_postings(tokenize_src, text_col, stopwords, stemmer)
+    (
+        B.packed_from_flat(flat)
+        .repartition("part")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/segments/wave={wave_id}")
+    )
+    # doc-sorted so gather's semi-join prunes files; only the 4 forward
+    # columns — dl/doc_key stay in the postings
+    (
+        flat.select("part", "doc_id", "term", "tf")
+        .repartition("part")
+        .sortWithinPartitions("part", "doc_id", "term")
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/forward/wave={wave_id}")
+    )
+    # dl = Σtf over the forward rows just written: a JVM-only aggregate,
+    # no third tokenize of the content
+    B.doc_meta(
+        wave_docs, spark.read.parquet(f"{index_dir}/forward/wave={wave_id}")
+    ).write.mode("overwrite").parquet(f"{index_dir}/doclens/wave={wave_id}")
+    counters = {
+        str(r["part"]): {"n_segments": r["n_segments"], "n_postings": r["n_postings"]}
+        for r in spark.read.parquet(f"{index_dir}/segments/wave={wave_id}")
+        .groupBy("part")
+        .agg(F.count(F.lit(1)).alias("n_segments"), F.sum("df_part").alias("n_postings"))
+        .collect()
+    }
+    for r in (
+        wave_docs.groupBy("part")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("doc_key").alias("mn"),
+            F.max("doc_key").alias("mx"),
+        )
+        .collect()
+    ):
+        c = counters.setdefault(str(r["part"]), {})
+        c["n_docs"] = r["n"]
+        c["min_key"] = int(r["mn"])
+        c["max_key"] = int(r["mx"])
+    return counters
+
+
 @dataclass
 class BuildReport:
     n_parts: int
@@ -124,7 +191,6 @@ def build_persistent(
     spread: int | None = None,
     aux_fields: list[str] | None = None,
     numeric_aux_fields: list[str] | None = None,
-    forward_index: bool = True,
     schema=None,
     stopwords: frozenset | None = None,
     stemmer: str | None = None,
@@ -134,18 +200,9 @@ def build_persistent(
     build_index (tokenize-stage parallelism; 0 keeps the source layout).
     ``schema`` (miru_spark.schema.MiruSchema) drives text/aux field selection
     as in build_index."""
-    if schema is not None:
-        missing = [f.name for f in schema.fields if f.name not in docs_source.columns]
-        if missing:
-            raise ValueError(
-                f"schema {schema.name} v{schema.version} fields missing from "
-                f"source: {missing}"
-            )
-        text_col = schema.text_field()
-        if aux_fields is None:
-            aux_fields = schema.aux_fields()
-        if numeric_aux_fields is None:
-            numeric_aux_fields = schema.numeric_fields()
+    text_col, aux_fields, numeric_aux_fields = resolve_fields(
+        schema, docs_source.columns, text_col, aux_fields, numeric_aux_fields
+    )
     spark = docs_source.sparkSession
     n_parts = None
     if natural_key is not None:
@@ -175,11 +232,6 @@ def build_persistent(
         "num_aux": ",".join(numeric_aux_fields or []),
         "stopwords": ",".join(sorted(stopwords or [])),
         "stemmer": stemmer or "",
-        # forward-index on/off is part of the identity: resuming a
-        # forward=True build with forward=False (or vice versa) must restart,
-        # or forward/wave=* would be a PARTIAL glob that gather silently
-        # miscounts over (round-3 ADVICE medium).
-        "forward": bool(forward_index),
     }
     manifest = Manifest.load_or_create(index_dir, fingerprint)
     if not manifest.data["waves"]:
@@ -208,63 +260,10 @@ def build_persistent(
             continue
         wave_parts = parts[wave_id * wave_size : (wave_id + 1) * wave_size]
         wave_docs = docs.filter(F.col("part").isin(wave_parts))
-        # spread the tokenize stage (see build_index) — numbered repartition
-        # keeps the Arrow pass at full width regardless of wave part count
-        tokenize_src = wave_docs.repartition(spread) if spread else wave_docs
-        flat = B.flat_postings(tokenize_src, text_col, stopwords, stemmer)
-        packed = B.packed_from_flat(flat)
-        (
-            packed.repartition("part")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/segments/wave={wave_id}")
+        counters = _write_wave(
+            index_dir, wave_id, wave_docs, spread, text_col, stopwords, stemmer
         )
-        (
-            B.doc_meta(wave_docs, flat)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/doclens/wave={wave_id}")
-        )
-        if forward_index:
-            # decode the JUST-WRITTEN segments back into the forward layout
-            # (a varint decode pass — much cheaper than a third tokenize of
-            # the content); doc-sorted so gather's semi-join prunes files.
-            # Only the 4 forward columns — dl/doc_key stay in the postings.
-            (
-                B.unpack_postings(spark.read.parquet(f"{index_dir}/segments/wave={wave_id}"))
-                .select("part", "doc_id", "term", "tf")
-                .repartition("part")
-                .sortWithinPartitions("part", "doc_id", "term")
-                .write.mode("overwrite")
-                .parquet(f"{index_dir}/forward/wave={wave_id}")
-            )
-        # per-partition counters (lineage): docs + segments + postings per
-        # part, plus the part's doc_key range (timeRange partition pruning)
-        seg_counts = {
-            str(r["part"]): {"n_segments": r["n_segments"], "n_postings": r["n_postings"]}
-            for r in spark.read.parquet(f"{index_dir}/segments/wave={wave_id}")
-            .groupBy("part")
-            .agg(
-                F.count(F.lit(1)).alias("n_segments"),
-                F.sum("df_part").alias("n_postings"),
-            )
-            .collect()
-        }
-        doc_counts = {
-            str(r["part"]): (r["n"], r["mn"], r["mx"])
-            for r in wave_docs.groupBy("part")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("doc_key").alias("mn"),
-                F.max("doc_key").alias("mx"),
-            )
-            .collect()
-        }
-        for p, (n, mn, mx) in doc_counts.items():
-            c = seg_counts.setdefault(p, {})
-            c["n_docs"] = n
-            c["min_key"] = int(mn)
-            c["max_key"] = int(mx)
-        manifest.commit_wave(wave_id, wave_parts, seg_counts)
+        manifest.commit_wave(wave_id, wave_parts, counters)
         waves_run += 1
         if fail_after_wave is not None and wave_id >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {wave_id}")
@@ -440,11 +439,6 @@ def upsert_docs(
     # validate EVERY precondition before the first write — cheap fail-fast
     # (no write below is destructive pre-commit, but a doomed repair
     # shouldn't burn cluster time either)
-    if old_inst and not fp.get("forward"):
-        raise ValueError(
-            "upsert on a forward_index=False build cannot correct term "
-            "stats without a corpus rescan — rebuild with forward_index=True"
-        )
     if aux_fields or num_aux:
         missing = [c for c in aux_fields + num_aux if c not in rep.columns]
         if missing:
@@ -464,26 +458,9 @@ def upsert_docs(
 
     # ---- wave artifacts: idempotent per-wave overwrites, all UNCOMMITTED
     # until the single manifest save below
-    flat = B.flat_postings(rep, text_col, stopwords, stemmer)
-    packed = B.packed_from_flat(flat)
-    (
-        packed.repartition("part")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/segments/wave={wave_id}")
-    )
-    B.doc_meta(rep, flat).write.mode("overwrite").parquet(
-        f"{index_dir}/doclens/wave={wave_id}"
-    )
-    if fp.get("forward"):
-        (
-            B.unpack_postings(spark.read.parquet(f"{index_dir}/segments/wave={wave_id}"))
-            .select("part", "doc_id", "term", "tf")
-            .repartition("part")
-            .sortWithinPartitions("part", "doc_id", "term")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/forward/wave={wave_id}")
-        )
+    counters = _write_wave(index_dir, wave_id, rep, 0, text_col, stopwords, stemmer)
+    for c in counters.values():
+        c["repair"] = True
     if aux_fields or num_aux:
         # a DELTA dir (not an append into aux/): overwrite-idempotent on
         # retry, invisible until commit; load_index unions it in
@@ -553,30 +530,6 @@ def upsert_docs(
     if n_new <= 0:
         raise ValueError("repair would leave an empty corpus")
 
-    # wave counters (lineage + the part key ranges for timeRange pruning)
-    seg_counts = {
-        str(r["part"]): {
-            "n_segments": r["n_segments"],
-            "n_postings": r["n_postings"],
-            "repair": True,
-        }
-        for r in wave_seg.groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n_segments"), F.sum("df_part").alias("n_postings"))
-        .collect()
-    }
-    for r in (
-        rep.groupBy("part")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_key").alias("mn"),
-            F.max("doc_key").alias("mx"),
-        )
-        .collect()
-    ):
-        c = seg_counts.setdefault(str(r["part"]), {})
-        c["n_docs"] = r["n"]
-        c["min_key"] = int(r["mn"])
-        c["max_key"] = int(r["mx"])
     rep.unpersist()
 
     if fail_before_commit:
@@ -586,8 +539,8 @@ def upsert_docs(
     import time as _time
 
     mdata["waves"][str(wave_id)] = {
-        "parts": sorted(int(p) for p in seg_counts),
-        "counters": seg_counts,
+        "parts": sorted(int(p) for p in counters),
+        "counters": counters,
         "committed_at": _time.strftime("%Y-%m-%dT%H:%M:%SZ", _time.gmtime()),
     }
     mdata.setdefault("delta_waves", []).append(wave_id)
@@ -795,12 +748,8 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
             p = f"{index_dir}/aux_delta/wave={k}"
             if os.path.isdir(p):
                 aux = aux.unionByName(spark.read.parquet(p))
-    # forward-index completeness comes from the MANIFEST, never from mere
-    # directory existence: the fingerprint pins forward on/off for every
-    # wave, so the committed glob below is all-or-nothing by construction
-    forward = None
-    if fp.get("forward") and os.path.isdir(os.path.join(index_dir, "forward")):
-        forward = _read_committed(spark, index_dir, "forward", committed)
+    # every committed wave wrote forward/, so the committed glob is complete
+    forward = _read_committed(spark, index_dir, "forward", committed)
     removed = None
     batches = mdata.get("removal_batches", [])
     if batches:

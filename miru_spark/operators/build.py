@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from miru_spark import codec
+from miru_spark.schema import resolve_fields
 from miru_spark.tokenize import content_sha_col
 
 DEFAULT_CAPACITY = 1_000_000  # docs per partition (Miru: "millions", README.md:12)
@@ -704,10 +705,12 @@ def term_stats(segments: DataFrame) -> DataFrame:
     )
 
 
-def doc_meta(docs: DataFrame, flat: DataFrame) -> DataFrame:
-    """(part, doc_id, doc_key, dl, content_sha) — dl (BM25 norm) derived from
-    the flat postings (Σtf per doc) so content is tokenized exactly once."""
-    dl_df = flat.groupBy("part", "doc_id").agg(F.sum("tf").alias("dl"))
+def doc_meta(docs: DataFrame, postings: DataFrame) -> DataFrame:
+    """(part, doc_id, doc_key, dl, content_sha) — dl (BM25 norm) is Σtf per
+    doc over ``postings``, any (part, doc_id, tf) relation: the flat
+    postings or a persisted forward/ wave, so content is never tokenized
+    again for it. Docs with no postings get dl 0."""
+    dl_df = postings.groupBy("part", "doc_id").agg(F.sum("tf").alias("dl"))
     return (
         docs.select("part", "doc_id", "doc_key", "content_sha")
         .join(dl_df, ["part", "doc_id"], "left")
@@ -889,18 +892,9 @@ def build_index(
     source, mirroring the reference's registered-schema contract."""
     if strategy not in ("sort", "fused"):
         raise ValueError(f"unknown strategy {strategy!r}; expected 'sort' or 'fused'")
-    if schema is not None:
-        missing = [f.name for f in schema.fields if f.name not in docs_source.columns]
-        if missing:
-            raise ValueError(
-                f"schema {schema.name} v{schema.version} fields missing from "
-                f"source: {missing}"
-            )
-        text_col = schema.text_field()
-        if aux_fields is None:
-            aux_fields = schema.aux_fields()
-        if numeric_aux_fields is None:
-            numeric_aux_fields = schema.numeric_fields()
+    text_col, aux_fields, numeric_aux_fields = resolve_fields(
+        schema, docs_source.columns, text_col, aux_fields, numeric_aux_fields
+    )
     sc = docs_source.sparkSession.sparkContext
     n_parts = None
     if natural_key is not None:

@@ -118,14 +118,11 @@ _DECODE_POSTINGS_PER_TASK = int(
 
 def _decode_width(index: IndexHandle, terms: list[str]) -> int | None:
     """Target decode-partition count for a term-pruned unpack, or None to
-    keep the pack's native width (unknown stats / very wide term lists)."""
+    keep the pack's native width (very wide term lists, or a target at or
+    above it). A failing stats lookup raises."""
     if len(terms) > 256:
         return None
-    try:
-        stats = term_stats(index, terms)
-    except Exception:
-        return None
-    total = sum(df for df, _ in stats.values())
+    total = sum(df for df, _ in term_stats(index, terms).values())
     width = max(1, -(-total // _DECODE_POSTINGS_PER_TASK))
     native = getattr(index, "_packed_width", None)
     if native is None:

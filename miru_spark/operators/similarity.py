@@ -598,7 +598,6 @@ def lsh_cosine_pairs(
     n_tables: int = 8,
     seed: int = 42,
     broadcast_verify_bytes: int = 256 << 20,
-    fused_verify_min_pairs: int = 0,
 ) -> DataFrame:
     """LSH-bucketed near-dup pairs, exact-verified — the scale path.
 
@@ -615,23 +614,21 @@ def lsh_cosine_pairs(
     — which is how the gate oracles it (any residual miss probability is
     (1 - (1 - (θ/π))^n_planes)^n_tables per pair, deterministic per seed).
 
-    Verify attachment (r7): when the embedding matrix fits under
+    Verify attachment: when the embedding matrix fits under
     ``broadcast_verify_bytes`` (the broadcast-join decision rule — small
-    side fits ⇒ broadcast), ONE grouped kernel per (table, bucket)
-    enumerates that bucket's candidate pairs and verifies them against the
-    broadcast id-sorted matrix in place: the JVM self-join that exploded
-    ~7M candidate rows, the pre-verify distinct over them, and the two
-    vector-attach shuffle joins all collapse into a single 160k-row group
-    shuffle plus a distinct over the ~4k verified pairs. Above the bound
-    the join path runs unchanged — at 10^9 vectors the matrix cannot be
-    broadcast and the bucketed joins remain the scale shape. Both paths
-    run the identical ordered-fold float ops, so outputs are bit-equal.
-    ``fused_verify_min_pairs`` routes inputs whose expected candidate
-    volume falls under it to the join path; it defaults to 0 because the
-    partition-batched kernel's fixed costs were measured BELOW the join
-    path's at every size tried (500 / 2k / 20k vectors: −30…−70%) — the
-    original 500k gate guarded the earlier one-kernel-call-per-bucket
-    shape, whose per-group overhead did lose at 2k vectors (+54%).
+    side fits ⇒ broadcast), the n·T bucket rows are repartitioned by
+    (table, bucket) into ``verify_width`` partitions — derived from the
+    expected candidate volume n²T/2^(P+1) at ~250k pairs per partition,
+    never from the session width — and ONE partition-batched mapInArrow
+    kernel per partition groups its rows by (table, bucket), enumerates
+    each bucket's candidate pairs and verifies them against the broadcast
+    id-sorted matrix in place. The JVM self-join over the candidates, its
+    distinct, and the two vector-attach shuffle joins never run; a final
+    distinct dedups the verified pairs across tables. Above the bound the
+    join path runs — at 10^9 vectors the matrix cannot be broadcast and the
+    bucketed joins remain the scale shape (``broadcast_verify_bytes=0``
+    forces it). Both paths run the identical ordered-fold float ops, so
+    outputs are bit-equal.
     """
     from typing import Iterator
 
@@ -676,12 +673,8 @@ def lsh_cosine_pairs(
     bucketed = emb.select(F.col(id_col).cast("long"), F.col(vec_col)).mapInArrow(
         bucketize, "vec long, table int, bucket long"
     )
-    # expected candidate volume if buckets were uniform — n²T/2^(P+1);
-    # data/parameter properties only, so the branch is width-independent.
-    est_pairs = n_rows * n_rows * n_tables // (2 ** (n_planes + 1))
     if (
         n_rows >= 2  # <2 rows: no pairs possible, and nothing to broadcast
-        and est_pairs >= fused_verify_min_pairs
         and n_rows * dim * 8 <= broadcast_verify_bytes
     ):
         # small-side-fits: ONE kernel per shuffle partition enumerates and
@@ -697,6 +690,9 @@ def lsh_cosine_pairs(
         # re-scored with the exact ordered j-fold, so emitted rows are
         # bit-identical to the join path (same fold, same round).
         bc = _broadcast_matrix(emb, id_col, vec_col)
+        # expected candidate volume if buckets were uniform — n²T/2^(P+1);
+        # data/parameter properties only, so the width is session-independent
+        est_pairs = n_rows * n_rows * n_tables // (2 ** (n_planes + 1))
         verify_width = max(1, min(4096, -(-est_pairs // 250_000)))
         thr_blas = threshold - 1e-6  # round(fold,6) ≥ t ⟹ fold ≥ t−5e-7 ≫ gram err
 

@@ -141,6 +141,32 @@ class MiruSchema:
         return [f.name for f in self.fields if f.has_feature("stored")]
 
 
+def resolve_fields(
+    schema: MiruSchema | None,
+    columns: list[str],
+    text_col: str,
+    aux_fields: list[str] | None,
+    numeric_aux_fields: list[str] | None,
+) -> tuple[str, list[str] | None, list[str] | None]:
+    """Builder field selection (build_index / build_persistent): a schema
+    must find every one of its fields in the source ``columns``, then it
+    DRIVES the text field and fills whichever aux / numeric field lists the
+    caller left None. Without a schema the arguments pass through."""
+    if schema is None:
+        return text_col, aux_fields, numeric_aux_fields
+    missing = [f.name for f in schema.fields if f.name not in columns]
+    if missing:
+        raise ValueError(
+            f"schema {schema.name} v{schema.version} fields missing from "
+            f"source: {missing}"
+        )
+    return (
+        schema.text_field(),
+        schema.aux_fields() if aux_fields is None else aux_fields,
+        schema.numeric_fields() if numeric_aux_fields is None else numeric_aux_fields,
+    )
+
+
 def check_additive(old: MiruSchema, new: MiruSchema) -> None:
     """MiruSchema.checkAdditive (:303-314): the new schema must keep every
     existing field at its position, identical or type-relaxed per

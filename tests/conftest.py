@@ -44,3 +44,46 @@ def duck(sf_dir):
     for t in ["documents", "events", "embeddings", "orders", "lineitem", "customer"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
+
+
+@pytest.fixture(scope="session")
+def check_wave_artifacts(spark):
+    """check(index_dir, waves): for each listed wave of a persisted index,
+    forward/ holds exactly the decoded segments/ rows (as multisets), and
+    every doclens/ dl is that wave's Σtf per doc (0 for a doc with no
+    postings). Returns the number of doclens rows checked."""
+    from collections import Counter
+
+    from miru_spark.operators.build import unpack_postings
+
+    cols = ["part", "doc_id", "term", "tf"]
+
+    def check(index_dir: str, waves: list[int]) -> int:
+        n_lens = 0
+        for k in waves:
+            seg = Counter(
+                tuple(r)
+                for r in unpack_postings(
+                    spark.read.parquet(f"{index_dir}/segments/wave={k}")
+                ).select(*cols).collect()
+            )
+            fwd = Counter(
+                tuple(r)
+                for r in spark.read.parquet(f"{index_dir}/forward/wave={k}")
+                .select(*cols)
+                .collect()
+            )
+            assert fwd == seg, f"wave {k}: forward rows differ from segments"
+            sum_tf = Counter()
+            for (part, doc_id, _, tf), n in seg.items():
+                sum_tf[(part, doc_id)] += tf * n
+            lens = {
+                (r["part"], r["doc_id"]): r["dl"]
+                for r in spark.read.parquet(f"{index_dir}/doclens/wave={k}").collect()
+            }
+            assert set(sum_tf) <= set(lens), f"wave {k}: posted docs missing from doclens"
+            assert lens == {d: sum_tf.get(d, 0) for d in lens}, f"wave {k}: dl != Σtf"
+            n_lens += len(lens)
+        return n_lens
+
+    return check

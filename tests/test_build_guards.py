@@ -119,3 +119,21 @@ def test_first_latest_matches_decode_path(doc_index):
             r["latest_doc"],
             r["df"],
         ), t
+
+
+def test_auto_source_read_does_not_fall_back_to_parquet(spark, tmp_path):
+    # a directory holding metadata/ is an Iceberg table: when the Iceberg
+    # read fails (no runtime jar here) it must raise, not silently return
+    # the table's data files as parquet rows
+    from miru_spark.sources import read_source
+
+    rows = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    table = tmp_path / "table"
+    rows.write.parquet(str(table))
+    (table / "metadata").mkdir()
+    with pytest.raises(Exception, match="(?i)iceberg"):
+        read_source(spark, str(table), "auto")
+    # a plain parquet directory still reads through auto
+    plain = tmp_path / "plain"
+    rows.write.parquet(str(plain))
+    assert read_source(spark, str(plain), "auto").count() == 1

@@ -111,6 +111,21 @@ def test_upsert_touches_no_merged_artifact(spark, documents, tmp_path_factory):
     assert len(hit) == 1
 
 
+def test_repair_waves_forward_and_doclens_match_segments(
+    repaired_dir, check_wave_artifacts
+):
+    # repair waves go through the same wave writer as the build
+    d, _ = repaired_dir
+    with open(os.path.join(d, "manifest.json")) as f:
+        m = json.load(f)
+    waves = sorted(
+        int(k) for k, w in m["waves"].items()
+        if all(c.get("repair") for c in w["counters"].values())
+    )
+    assert len(waves) == 2
+    assert check_wave_artifacts(d, waves) == 3  # one repaired doc + two inserts
+
+
 def test_compact_preserves_results_and_clears_deltas(spark, documents, repaired_dir):
     d, victim = repaired_dir
     before = _answers(spark, d)

@@ -125,6 +125,21 @@ def test_loaded_first_latest_no_decode(spark, documents, doc_index, built_dirs):
     assert got == want
 
 
+def test_forward_and_doclens_match_segments(
+    spark, documents, doc_index, built_dirs, check_wave_artifacts
+):
+    # every committed wave's forward/ and doclens/ agree with its segments/
+    # (all three come from one tokenize of the wave), and the loaded doc
+    # lengths equal the in-memory build's
+    clean_dir, _, _ = built_dirs
+    with open(os.path.join(clean_dir, "manifest.json")) as f:
+        waves = sorted(int(k) for k in json.load(f)["waves"])
+    assert len(waves) == 2
+    assert check_wave_artifacts(clean_dir, waves) == documents.count()
+    key = lambda lens: sorted(tuple(r) for r in lens.select("doc_key", "dl").collect())
+    assert key(load_index(spark, clean_dir).lens) == key(doc_index.lens)
+
+
 def test_loaded_gather_uses_forward_artifact(spark, documents, doc_index, built_dirs):
     # gather on a loaded index reads the forward (activity) index artifact;
     # the only Python decode left is the term-pruned match-set unpack

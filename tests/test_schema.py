@@ -98,12 +98,20 @@ def test_schema_drives_build(documents):
     assert idx.stats.count() > 0
 
 
-def test_schema_missing_field_rejected(spark):
+def test_schema_missing_field_rejected(spark, tmp_path):
+    # both builders resolve fields through schema.resolve_fields
+    from miru_spark.index_store import build_persistent
     from miru_spark.operators.build import build_index
 
     df = spark.createDataFrame([("x",)], "text string")
     with pytest.raises(ValueError, match="missing from"):
         build_index(df, dense_id_col="text", capacity=8, schema=S.DOCUMENTS_SCHEMA)
+    with pytest.raises(ValueError, match="missing from"):
+        build_persistent(
+            df, str(tmp_path / "idx"), dense_id_col="text", capacity=8,
+            schema=S.DOCUMENTS_SCHEMA,
+        )
+    assert not (tmp_path / "idx").exists()  # rejected before any write
 
 
 def test_numeric_prefix_fields_drive_range_scannable_aux(spark, documents):

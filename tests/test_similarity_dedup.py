@@ -114,14 +114,12 @@ def test_simhash_pairs_cover_exact_dups(spark):
 
 
 def test_lsh_fused_verify_path_matches_join_path(spark, emb):
-    # the grouped-kernel (broadcast-matrix) verify path and the join path
-    # must be bit-equal; force each side of the crossover explicitly
+    # the partition-kernel (broadcast-matrix) verify path and the join path
+    # must be bit-equal; a zero broadcast budget forces the join path
     kw = dict(threshold=0.45, n_planes=4, n_tables=24)
-    fused = similarity.lsh_cosine_pairs(
-        emb, "vec_id", "embedding", fused_verify_min_pairs=0, **kw
-    ).toPandas()
+    fused = similarity.lsh_cosine_pairs(emb, "vec_id", "embedding", **kw).toPandas()
     joined = similarity.lsh_cosine_pairs(
-        emb, "vec_id", "embedding", fused_verify_min_pairs=1 << 60, **kw
+        emb, "vec_id", "embedding", broadcast_verify_bytes=0, **kw
     ).toPandas()
     key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
     assert key(fused) == key(joined)
