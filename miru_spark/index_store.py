@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from miru_spark.checkpoint import Manifest
 from miru_spark.operators import build as B
 from miru_spark.schema import resolve_fields
+from miru_spark.session import local_frame
 
 # Bumped whenever the on-disk layout changes (e.g. the first_id packed column,
 # per-wave forward flags; v3: removed/ stores (part, doc_id, doc_key) instances
@@ -330,7 +331,7 @@ def remove_docs(spark: SparkSession, index_dir: str, doc_keys: list[int]) -> int
     mdata = _read_manifest(index_dir)
     if not mdata["stages"].get("ready"):
         raise ValueError(f"index at {index_dir} is not ready — build it first")
-    keys = spark.createDataFrame([(int(k),) for k in doc_keys], "doc_key long")
+    keys = local_frame(spark, [(int(k),) for k in doc_keys], "doc_key long")
     # tombstones are INSTANCES (part, doc_id, doc_key), resolved against the
     # committed doc-length relation: after a version repair the same doc_key
     # has a live replacement instance, and removing the key then tombstones
@@ -471,7 +472,8 @@ def upsert_docs(
     # tombstones for the old instances, staged as an unlisted batch
     rm_batch = f"batch_r{wave_id}"
     if old_inst:
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(r["part"], r["doc_id"], r["doc_key"]) for r in old_inst],
             "part int, doc_id int, doc_key long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/removed/{rm_batch}")
@@ -489,8 +491,8 @@ def upsert_docs(
     )
     if old_inst:
         old_parts = sorted({r["part"] for r in old_inst})
-        old_df = spark.createDataFrame(
-            [(r["part"], r["doc_id"]) for r in old_inst], "part int, doc_id int"
+        old_df = local_frame(
+            spark, [(r["part"], r["doc_id"]) for r in old_inst], "part int, doc_id int"
         )
         rm_flat = (
             _read_committed(spark, index_dir, "forward", committed)

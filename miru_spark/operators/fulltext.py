@@ -20,8 +20,10 @@ are rounded to 6 decimals and the rounded value is the sort key.
 
 Plan shape at scale: the only big-table touch is the postings scan with the
 query terms pushed down (`term IN (...)` reaches the parquet reader); the
-query-term table and per-term stats are broadcast; the winners→docs gather
-join happens after LIMIT (lazy materialization, FullText.java:204-217).
+query-term table, per-term stats folded in, is a driver-built Arrow
+``LocalRelation`` (``session.local_frame``) on the build side of a broadcast
+join, so shipping it runs no Python worker; the winners→docs gather join
+happens after LIMIT (lazy materialization, FullText.java:204-217).
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ from miru_spark.filters import (
     parse_query,
 )
 from miru_spark.operators.build import IndexHandle
+from miru_spark.session import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -224,10 +227,12 @@ def _query_relation(index: IndexHandle, expanded: list[tuple[str, int, int]]):
     join: the ≤max_expansion per-term stats rows come from the per-handle
     term_stats memo (one term-pruned stats job on cold terms, none warm) and
     fold into the query-term table, so the hot path pays a single broadcast
-    join instead of two. Unknown terms drop out here — they have no
-    postings, so the result is identical (an unknown AND-clause still
-    yields the empty set because its clause id can never reach the matched
-    count).
+    join instead of two. The table is built on the driver as an Arrow
+    ``LocalRelation`` (``local_frame``): the broadcast's build side is a
+    JVM ``LocalTableScan``, with no Python-worker task per query. Unknown
+    terms drop out here — they have no postings, so the result is identical
+    (an unknown AND-clause still yields the empty set because its clause id
+    can never reach the matched count).
 
     Returns (q_relation, known_terms)."""
     spark = index.stats.sparkSession
@@ -238,8 +243,8 @@ def _query_relation(index: IndexHandle, expanded: list[tuple[str, int, int]]):
         for t, qtf, cid in expanded
         if t in srows
     ]
-    q = spark.createDataFrame(
-        rows, "term string, qtf int, clause int, df long, cum_tf long"
+    q = local_frame(
+        spark, rows, "term string, qtf int, clause int, df long, cum_tf long"
     )
     return q, sorted({t for t, _, _, _, _ in rows})
 
@@ -268,13 +273,13 @@ def score_candidates(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     spark = index.stats.sparkSession  # docs may be absent on a loaded index
     expanded = expand_clauses(index, spec)
     if not expanded:
-        return spark.createDataFrame(
-            [], "part int, doc_id int, doc_key long, score double, matched long"
+        return local_frame(
+            spark, [], "part int, doc_id int, doc_key long, score double, matched long"
         )
     q, terms = _query_relation(index, expanded)
     if not terms:
-        return spark.createDataFrame(
-            [], "part int, doc_id int, doc_key long, score double, matched long"
+        return local_frame(
+            spark, [], "part int, doc_id int, doc_key long, score double, matched long"
         )
 
     # the posting rows are SELF-CONTAINED for scoring (tf + dl + doc_key
@@ -329,7 +334,7 @@ def leaf_doc_set(index: IndexHandle, leaf: Leaf, max_expansion: int = 100) -> Da
             # unindexed field ⇒ empty set (the reference refuses unknown
             # schema fields; empty is the conservative batch analog)
             spark = index.stats.sparkSession
-            return spark.createDataFrame([], "part int, doc_id int")
+            return local_frame(spark, [], "part int, doc_id int")
         if leaf.num_range is not None:
             # numeric range = lexicographic term-RANGE scan of the composed
             # aux terms (MiruTermComposer numeric prefix + rawRangeTerm,
@@ -561,7 +566,7 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
 
     spark = index.stats.sparkSession
     if spec.authz is not None and not spec.authz:
-        return spark.createDataFrame([], "doc long, score double")
+        return local_frame(spark, [], "doc long, score double")
     tree_leaves: list[Leaf] = []
     _collect_eval_leaves(spec.tree, tree_leaves)
     n_tree = len(tree_leaves)
@@ -627,7 +632,7 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
             )
         )
     if not srcs:
-        return spark.createDataFrame([], "doc long, score double")
+        return local_frame(spark, [], "doc long, score double")
     scan = srcs[0]
     for s in srcs[1:]:
         scan = scan.unionByName(s)

@@ -150,10 +150,11 @@ def _ordered_fold_cosine(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
     return dot / (np.sqrt(na) * np.sqrt(nb))
 
 
-def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
+def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str, dim: int):
     """Collect (id, vec) once, id-sorted, and broadcast it to executors as
     (ids int64[n], mat float64[n, dim] C-contiguous, matn = mat/‖row‖,
-    sq_norm float64[n]).
+    sq_norm float64[n]) — 2·n·dim·8 bytes of matrices. Raises ValueError
+    on a null vector or one whose length is not ``dim``.
 
     Same footprint class as a Spark broadcast-hash build side (which also
     collects to the driver first) — callers gate it on a row bound exactly
@@ -175,7 +176,15 @@ def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
     n = len(ids)
     if n == 0:
         raise ValueError("cannot broadcast an empty embedding matrix")
-    mat = np.asarray(v.flatten(), dtype=np.float64).reshape(n, -1)
+    if v.null_count:
+        raise ValueError(f"'{vec_col}' holds a null vector")
+    lens = v.value_lengths().to_numpy()
+    if (lens != dim).any():
+        bad = int(lens[lens != dim][0])
+        raise ValueError(
+            f"'{vec_col}' holds a vector of length {bad}, expected dim {dim}"
+        )
+    mat = np.asarray(v.flatten(), dtype=np.float64).reshape(n, dim)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     mat = np.ascontiguousarray(mat[order])
@@ -237,7 +246,7 @@ def cosine_pairs(
         )
     if dim is not None and dim != d:
         raise ValueError(f"dim={dim} does not match data dim {d}")
-    bc = _broadcast_matrix(emb, id_col, vec_col)
+    bc = _broadcast_matrix(emb, id_col, vec_col, d)
     # conservative raw-cosine pre-filter: round(c, 6) >= t ⟹ c >= t - 5e-7
     pre = threshold - 1e-6
     # the BLAS gram pre-filter below computes the same true sum with a
@@ -614,7 +623,8 @@ def lsh_cosine_pairs(
     — which is how the gate oracles it (any residual miss probability is
     (1 - (1 - (θ/π))^n_planes)^n_tables per pair, deterministic per seed).
 
-    Verify attachment: when the embedding matrix fits under
+    Verify attachment: when the broadcast payload — the row-major and the
+    row-normalized float64 matrices, 2·n·dim·8 bytes — fits under
     ``broadcast_verify_bytes`` (the broadcast-join decision rule — small
     side fits ⇒ broadcast), the n·T bucket rows are repartitioned by
     (table, bucket) into ``verify_width`` partitions — derived from the
@@ -675,7 +685,7 @@ def lsh_cosine_pairs(
     )
     if (
         n_rows >= 2  # <2 rows: no pairs possible, and nothing to broadcast
-        and n_rows * dim * 8 <= broadcast_verify_bytes
+        and 2 * n_rows * dim * 8 <= broadcast_verify_bytes  # mat + matn
     ):
         # small-side-fits: ONE kernel per shuffle partition enumerates and
         # verifies every (table, bucket) group hashed to it against the
@@ -689,7 +699,7 @@ def lsh_cosine_pairs(
         # from one BLAS gram (m×m) at a strictly-wider cut; survivors are
         # re-scored with the exact ordered j-fold, so emitted rows are
         # bit-identical to the join path (same fold, same round).
-        bc = _broadcast_matrix(emb, id_col, vec_col)
+        bc = _broadcast_matrix(emb, id_col, vec_col, dim)
         # expected candidate volume if buckets were uniform — n²T/2^(P+1);
         # data/parameter properties only, so the width is session-independent
         est_pairs = n_rows * n_rows * n_tables // (2 ** (n_planes + 1))

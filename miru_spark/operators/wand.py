@@ -47,6 +47,7 @@ from miru_spark.operators.fulltext import (
     parts_for_time_range,
     term_stats as _ft_stats,
 )
+from miru_spark.session import local_frame
 
 # kernel='auto' switches TAAT → WAND above this many decoded postings per
 # partition (see the measured rationale at the auto branch in wand_topk)
@@ -399,7 +400,7 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
     spark = index.packed.sparkSession
     expanded = expand_clauses(index, spec)
     if not expanded:
-        return spark.createDataFrame([], "doc long, score double")
+        return local_frame(spark, [], "doc long, score double")
     qinfo = {t: (q, c) for t, q, c in expanded}
     terms = sorted(qinfo)
     neg_terms = expand_negatives(index, spec)
@@ -415,7 +416,7 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
         # gets this via its matched == len(positive) filter; return the same
         # empty result instead of silently dropping the clause from
         # `required` and scoring the remaining terms.
-        return spark.createDataFrame([], "doc long, score double")
+        return local_frame(spark, [], "doc long, score double")
     op, sc = spec.op, spec.scorer
     kern = kernel
     kk = spec.k
@@ -424,7 +425,7 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
     # doc_key range can't intersect — they are neither scanned nor decoded
     pparts = parts_for_time_range(index, time_range)
     if pparts is not None and not pparts:
-        return spark.createDataFrame([], "doc long, score double")
+        return local_frame(spark, [], "doc long, score double")
 
     def run_part(
         post_pdf: pd.DataFrame, removed_pdf: pd.DataFrame, theta0: float = -np.inf

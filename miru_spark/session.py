@@ -5,6 +5,9 @@ Local-mode settings mirror what a real cluster submit would set per-executor;
 cores (real deployment). AQE stays on so skewed merges re-plan at runtime —
 the (part, term)-hashed pack exchange with per-list ``capacity`` bound
 (operators/build.py) handles the first-order skew, AQE catches the residual.
+
+The query and repair paths turn driver-side rows into a relation through
+``local_frame``: an Arrow ``LocalRelation``, which runs no Python worker.
 """
 
 from __future__ import annotations
@@ -13,7 +16,10 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def package_zip() -> str:
@@ -96,3 +102,23 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addPyFile(package_zip())
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame of the driver-side tuples ``rows``, typed by the DDL
+    ``schema`` (every field nullable, as ``createDataFrame(rows, schema)``
+    types them), zero rows included.
+
+    The rows travel as one Arrow table, which Spark plans as a JVM
+    ``LocalTableScan`` below ``spark.sql.execution.arrowLocalRelationThreshold``
+    (48 MB by default): using the relation runs no Python worker.
+    ``createDataFrame`` on a Python list instead parallelizes through a
+    PythonRDD, one Python task per default-parallelism slice, even for an
+    empty list."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

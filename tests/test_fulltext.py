@@ -222,6 +222,52 @@ class _PoisonStats:
         raise AssertionError(f"stats relation touched ({name}) on warm terms")
 
 
+def test_query_relations_are_local(spark, doc_index, documents, tmp_path_factory):
+    """Driver-built relations on the query path — the query-term table and
+    the empty results — plan as JVM LocalTableScans, never as an
+    ExistingRDD (a createDataFrame over a Python list, which parallelizes
+    through Python-worker tasks on every query). Checked on the in-memory
+    and on a loaded index, for every scoring route of top_k."""
+    from miru_spark.index_store import build_persistent, load_index
+    from miru_spark.operators import wand
+
+    idx_dir = str(tmp_path_factory.mktemp("local_rel") / "idx")
+    build_persistent(
+        documents, idx_dir, text_col="text", dense_id_col="doc_id",
+        capacity=128, wave_size=16,
+    )
+    loaded = load_index(spark, idx_dir)
+    scored = [
+        ("spark AND join", "bm25"),
+        ("spark OR vector", "bm25"),
+        ("spark NOT window", "bm25"),
+        ("cust*", "bm25"),
+        ("(spark OR vector) AND (join OR merge)", "bm25"),  # single-scan tree
+        ("vector OR NOT spark", "bm25"),  # bare NOT: the top_k_tree fallback
+        ("spark AND join", "time"),
+    ]
+
+    def executed(df):
+        rows = df.collect()
+        return rows, df._jdf.queryExecution().executedPlan().toString()
+
+    for index in (doc_index, loaded):
+        for q, scorer in scored:
+            rows, plan = executed(fulltext.top_k(index, q, k=10, scorer=scorer))
+            assert rows, (q, scorer)
+            assert "ExistingRDD" not in plan, (q, scorer, plan)
+            assert "LocalTableScan" in plan, (q, scorer, plan)
+        # an unknown term, and a prefix expanding to no term (wand's
+        # empty-expansion early return)
+        for df in (
+            fulltext.top_k(index, "zzzqqq", k=10),
+            wand.wand_topk(index, "zzzq*", k=10),
+        ):
+            rows, plan = executed(df)
+            assert not rows
+            assert "ExistingRDD" not in plan, plan
+
+
 def test_term_stats_memo_skips_stats_scan(doc_index):
     """Warm (term, prefix) lookups must not re-scan the stats relation: a
     handle is an immutable snapshot of one index generation, so the memo

@@ -126,6 +126,49 @@ def test_lsh_fused_verify_path_matches_join_path(spark, emb):
     assert len(fused) > 0
 
 
+def test_lsh_fused_verify_budgets_both_broadcast_matrices(spark, emb, monkeypatch):
+    # the fused path broadcasts the row-major AND the row-normalized matrix
+    # (2·n·dim·8 bytes): a budget that fits only one of them must take the
+    # join path, with the fused path's answer
+    n = emb.count()
+    dim = emb.select(F.size("embedding")).first()[0]
+    kw = dict(threshold=0.45, n_planes=4, n_tables=24)
+    fused = similarity.lsh_cosine_pairs(emb, "vec_id", "embedding", **kw).toPandas()
+    calls = []
+    real = similarity._broadcast_matrix
+
+    def recording(*a):
+        calls.append(a)
+        return real(*a)
+
+    monkeypatch.setattr(similarity, "_broadcast_matrix", recording)
+    joined = similarity.lsh_cosine_pairs(
+        emb, "vec_id", "embedding", broadcast_verify_bytes=n * dim * 12, **kw
+    ).toPandas()
+    assert not calls, "budget below 2·n·dim·8 still broadcast the matrices"
+    key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
+    assert key(joined) == key(fused)
+    assert len(fused) > 0
+
+
+def test_pair_operators_reject_ragged_and_null_vectors(spark):
+    # 2+3+1+2 = 8 floats over 4 rows: divisible by n, so reshape(n, -1)
+    # would silently build a wrong 4×2 matrix
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [1.0]), (4, [0.5, 0.5])],
+        "vec_id long, embedding array<double>",
+    )
+    nulls = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for df, msg in ((ragged, "length"), (nulls, "null vector")):
+        with pytest.raises(ValueError, match=msg):
+            similarity.cosine_pairs(df, "vec_id", "embedding", threshold=0.5)
+        with pytest.raises(ValueError, match=msg):
+            similarity.lsh_cosine_pairs(df, "vec_id", "embedding", threshold=0.5, dim=2)
+
+
 def test_cosine_pairs_refuses_corpus_scale(spark, emb):
     # the all-pairs broadcast is the declared ORACLE path — the scale
     # contract is enforced, not just documented
