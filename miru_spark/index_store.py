@@ -213,109 +213,112 @@ def build_persistent(
     docs = B.prepare_docs(
         docs_source, text_col, dense_id_col, natural_key, capacity, n_parts
     ).cache()
-    # content digest in the fingerprint: an order-insensitive sum of per-row
-    # sha CRCs, so a same-row-count build over CHANGED content restarts from
-    # scratch instead of silently skipping completed waves and serving a
-    # stale index. One extra agg over the already-cached docs.
-    frow = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32(F.col("content_sha"))).alias("sha_sum"),
-    ).collect()[0]
-    n_docs = int(frow["n"])
-    fingerprint = {
-        "format_version": FORMAT_VERSION,
-        "n_docs": n_docs,
-        "content_digest": int(frow["sha_sum"] or 0),
-        "capacity": capacity,
-        "text_col": text_col,
-        "id": dense_id_col or ",".join(natural_key or []),
-        "aux": ",".join(aux_fields or []),
-        "num_aux": ",".join(numeric_aux_fields or []),
-        "stopwords": ",".join(sorted(stopwords or [])),
-        "stemmer": stemmer or "",
-    }
-    manifest = Manifest.load_or_create(index_dir, fingerprint)
-    if not manifest.data["waves"]:
-        # fresh manifest (new build OR fingerprint-mismatch restart): delete
-        # any stale wave/stage directories from a previous fingerprint so
-        # wave=* globs can never mix old and new data
-        for sub in (
-            "segments", "doclens", "forward", "postings", "stats", "aux",
-            "removed", "aux_delta", "stats_delta",
-        ):
-            p = f"{index_dir}/{sub}"
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-        for p in _glob.glob(f"{index_dir}/postings_g*") + _glob.glob(
-            f"{index_dir}/stats_g*"
-        ) + _glob.glob(f"{index_dir}/aux_g*"):
-            shutil.rmtree(p, ignore_errors=True)
-
-    parts = sorted(r["part"] for r in docs.select("part").distinct().collect())
-    n_waves = math.ceil(len(parts) / wave_size)
-    waves_run = waves_skipped = 0
-
-    for wave_id in range(n_waves):
-        if manifest.wave_done(wave_id):
-            waves_skipped += 1
-            continue
-        wave_parts = parts[wave_id * wave_size : (wave_id + 1) * wave_size]
-        wave_docs = docs.filter(F.col("part").isin(wave_parts))
-        counters = _write_wave(
-            index_dir, wave_id, wave_docs, spread, text_col, stopwords, stemmer
-        )
-        manifest.commit_wave(wave_id, wave_parts, counters)
-        waves_run += 1
-        if fail_after_wave is not None and wave_id >= fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {wave_id}")
-
-    # merge stage: global term-range layout + stats (idempotent overwrite)
-    if not manifest.stage_done("ready") or waves_run:
-        all_segments = spark.read.parquet(f"{index_dir}/segments/wave=*")
-        n_merge = merge_partitions or max(4, spark.sparkContext.defaultParallelism)
-        (
-            all_segments.repartitionByRange(n_merge, "term", "part")
-            .sortWithinPartitions("term", "part")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/postings")
-        )
-        stats = B.term_stats(
-            all_segments.select("term", "df_part", "cum_tf_part")
-        )
-        stats.coalesce(4).write.mode("overwrite").parquet(f"{index_dir}/stats")
-        if aux_fields or numeric_aux_fields:
-            # single-term field postings, term-sorted for scan pruning
-            (
-                B.aux_postings(docs, aux_fields or [], numeric_aux_fields)
-                .repartitionByRange(max(2, n_merge // 4), "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(f"{index_dir}/aux")
-            )
-        all_lens = spark.read.parquet(f"{index_dir}/doclens/wave=*")
-        row = all_lens.agg(
+    try:
+        # content digest in the fingerprint: an order-insensitive sum of per-row
+        # sha CRCs, so a same-row-count build over CHANGED content restarts from
+        # scratch instead of silently skipping completed waves and serving a
+        # stale index. One extra agg over the already-cached docs.
+        frow = docs.agg(
             F.count(F.lit(1)).alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("sum_dl"),
+            F.sum(F.crc32(F.col("content_sha"))).alias("sha_sum"),
         ).collect()[0]
-        manifest.commit_stage("segments")
-        manifest.commit_stage("stats")
-        manifest.commit_stage(
-            "ready",
-            n_docs=int(row["n"]),
-            avgdl=float(row["avgdl"]),
-            # exact integer Σdl: repair updates n_docs/avgdl INCREMENTALLY
-            # (O(delta)); dl sums are < 2^53 so the double avg is exact
-            sum_dl=int(row["sum_dl"] or 0),
+        n_docs = int(frow["n"])
+        fingerprint = {
+            "format_version": FORMAT_VERSION,
+            "n_docs": n_docs,
+            "content_digest": int(frow["sha_sum"] or 0),
+            "capacity": capacity,
+            "text_col": text_col,
+            "id": dense_id_col or ",".join(natural_key or []),
+            "aux": ",".join(aux_fields or []),
+            "num_aux": ",".join(numeric_aux_fields or []),
+            "stopwords": ",".join(sorted(stopwords or [])),
+            "stemmer": stemmer or "",
+        }
+        manifest = Manifest.load_or_create(index_dir, fingerprint)
+        if not manifest.data["waves"]:
+            # fresh manifest (new build OR fingerprint-mismatch restart): delete
+            # any stale wave/stage directories from a previous fingerprint so
+            # wave=* globs can never mix old and new data
+            for sub in (
+                "segments", "doclens", "forward", "postings", "stats", "aux",
+                "removed", "aux_delta", "stats_delta",
+            ):
+                p = f"{index_dir}/{sub}"
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+            for p in _glob.glob(f"{index_dir}/postings_g*") + _glob.glob(
+                f"{index_dir}/stats_g*"
+            ) + _glob.glob(f"{index_dir}/aux_g*"):
+                shutil.rmtree(p, ignore_errors=True)
+
+        parts = sorted(r["part"] for r in docs.select("part").distinct().collect())
+        n_waves = math.ceil(len(parts) / wave_size)
+        waves_run = waves_skipped = 0
+
+        for wave_id in range(n_waves):
+            if manifest.wave_done(wave_id):
+                waves_skipped += 1
+                continue
+            wave_parts = parts[wave_id * wave_size : (wave_id + 1) * wave_size]
+            wave_docs = docs.filter(F.col("part").isin(wave_parts))
+            counters = _write_wave(
+                index_dir, wave_id, wave_docs, spread, text_col, stopwords, stemmer
+            )
+            manifest.commit_wave(wave_id, wave_parts, counters)
+            waves_run += 1
+            if fail_after_wave is not None and wave_id >= fail_after_wave:
+                raise RuntimeError(f"injected failure after wave {wave_id}")
+
+        # merge stage: global term-range layout + stats (idempotent overwrite)
+        if not manifest.stage_done("ready") or waves_run:
+            all_segments = spark.read.parquet(f"{index_dir}/segments/wave=*")
+            n_merge = merge_partitions or max(4, spark.sparkContext.defaultParallelism)
+            (
+                all_segments.repartitionByRange(n_merge, "term", "part")
+                .sortWithinPartitions("term", "part")
+                .write.mode("overwrite")
+                .parquet(f"{index_dir}/postings")
+            )
+            stats = B.term_stats(
+                all_segments.select("term", "df_part", "cum_tf_part")
+            )
+            stats.coalesce(4).write.mode("overwrite").parquet(f"{index_dir}/stats")
+            if aux_fields or numeric_aux_fields:
+                # single-term field postings, term-sorted for scan pruning
+                (
+                    B.aux_postings(docs, aux_fields or [], numeric_aux_fields)
+                    .repartitionByRange(max(2, n_merge // 4), "term")
+                    .sortWithinPartitions("term")
+                    .write.mode("overwrite")
+                    .parquet(f"{index_dir}/aux")
+                )
+            all_lens = spark.read.parquet(f"{index_dir}/doclens/wave=*")
+            row = all_lens.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.avg("dl").alias("avgdl"),
+                F.sum("dl").alias("sum_dl"),
+            ).collect()[0]
+            manifest.commit_stage("segments")
+            manifest.commit_stage("stats")
+            manifest.commit_stage(
+                "ready",
+                n_docs=int(row["n"]),
+                avgdl=float(row["avgdl"]),
+                # exact integer Σdl: repair updates n_docs/avgdl INCREMENTALLY
+                # (O(delta)); dl sums are < 2^53 so the double avg is exact
+                sum_dl=int(row["sum_dl"] or 0),
+                n_parts=len(parts),
+            )
+        return BuildReport(
             n_parts=len(parts),
+            n_waves=n_waves,
+            waves_run=waves_run,
+            waves_skipped=waves_skipped,
+            n_docs=n_docs,
         )
-    return BuildReport(
-        n_parts=len(parts),
-        n_waves=n_waves,
-        waves_run=waves_run,
-        waves_skipped=waves_skipped,
-        n_docs=n_docs,
-    )
+    finally:
+        docs.unpersist()
 
 
 def remove_docs(spark: SparkSession, index_dir: str, doc_keys: list[int]) -> int:

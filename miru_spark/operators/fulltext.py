@@ -28,8 +28,6 @@ happens after LIMIT (lazy materialization, FullText.java:204-217).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -106,17 +104,19 @@ def postings_for_terms(
 
 
 # decode-stage sizing: each unpack task is a Python/Arrow worker round trip
-# (~10 ms fixed each), so a term-pruned decode over the pack's full width
-# pays ~width× that for mostly-empty partitions. The per-handle stats memo
+# with a fixed cost (measured ~72 ms of wall per task slot for a no-op
+# mapInArrow task at local[4] on a 4-core host, ~290 ms while workers
+# imported pyspark from pyspark.zip), against ~35-40 cpu-ms to decode a
+# full 262144-posting task. So a task of this size is still mostly fixed
+# cost, and a term-pruned decode over the pack's full width pays ~width×
+# that for mostly-empty partitions. The per-handle stats memo
 # knows the EXACT total df for the query's terms before the plan is built,
 # so the decode width derives from data volume — small queries coalesce to
 # a couple of tasks (no shuffle; coalesce merges cached-scan partitions),
 # huge terms keep the full width. df is a property of the DATA, not the
 # session, so N-core and 4N-core runs still build identical plans (the
 # scaling-bench invariant).
-_DECODE_POSTINGS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_DECODE_POSTINGS_PER_TASK", "262144")
-)
+_DECODE_POSTINGS_PER_TASK = 262144
 
 
 def _decode_width(index: IndexHandle, terms: list[str]) -> int | None:

@@ -104,7 +104,7 @@ def cosine_scores(emb: DataFrame, id_col: str, vec_col: str, query_vec: list[flo
                     x = vecs[:, j]
                     dot += x * q[j]
                     nv += x * x
-                cos = np.round(dot / (np.sqrt(nv) * qn), 6)
+                cos = dot / (np.sqrt(nv) * qn)
                 if valid is None:
                     cos_out = cos
                 else:
@@ -116,8 +116,14 @@ def cosine_scores(emb: DataFrame, id_col: str, vec_col: str, query_vec: list[flo
             )
             yield pa.RecordBatch.from_arrays([ids, cos_arr], names=["vec", "cosine"])
 
-    return emb.select(F.col(id_col).alias("vec"), F.col(vec_col)).mapInArrow(
-        score, f"vec {emb.schema[id_col].dataType.simpleString()}, cosine double"
+    # round JVM-side: F.round is HALF_UP on the decimal value, as the
+    # oracle's round is; np.round rounds a 7th-decimal tie half-even
+    return (
+        emb.select(F.col(id_col).alias("vec"), F.col(vec_col))
+        .mapInArrow(
+            score, f"vec {emb.schema[id_col].dataType.simpleString()}, cosine double"
+        )
+        .withColumn("cosine", F.round("cosine", 6))
     )
 
 
@@ -433,13 +439,15 @@ def ivf_cosine_topk(
                 x = kept[:, j]
                 dot += x * q[j]
                 nv += x * x
-            cos = np.round(dot / (np.sqrt(nv) * qn), 6)
+            cos = dot / (np.sqrt(nv) * qn)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids[keep]), pa.array(cos)], names=["vec", "cosine"]
             )
 
-    scanned = emb.select(F.col(id_col).cast("long"), F.col(vec_col)).mapInArrow(
-        scan, "vec long, cosine double"
+    scanned = (
+        emb.select(F.col(id_col).cast("long"), F.col(vec_col))
+        .mapInArrow(scan, "vec long, cosine double")
+        .withColumn("cosine", F.round("cosine", 6))  # as cosine_scores rounds
     )
     return scanned.orderBy(F.desc("cosine"), F.desc("vec")).limit(k)
 
@@ -581,7 +589,7 @@ def ivf_search(
                 x = vecs[:, j]
                 dot += x * q[j]
                 nv += x * x
-            cos = np.round(dot / (np.sqrt(nv) * qn), 6)
+            cos = dot / (np.sqrt(nv) * qn)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(cos)], names=["vec", "cosine"]
             )
@@ -592,9 +600,12 @@ def ivf_search(
         .filter(F.col("centroid").isin([int(c) for c in probe]))
         .select("vec", "embedding")
     )
-    return src.mapInArrow(score, "vec long, cosine double").orderBy(
-        F.desc("cosine"), F.desc("vec")
-    ).limit(k)
+    return (
+        src.mapInArrow(score, "vec long, cosine double")
+        .withColumn("cosine", F.round("cosine", 6))  # as cosine_scores rounds
+        .orderBy(F.desc("cosine"), F.desc("vec"))
+        .limit(k)
+    )
 
 
 def lsh_cosine_pairs(

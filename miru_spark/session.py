@@ -8,6 +8,10 @@ the (part, term)-hashed pack exchange with per-list ``capacity`` bound
 
 The query and repair paths turn driver-side rows into a relation through
 ``local_frame``: an Arrow ``LocalRelation``, which runs no Python worker.
+
+In local mode, Python workers import the installed pyspark rather than
+Spark's ``pyspark.zip``, because every task's ``importlib.invalidate_caches()``
+re-reads the directory of each zip on the worker's path.
 """
 
 from __future__ import annotations
@@ -20,6 +24,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "daemon")
 
 
 def package_zip() -> str:
@@ -96,6 +102,13 @@ def get_spark(
         )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    if master.startswith("local"):
+        # workers import the installed pyspark instead of Spark's
+        # pyspark.zip: see daemon/miru_local_daemon.py. A cluster keeps
+        # Spark's default, as its workers may have no installed pyspark.
+        builder = builder.config(
+            "spark.python.daemon.module", "miru_local_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", DAEMON_DIR)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

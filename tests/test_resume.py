@@ -290,3 +290,18 @@ def test_wand_survives_terms_tombstoned_out_of_stats(spark, documents, tmp_path_
     # the dead term alone: empty on both paths
     assert wand_ops.wand_topk(idx, "zzzunique", k=10).count() == 0
     assert fulltext.top_k(idx, "zzzunique", k=10).count() == 0
+
+
+def test_build_persistent_releases_its_docs_cache(spark, documents, tmp_path):
+    # the prepared docs are cached for the build only: neither a finished
+    # build nor one that fails after a wave commit leaves them persisted
+    def n_persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    kw = dict(text_col="text", dense_id_col="doc_id", capacity=128, wave_size=2)
+    before = n_persistent()
+    build_persistent(documents, str(tmp_path / "ok"), **kw)
+    assert n_persistent() == before
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_persistent(documents, str(tmp_path / "failed"), fail_after_wave=0, **kw)
+    assert n_persistent() == before

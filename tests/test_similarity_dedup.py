@@ -72,6 +72,20 @@ def test_cosine_scores_null_and_mismatched_dim_rows(spark):
     assert got[2] is None and got[3] is None and got[5] is None
 
 
+def test_cosine_scores_rounds_a_seventh_decimal_tie_half_up(spark):
+    # found by search over (k/128, sqrt(1-(k/128)^2)) against (1, 0): the
+    # fold yields exactly 0.6015625, a 7th-decimal tie. The DuckDB oracle's
+    # round and Spark's F.round give 0.601563; np.round (scale, then
+    # half-even) gives 0.601562.
+    df = spark.createDataFrame(
+        [(1, [0.6015625, 0.7988257373130575])], "vec_id long, embedding array<double>"
+    )
+    got = similarity.cosine_scores(df, "vec_id", "embedding", [1.0, 0.0]).collect()
+    assert got[0]["cosine"] == 0.601563
+    top = similarity.cosine_topk(df, "vec_id", "embedding", [1.0, 0.0], k=1).collect()
+    assert top[0]["cosine"] == 0.601563
+
+
 def test_minhash_signatures_doc_grouped_guard_raises_on_split_runs(spark):
     # doc_grouped promises one contiguous run per doc; a split run must
     # fail loudly, not emit two partial signatures
