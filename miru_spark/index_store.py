@@ -695,11 +695,15 @@ def compact(
 
 
 def _read_removed(spark: SparkSession, index_dir: str, batches: list[str]) -> DataFrame:
+    """(part, doc_id) of every tombstoned instance. A plain union, not a
+    distinct: every reader is an anti-join or the packed kernel's id set,
+    where a repeat changes nothing, and a distinct would put an exchange
+    into every query plan of a repaired index."""
     out = None
     for b in batches:
         df = spark.read.parquet(f"{index_dir}/removed/{b}").select("part", "doc_id")
         out = df if out is None else out.unionByName(df)
-    return out.distinct()
+    return out
 
 
 def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = None) -> B.IndexHandle:

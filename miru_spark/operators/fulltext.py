@@ -16,14 +16,23 @@ Determinism: per-doc scores are summed in ascending term order via
 ``aggregate(array_sort(collect_list(struct(term, contrib))))`` so float
 results are bit-stable across partition counts and match the DuckDB oracle's
 ``list_aggregate(list(c ORDER BY term), 'sum')`` op-for-op. Emitted scores
-are rounded to 6 decimals and the rounded value is the sort key.
+are rounded to 6 decimals (``F.round``, HALF_UP) and the rounded value is
+the sort key.
 
 Plan shape at scale: the only big-table touch is the postings scan with the
-query terms pushed down (`term IN (...)` reaches the parquet reader); the
-query-term table, per-term stats folded in, is a driver-built Arrow
-``LocalRelation`` (``session.local_frame``) on the build side of a broadcast
-join, so shipping it runs no Python worker; the winners→docs gather join
-happens after LIMIT (lazy materialization, FullText.java:204-217).
+query terms pushed down (`term IN (...)` reaches the parquet reader). A
+LOADED index's flat BM25 / tf-idf query without constraint or authz masks
+then runs one Arrow kernel per part (``wand.packed_topk``, shared with
+``wand_topk``): the scan — plus the removal index's rows — reaches the
+kernel in one task while Σdf fits ``_DECODE_POSTINGS_PER_TASK``, else hashed
+by part; the kernel decodes, masks, sums each doc's contributions in the
+same ascending order and cuts each part to its top-k, and the JVM rounds
+and takes the ordered LIMIT — no join, no aggregate. Every other query —
+in-memory indexes, trees, masks, TIME — folds relationally: the query-term
+table, per-term stats folded in, is a driver-built Arrow ``LocalRelation``
+(``session.local_frame``) on the build side of a broadcast join, so shipping
+it runs no Python worker. The winners→docs gather join happens after LIMIT
+(lazy materialization, FullText.java:204-217).
 """
 
 from __future__ import annotations
@@ -103,18 +112,20 @@ def postings_for_terms(
     return _part_pruned(index.flat.filter(F.col("term").isin(terms)), parts)
 
 
-# decode-stage sizing: each unpack task is a Python/Arrow worker round trip
+# decode-stage sizing: each decode task is a Python/Arrow worker round trip
 # with a fixed cost (measured ~72 ms of wall per task slot for a no-op
-# mapInArrow task at local[4] on a 4-core host, ~290 ms while workers
-# imported pyspark from pyspark.zip), against ~35-40 cpu-ms to decode a
-# full 262144-posting task. So a task of this size is still mostly fixed
-# cost, and a term-pruned decode over the pack's full width pays ~width×
-# that for mostly-empty partitions. The per-handle stats memo
-# knows the EXACT total df for the query's terms before the plan is built,
-# so the decode width derives from data volume — small queries coalesce to
-# a couple of tasks (no shuffle; coalesce merges cached-scan partitions),
-# huge terms keep the full width. df is a property of the DATA, not the
-# session, so N-core and 4N-core runs still build identical plans (the
+# mapInArrow task at local[4] on a 4-core host), against 25-45 cpu-ms to
+# decode a full 262144-posting task and ~10 more for the packed kernel to
+# score and cut it (wand._part_terms/_score_part/_part_cut on synthetic
+# lists, 4 terms × 2 parts, the same 4-core host). So a task of this size
+# is still mostly fixed cost: a term-pruned decode over the pack's full
+# width pays ~width× that for mostly-empty partitions, while one more task
+# per budget's worth of postings keeps a hot query's kernel time per task
+# near the fixed cost. The per-handle stats memo knows the EXACT total df
+# for the query's terms before the plan is built, so the width derives from
+# data volume — small queries run in ONE task (a coalesce: no exchange),
+# huge ones spread by part. df is a property of the DATA, not the session,
+# so N-core and 4N-core runs still build identical plans (the
 # scaling-bench invariant).
 _DECODE_POSTINGS_PER_TASK = 262144
 
@@ -739,6 +750,12 @@ def top_k(index: IndexHandle, query: str | QuerySpec, k: int = 100, scorer: str 
         )
     if spec.tree is not None:
         return top_k_tree(index, spec)
+    if index.lazy and not spec.constraints and spec.authz is None:
+        # a loaded index's flat query scores in one Arrow kernel per part
+        # (decode, mask, ordered fold, per-part cut) — wand.packed_topk
+        from miru_spark.operators.wand import packed_topk
+
+        return packed_topk(index, spec)
     scored = _apply_masks(index, score_candidates(index, spec), spec)
     return (
         scored.withColumn("score_r", F.round("score", 6))

@@ -323,10 +323,18 @@ def cosine_pairs(
                 names=["vec_a", "vec_b", "cosine"],
             )
 
-    return (
-        a.mapInArrow(kernel, "vec_a long, vec_b long, cosine double")
-        .withColumn("cosine", F.round("cosine", 6))
-        .filter(F.col("cosine") >= threshold)
+    return _round_and_cut(
+        a.mapInArrow(kernel, "vec_a long, vec_b long, cosine double"), threshold
+    )
+
+
+def _round_and_cut(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The exact threshold JVM-side, on F.round(cosine, 6) — HALF_UP, as the
+    oracle rounds. Pair kernels pre-filter the RAW cosine at threshold − 1e-6,
+    strictly wider than any value that rounds up to the threshold, so numpy
+    never rounds an emitted value."""
+    return pairs.withColumn("cosine", F.round("cosine", 6)).filter(
+        F.col("cosine") >= threshold
     )
 
 
@@ -666,6 +674,9 @@ def lsh_cosine_pairs(
     flat_planes = np.ascontiguousarray(all_planes.reshape(-1, dim))  # (T*P, dim)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
     T = n_tables
+    # raw-cosine pre-filter of both verify kernels; the exact cut on the
+    # rounded value is _round_and_cut's, JVM-side
+    pre = threshold - 1e-6
 
     def _vectors(col, n):
         # embedding list<float> → (n, dim) float64, zero-copy-ish
@@ -715,7 +726,7 @@ def lsh_cosine_pairs(
         # data/parameter properties only, so the width is session-independent
         est_pairs = n_rows * n_rows * n_tables // (2 ** (n_planes + 1))
         verify_width = max(1, min(4096, -(-est_pairs // 250_000)))
-        thr_blas = threshold - 1e-6  # round(fold,6) ≥ t ⟹ fold ≥ t−5e-7 ≫ gram err
+        thr_blas = pre - 1e-9  # the gram's error vs the fold ≪ 1e-9 (cosine_pairs)
 
         def partition_verify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             ids, mat, _matn, sq = bc.value  # broadcast-shared; no per-task copies
@@ -761,8 +772,8 @@ def lsh_cosine_pairs(
             dot = np.zeros(len(ia), dtype=np.float64)
             for j in range(ndim):  # ordered fold — bit parity with the join path
                 dot += matT[j, ia] * matT[j, ib]
-            cos = np.round(dot / (norms[ia] * norms[ib]), 6)
-            keep = cos >= threshold
+            cos = dot / (norms[ia] * norms[ib])
+            keep = cos >= pre
             if keep.any():
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -773,11 +784,11 @@ def lsh_cosine_pairs(
                     names=["vec_a", "vec_b", "cosine"],
                 )
 
-        return (
+        return _round_and_cut(
             bucketed.repartition(verify_width, "table", "bucket")
-            .mapInArrow(partition_verify, "vec_a long, vec_b long, cosine double")
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
+            .mapInArrow(partition_verify, "vec_a long, vec_b long, cosine double"),
+            threshold,
+        ).dropDuplicates(["vec_a", "vec_b"])
 
     a, b = bucketed.alias("a"), bucketed.alias("b")
     cand = (
@@ -805,11 +816,13 @@ def lsh_cosine_pairs(
             eb = _vectors(batch.column("eb"), n)
             # ordered fold, not np.sum: bit-parity with cosine_pairs and the
             # SQL oracle, so a recall-1 run is hash-identical to the exact op
-            cos = np.round(_ordered_fold_cosine(ea, eb), 6)
-            keep = cos >= threshold
+            cos = _ordered_fold_cosine(ea, eb)
+            keep = cos >= pre
             yield pa.RecordBatch.from_arrays(
                 [pa.array(va[keep]), pa.array(vb[keep]), pa.array(cos[keep])],
                 names=["vec_a", "vec_b", "cosine"],
             )
 
-    return pairs.mapInArrow(verify, "vec_a long, vec_b long, cosine double")
+    return _round_and_cut(
+        pairs.mapInArrow(verify, "vec_a long, vec_b long, cosine double"), threshold
+    )

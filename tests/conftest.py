@@ -37,6 +37,21 @@ def doc_index(documents):
 
 
 @pytest.fixture(scope="session")
+def loaded_index(spark, documents, tmp_path_factory):
+    """The fixture corpus persisted (capacity 128, as doc_index) and loaded
+    back: a lazy handle, whose flat top_k scores in the packed-postings
+    Arrow kernel instead of the DataFrame fold doc_index uses."""
+    from miru_spark.index_store import build_persistent, load_index
+
+    d = str(tmp_path_factory.mktemp("loaded") / "idx")
+    build_persistent(
+        documents, d, text_col="text", dense_id_col="doc_id",
+        capacity=128, wave_size=16,
+    )
+    return load_index(spark, d)
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     import duckdb
 

@@ -222,21 +222,16 @@ class _PoisonStats:
         raise AssertionError(f"stats relation touched ({name}) on warm terms")
 
 
-def test_query_relations_are_local(spark, doc_index, documents, tmp_path_factory):
+def test_query_relations_are_local(spark, doc_index, loaded_index):
     """Driver-built relations on the query path — the query-term table and
     the empty results — plan as JVM LocalTableScans, never as an
     ExistingRDD (a createDataFrame over a Python list, which parallelizes
     through Python-worker tasks on every query). Checked on the in-memory
-    and on a loaded index, for every scoring route of top_k."""
-    from miru_spark.index_store import build_persistent, load_index
+    and on a loaded index, for every scoring route of top_k; a loaded
+    index's flat queries ship no query relation at all (one Arrow kernel)."""
+    from miru_spark.filters import parse_query
     from miru_spark.operators import wand
 
-    idx_dir = str(tmp_path_factory.mktemp("local_rel") / "idx")
-    build_persistent(
-        documents, idx_dir, text_col="text", dense_id_col="doc_id",
-        capacity=128, wave_size=16,
-    )
-    loaded = load_index(spark, idx_dir)
     scored = [
         ("spark AND join", "bm25"),
         ("spark OR vector", "bm25"),
@@ -251,12 +246,15 @@ def test_query_relations_are_local(spark, doc_index, documents, tmp_path_factory
         rows = df.collect()
         return rows, df._jdf.queryExecution().executedPlan().toString()
 
-    for index in (doc_index, loaded):
+    for index in (doc_index, loaded_index):
         for q, scorer in scored:
             rows, plan = executed(fulltext.top_k(index, q, k=10, scorer=scorer))
             assert rows, (q, scorer)
             assert "ExistingRDD" not in plan, (q, scorer, plan)
-            assert "LocalTableScan" in plan, (q, scorer, plan)
+            if index.lazy and scorer != "time" and parse_query(q).tree is None:
+                assert plan.count("MapInArrow") == 1, (q, scorer, plan)
+            else:
+                assert "LocalTableScan" in plan, (q, scorer, plan)
         # an unknown term, and a prefix expanding to no term (wand's
         # empty-expansion early return)
         for df in (
@@ -266,6 +264,36 @@ def test_query_relations_are_local(spark, doc_index, documents, tmp_path_factory
             rows, plan = executed(df)
             assert not rows
             assert "ExistingRDD" not in plan, plan
+
+
+def test_loaded_flat_top_k_is_one_arrow_kernel(loaded_index):
+    """A loaded index's flat query is scan → one MapInArrow (decode, mask,
+    ordered fold, per-part cut) → JVM round + TakeOrdered: no interpreted
+    fold aggregate, no broadcast join, and — every fixture query fits one
+    task's decode budget — no exchange."""
+    for q in ["spark OR vector", "spark AND join", "spark NOT window", "cust*",
+              "s* OR sc*"]:
+        df = fulltext.top_k(loaded_index, q, k=10)
+        assert df.collect(), q
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, (q, plan)
+        for node in ("ObjectHashAggregate", "BroadcastHashJoin", "Exchange"):
+            assert node not in plan, (q, node, plan)
+
+
+def test_loaded_flat_top_k_spreads_by_part_above_the_budget(loaded_index, monkeypatch):
+    """Above one task's decode budget the kernel's input is hashed by part
+    (every row of a part still meets in one task) and the answer does not
+    change."""
+    from miru_spark.operators import wand
+
+    q = "s* OR sc*"  # Σdf ≈ 2.7k postings over the fixture's 4 parts
+    want = [tuple(r) for r in fulltext.top_k(loaded_index, q, k=50).collect()]
+    monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", 500)
+    df = fulltext.top_k(loaded_index, q, k=50)
+    assert [tuple(r) for r in df.collect()] == want and len(want) == 50
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(part" in plan and "Coalesce" not in plan, plan
 
 
 def test_term_stats_memo_skips_stats_scan(doc_index):

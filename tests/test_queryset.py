@@ -81,29 +81,53 @@ def test_queryset_wand_kernel_parity(qset, doc_index):
     assert not failures, f"{len(failures)} kernel mismatches: {failures[:5]}"
 
 
-def test_queryset_loaded_index_parity(qset, doc_index, documents, spark, tmp_path_factory):
-    # the PERSISTED/lazy path (term-pruned packed decode) answers a spread
-    # of the query set identically to the in-memory build — one query of
-    # each shape class plus extras, not just the smoke probes
-    from miru_spark.index_store import build_persistent, load_index
+def _rows(df):
+    return [(int(r["doc"]), r["score"]) for r in df.collect()]
 
-    idx_dir = str(tmp_path_factory.mktemp("qs_idx") / "idx")
+
+def test_queryset_loaded_index_parity(qset, doc_index, loaded_index):
+    # the loaded (lazy) path scores a flat query in the packed-postings Arrow
+    # kernel that wand_topk shares; the in-memory build keeps the DataFrame
+    # fold. So this is the independent check of that kernel: every query of
+    # the set, identical ids and scores
+    failures = []
+    for rec in qset:
+        spec = parse_query(rec["query"], k=rec["k"], scorer=rec["scorer"])
+        if _rows(fulltext.top_k(doc_index, spec)) != _rows(fulltext.top_k(loaded_index, spec)):
+            failures.append(rec["qid"] + " " + rec["query"])
+    assert not failures, f"loaded-index mismatches: {failures}"
+
+
+def test_queryset_repaired_index_parity(qset, documents, spark, tmp_path_factory):
+    # the same check after version repair: tombstoned instances (the removal
+    # index), delta waves and corrected stats. The reference is the DataFrame
+    # fold over the SAME loaded handle (lazy=False routes top_k through
+    # score_candidates and _apply_masks), plus a timeRange and an and_not query
+    import dataclasses
+
+    from miru_spark.index_store import build_persistent, load_index, upsert_docs
+
+    idx_dir = str(tmp_path_factory.mktemp("qs_repaired") / "idx")
     build_persistent(
         documents, idx_dir, text_col="text", dense_id_col="doc_id",
         capacity=128, wave_size=16,
     )
+    victims = [3, 150, 301, 477]
+    upsert_docs(
+        spark, idx_dir,
+        documents.filter(F.col("doc_id").isin(victims)).withColumn(
+            "text", F.lit("spark spark join zzzrepaired window merge")
+        ),
+    )
     loaded = load_index(spark, idx_dir)
-    picked = [r for i, r in enumerate(qset) if i % 4 == 0]  # 13 across kinds
+    assert loaded.removed is not None and loaded.removed.count() == len(victims)
+    fold = dataclasses.replace(loaded, lazy=False)
+    specs = [parse_query(r["query"], k=r["k"], scorer=r["scorer"]) for r in qset]
+    specs.append(parse_query("spark OR join OR zzzrepaired", k=60, time_range=(100, 400)))
+    specs.append(parse_query("spark AND NOT zzzrepaired", k=100))
     failures = []
-    for rec in picked:
-        spec = parse_query(rec["query"], k=rec["k"], scorer=rec["scorer"])
-        a = fulltext.top_k(doc_index, spec).toPandas().reset_index(drop=True)
-        spec2 = parse_query(rec["query"], k=rec["k"], scorer=rec["scorer"])
-        b = fulltext.top_k(loaded, spec2).toPandas().reset_index(drop=True)
-        if not (
-            len(a) == len(b)
-            and a["doc"].astype("int64").equals(b["doc"].astype("int64"))
-            and a["score"].astype("float64").equals(b["score"].astype("float64"))
-        ):
-            failures.append(rec["qid"] + " " + rec["query"])
-    assert not failures, f"loaded-index mismatches: {failures}"
+    for spec in specs:
+        got = _rows(fulltext.top_k(loaded, spec))
+        if not got or got != _rows(fulltext.top_k(fold, spec)):
+            failures.append(spec)
+    assert not failures, f"{len(failures)} repaired-index mismatches: {failures[:3]}"

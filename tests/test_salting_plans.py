@@ -192,12 +192,14 @@ def test_score_path_is_self_contained(doc_index):
 
 
 def test_wand_without_removal_skips_cogroup(doc_index):
-    """No removal index -> the kernel plan is ONE grouped map over the
-    term-pruned postings (no cogroup, no second grouped relation)."""
+    """No removal index -> the kernel plan is ONE Arrow map over the
+    term-pruned postings (no cogroup, no pandas grouped map, no union with
+    removal marker rows)."""
     from miru_spark.operators import wand as wand_ops
 
     assert doc_index.removed is None
     out = wand_ops.wand_topk(doc_index, "spark OR join", k=10, kernel="taat")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    # (the cached build's own Arrow maps show in the in-memory relation)
+    assert plan.count("MapInArrow score_parts") == 1, plan
+    assert "Pandas" not in plan and "Union" not in plan, plan

@@ -86,6 +86,26 @@ def test_cosine_scores_rounds_a_seventh_decimal_tie_half_up(spark):
     assert top[0]["cosine"] == 0.601563
 
 
+def test_lsh_cosine_pairs_rounds_a_seventh_decimal_tie_half_up(spark):
+    # the pair above, at a threshold equal to its HALF_UP-rounded cosine:
+    # both verify kernels (fused and join) must keep it, with the oracle's
+    # 0.601563, where np.round's 0.601562 fell below the threshold
+    df = spark.createDataFrame(
+        [(1, [0.6015625, 0.7988257373130575]), (2, [1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for budget in (256 << 20, 0):  # fused verify, then the join path
+        got = similarity.lsh_cosine_pairs(
+            df, "vec_id", "embedding", 0.601563, n_planes=1,
+            broadcast_verify_bytes=budget,
+        ).collect()
+        assert [(r["vec_a"], r["vec_b"], r["cosine"]) for r in got] == [(1, 2, 0.601563)]
+        assert not similarity.lsh_cosine_pairs(
+            df, "vec_id", "embedding", 0.6015631, n_planes=1,
+            broadcast_verify_bytes=budget,
+        ).collect()
+
+
 def test_minhash_signatures_doc_grouped_guard_raises_on_split_runs(spark):
     # doc_grouped promises one contiguous run per doc; a split run must
     # fail loudly, not emit two partial signatures

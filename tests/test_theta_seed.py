@@ -1,12 +1,7 @@
-"""Round-6 query-path additions:
-
-* timeRange PARTITION pruning — out-of-range doc-partitions are skipped
-  before the postings scan/decode (the reference's per-partition
-  time-intersect short circuit, FullTextCustomQuestion.java:62-67), with
-  results identical to the unpruned plan;
-* the cross-partition WAND θ₀ seed (FullTextReport.lowestScore carry,
-  FullTextCustomQuestion.createReport:128-144) — seeded runs are rank- and
-  score-identical to the DataFrame path and the unseeded kernel.
+"""timeRange PARTITION pruning — out-of-range doc-partitions are skipped
+before the postings scan/decode (the reference's per-partition
+time-intersect short circuit, FullTextCustomQuestion.java:62-67), with
+results identical to the unpruned plan.
 """
 
 from __future__ import annotations
@@ -78,30 +73,3 @@ def test_wand_timerange_pruning_matches_dataframe_path(loaded):
     empty_spec = parse_query("spark OR join", k=10, time_range=(1 << 60, (1 << 60) + 5))
     assert wand_ops.wand_topk(loaded, empty_spec, kernel="wand").count() == 0
 
-
-def test_wand_theta_seed_identity(loaded, monkeypatch):
-    """Force the θ₀ pre-pass at fixture scale: the seeded kernel must be
-    rank- AND score-identical to both the unseeded kernel and the
-    DataFrame path (θ₀ is a strict lower bound on the global kth score,
-    so no admissible doc is ever pruned)."""
-    queries = ["spark OR join OR merge", "(merge OR join) NOT window", "spark OR dup"]
-    want = {q: _rows(fulltext.top_k(loaded, q, k=7)) for q in queries}
-    unseeded = {
-        q: _rows(wand_ops.wand_topk(loaded, q, k=7, kernel="wand")) for q in queries
-    }
-    monkeypatch.setattr(wand_ops, "_SEED_MIN_POSTINGS", 0)
-    seeded = {}
-    for q in queries:
-        seeded[q] = _rows(wand_ops.wand_topk(loaded, q, k=7, kernel="wand"))
-        assert wand_ops._LAST_THETA0 > float("-inf")  # the pre-pass ran
-    assert seeded == unseeded == want
-    assert all(len(v) == 7 for v in want.values())
-
-
-def test_wand_seed_skipped_below_cutoff(loaded, monkeypatch):
-    """Below the posting-volume cutoff the pre-pass must not run — it would
-    be pure overhead at small scale (and on the gate/bench fixtures)."""
-    monkeypatch.setattr(wand_ops, "_SEED_MIN_POSTINGS", 10**12)
-    got = _rows(wand_ops.wand_topk(loaded, "spark OR join", k=7, kernel="wand"))
-    assert wand_ops._LAST_THETA0 == float("-inf")  # no seed job
-    assert got == _rows(fulltext.top_k(loaded, "spark OR join", k=7))
