@@ -373,8 +373,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # bm25_and2 / bm25_and_prefix (same flat paths as single_common / and3 /
 # prefix), fulltext_bm25_or + tfidf_or (flat-OR path gated via
 # fulltext_bm25_timerange's "spark OR join"), bm25_and3_wand (AND kernel
-# gated in tests/test_wand.py; or_wand + ornot_wand keep the WAND engine
-# gated), uniques_users (same count_distinct primitive as
+# gated in tests/test_wand.py; or_wand + ornot_wand keep the packed
+# top-k kernel gated), uniques_users (same count_distinct primitive as
 # distinct_count_error_users), aggregate_counts_by_type (strict subset of
 # aggregate_counts_full).
 # ---------------------------------------------------------------------------
@@ -439,9 +439,9 @@ def _ft_spec_query(q: str, scorer: str = "bm25", k: int = 100, time_range=None, 
 
 def _ft_wand_query(q: str, scorer: str = "bm25", k: int = 100):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # kernel pinned to "wand": these entries GATE the block-max WAND
-        # kernel itself (auto would pick the vectorized TAAT at this scale)
-        return wand_ops.wand_topk(_index(spark, sf_dir), q, k=k, scorer=scorer, kernel="wand")
+        # wand_topk on the in-memory handle: these entries GATE the packed
+        # top-k kernel (wand.packed_topk), which the handle's top_k does not run
+        return wand_ops.wand_topk(_index(spark, sf_dir), q, k=k, scorer=scorer)
 
     return run
 
@@ -452,13 +452,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         q[name] = _ft_query(qs, scorer)
     for name, kw in _FULLTEXT_SPECS.items():
         q[name] = _ft_spec_query(**kw)
-    # the same queries through the block-max WAND kernel path — gates the
+    # OR queries through the packed top-k kernel path — gates the
     # packed-postings engine (incl. OR+NOT pre-admission negation) against
     # the same oracles as the DataFrame path
     q["fulltext_bm25_or_wand"] = _ft_wand_query("spark OR vector OR dup")
-    # "(a OR b) NOT c" flattens to the OR+negatives spec — the WAND kernel
-    # path with pre-admission negation (bare "a OR b NOT c" would nest as
-    # a OR (b NOT c) under the precedence grammar)
+    # "(a OR b) NOT c" flattens to the OR+negatives spec — the packed
+    # kernel path with pre-admission negation (bare "a OR b NOT c" would
+    # nest as a OR (b NOT c) under the precedence grammar)
     q["fulltext_bm25_ornot_wand"] = _ft_wand_query("(merge OR join) NOT window")
     # aux field dictionary scan (Distincts.java:96-99 over a named field)
     q["distincts_field_lang"] = lambda s, d: (

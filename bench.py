@@ -159,13 +159,10 @@ def run_suite() -> dict:
         idx, parse_query("spark OR join", k=100, scorer="miru_tfidf")).collect())
     _t("q_nested_bool", lambda: fulltext.top_k(
         idx, parse_query("spark AND (join OR merge) NOT window", k=100)).collect())
-    # the WAND kernel gate proves CORRECTNESS of the Python pivot loop, not
-    # throughput (kernel='auto' takes the vectorized TAAT at this scale —
-    # 26× at 450k postings / 2.7× at 1.8M even after the r5 pivot-loop
-    # micro-opts halved WAND, BENCH/wand_profile_*.json); same spec as
-    # rounds 1-3 so round-over-round tables compare like for like
+    # the OR query through wand_topk: the packed top-k kernel's dense
+    # accumulator on the in-memory handle, whose top_k folds relationally
     _t("q_wand_or", lambda: wand_ops.wand_topk(
-        idx, "spark OR vector OR dup", k=100, kernel="wand").collect())
+        idx, "spark OR vector OR dup", k=100).collect())
 
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
     _t("q_waveform", lambda: analytics.waveform(events, "ts", "event_type", "hour").collect())

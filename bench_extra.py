@@ -75,7 +75,7 @@ def main() -> None:
     items["q_nested_bool"] = lambda: fulltext.top_k(
         _idx(), parse_query("spark AND (join OR merge) NOT window", k=100)).collect()
     items["q_wand_or"] = lambda: wand_ops.wand_topk(
-        _idx(), "spark OR vector OR dup", k=100, kernel="wand").collect()
+        _idx(), "spark OR vector OR dup", k=100).collect()
 
     items["q_waveform"] = lambda: analytics.waveform(events, "ts", "event_type", "hour").collect()
     items["q_trending"] = lambda: analytics.trending_peaks(

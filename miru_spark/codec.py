@@ -4,7 +4,8 @@ Stands in for the reference's Roaring bitmap posting lists
 (miru-bitmaps-roaring6/.../MiruBitmapsRoaring.java) and their "atomized"
 64Ki-row chunks (miru-service/.../index/lab/LabInvertedIndex.java:268-283,
 312-399). Our physical unit is a fixed-size block of ``BLOCK_SIZE`` ids with
-per-block (last_doc_id, max_tf) metadata — the block-max structure WAND needs.
+per-block (last_doc_id, max_tf) metadata — the block-max structure WAND needs
+(not read by a scorer yet: a term's whole list is one varint stream).
 
 Everything here operates on whole numpy arrays (no per-value Python loops in
 encode/decode); the per-row slicing for batched Arrow columns lives in
@@ -95,7 +96,8 @@ def tf_unpack(buf: bytes) -> np.ndarray:
 
 
 def block_metadata(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-block (last doc id, max tf) for block-max WAND.
+    """Per-block (last doc id, max tf); ``fulltext.index_first_latest`` reads
+    the last block_last.
 
     Blocks are ``BLOCK_SIZE`` consecutive postings; the reference's analog is
     the atomized chunk key carrying its id range (LabInvertedIndex.atomize).

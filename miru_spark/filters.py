@@ -29,7 +29,7 @@ collected with their query frequency qtf like MiruAggregateUtil.collectTerm
 
 Flat queries (one level of AND or OR over default-field terms, optional
 negatives) flatten into QuerySpec.positive/negative/op and take the proven
-flat execution path (incl. the WAND kernels); anything nested carries
+flat execution path (incl. the packed top-k kernel); anything nested carries
 ``tree`` and takes the recursive set-algebra path.
 """
 

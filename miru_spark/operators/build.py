@@ -57,6 +57,8 @@ DEFAULT_CAPACITY = 1_000_000  # docs per partition (Miru: "millions", README.md:
 # fused-kernel buffered bytes per posting: int64 intern code + int32 doc_id +
 # int32 tf, plus amortized intern-dict/chunk-list overhead
 _FUSED_BYTES_PER_POSTING = 17
+# estimated unique terms per doc: sizes the fused buffer for ordinary prose
+_FUSED_EST_TERMS_PER_DOC = 256
 
 
 def _mem_to_bytes(s: str) -> int:
@@ -67,22 +69,18 @@ def _mem_to_bytes(s: str) -> int:
     return int(s)
 
 
-def fused_capacity_limit(spark, est_terms_per_doc: int | None = None) -> int:
+def fused_capacity_limit(spark) -> int:
     """Largest safe ``capacity`` for strategy='fused' on this session.
 
     The fused kernel buffers ALL postings of a task's doc-partitions in
     memory (Miru's own sizing rule: one partition's delta index fits the
     heap). Budget = half the per-core memory; need ≈ capacity ×
-    est-unique-terms/doc × 17 B. Override the estimate with
-    SPARK_GRAFT_EST_TERMS_PER_DOC for unusually long/short documents."""
-    import os
-
-    est = est_terms_per_doc or int(os.environ.get("SPARK_GRAFT_EST_TERMS_PER_DOC", "256"))
+    _FUSED_EST_TERMS_PER_DOC × _FUSED_BYTES_PER_POSTING."""
     conf = spark.sparkContext.getConf()
     mem = conf.get("spark.executor.memory", None) or conf.get("spark.driver.memory", "1g")
     cores = max(1, spark.sparkContext.defaultParallelism)
     budget = _mem_to_bytes(mem) // cores // 2
-    return max(1, budget // (est * _FUSED_BYTES_PER_POSTING))
+    return max(1, budget // (_FUSED_EST_TERMS_PER_DOC * _FUSED_BYTES_PER_POSTING))
 
 
 def prepare_docs(
@@ -928,8 +926,7 @@ def build_index(
                 f"strategy='fused' buffers one partition's postings per task: "
                 f"capacity={capacity} exceeds the safe limit ~{cap_limit} for "
                 f"this session's memory/cores. Lower capacity, raise executor "
-                f"memory, set SPARK_GRAFT_EST_TERMS_PER_DOC for short docs, "
-                f"or use strategy='sort' (unbounded shuffle-sort path)."
+                f"memory, or use strategy='sort' (unbounded shuffle-sort path)."
             )
         # per-partition fused tokenize+pack (the MiruIndexer shape): one
         # content shuffle by part, zero posting shuffles. dl comes from the

@@ -23,17 +23,27 @@ slots), scores every (term, qtf, clause) entry of the expanded query — one
 term can serve two clauses — and sums per doc in ascending (term, qtf)
 order, the DataFrame fold's ``array_sort(struct(term, contrib))`` order
 (a contribution is monotone in qtf), so scores are bit-identical to it.
-Three per-part scorers, chosen by ``kernel=``, all exact:
-  * ``and``  — rarest-first sorted-array intersection of the clause id
-               sets, then the ordered rescore (every AND query).
-  * ``taat`` — dense-accumulator term-at-a-time: acc[ids] += contrib,
-               fully vectorized; exact, no pruning.
-  * ``wand`` — document-at-a-time block-max WAND: pivot selection on term
-               upper bounds, block skipping via searchsorted over
-               block_last / block_max_tf; a Python pivot loop.
+Two per-part scorers, one per query op, both exact:
+  * ``_kernel_and``  — rarest-first sorted-array intersection of the clause
+                       id sets, then the ordered rescore.
+  * ``_kernel_taat`` — dense-accumulator term-at-a-time, acc[ids] +=
+                       contrib, fully vectorized: every OR query, bm25 and
+                       tf-idf alike (the accumulate-then-cut top-k shape).
 The part's cut keeps the RAW score of every doc ≥ its k-th raw score −
 ``_CUT_SLACK``; rounding then happens once, JVM-side (HALF_UP, as the
 oracle), so no numpy rounding can disagree with the final order.
+
+No block-max skipping: a packed row stores each term's whole per-part list
+as ONE delta+varint stream (ids are prefix sums of the gaps, and no block's
+byte offset is kept), so the kernel decodes every posting whatever it
+skips. Skipping could then only save the scoring arithmetic, which numpy
+does in bulk for less than a Python pivot loop spends per posting: a
+document-at-a-time block-max WAND loop over these rows lost to the dense
+accumulator at every measured size (BENCH/wand_profile_{1M,4M}.json).
+A block-max scorer waits on postings that decode one block at a time.
+The packed ``block_last`` / ``block_max_tf`` columns are still written
+(``block_last`` serves ``fulltext.index_first_latest``); this scan does
+not read them.
 
 Scale note: per-partition state is O(capacity) (the dense accumulator) —
 bounded by the partition rollover capacity exactly like the reference's
@@ -42,8 +52,6 @@ per-partition bitmaps, independent of corpus size.
 
 from __future__ import annotations
 
-import heapq
-import os
 from typing import Iterator
 
 import numpy as np
@@ -66,9 +74,6 @@ from miru_spark.operators.fulltext import (
 )
 from miru_spark.session import local_frame
 
-# kernel='auto' switches TAAT → WAND above this many decoded postings per
-# partition (see the measured rationale at the auto branch in _score_part)
-_TAAT_CUTOFF = int(os.environ.get("SPARK_GRAFT_TAAT_CUTOFF", "8000000"))
 # a part keeps every doc whose raw score is ≥ its k-th raw score − this.
 # round(x, 6) moves a score by ≤ 5e-7, so a doc below the cut rounds
 # strictly below k docs of its own part and cannot reach the global top-k,
@@ -91,23 +96,13 @@ def _tfidf_contrib(tf: np.ndarray, cum_tf: float, qtf: float) -> np.ndarray:
 class _TermCtx:
     """One (term, qtf, clause) entry over one part's decoded posting row."""
 
-    __slots__ = ("term", "qtf", "clause", "df", "cum_tf", "ids", "tfs",
-                 "dls", "keys", "block_last", "block_max_tf", "ub",
-                 "idf", "ptr", "cur", "blk_ubs")
+    __slots__ = ("term", "qtf", "clause", "df", "cum_tf", "ids", "tfs", "dls", "keys")
 
-    def __init__(self, term, qtf, clause, df, cum_tf, ids, tfs, dls, keys,
-                 block_last, block_max_tf):
+    def __init__(self, term, qtf, clause, df, cum_tf, ids, tfs, dls, keys):
         self.term, self.qtf, self.clause = term, qtf, clause
         self.df, self.cum_tf = df, cum_tf
         self.ids, self.tfs = ids, tfs
         self.dls, self.keys = dls, keys
-        self.block_last, self.block_max_tf = block_last, block_max_tf
-        self.ub = 0.0
-        # WAND-loop working state (set up by _kernel_wand)
-        self.idf = 0.0
-        self.ptr = 0
-        self.cur = -1
-        self.blk_ubs: dict | None = None
 
 
 def _exact_scores(terms: list[_TermCtx], doc_ids: np.ndarray,
@@ -166,151 +161,6 @@ def _kernel_taat(terms, scorer, n_docs, avgdl):
     return cand, acc[cand]
 
 
-def _term_upper_bound(t: _TermCtx, scorer: str, n_docs: int, avgdl: float) -> float:
-    mx = float(t.block_max_tf.max()) if len(t.block_max_tf) else 0.0
-    if scorer == "bm25":
-        # dl→0 maximizes the saturation term
-        return float(_bm25_contrib(np.array([mx]), np.array([0.0]), t.df, n_docs, avgdl, t.qtf)[0])
-    return float(_tfidf_contrib(np.array([mx]), t.cum_tf, t.qtf)[0])
-
-
-def _block_ub(t: _TermCtx, blk: int, scorer: str, n_docs: int, avgdl: float) -> float:
-    mx = float(t.block_max_tf[blk])
-    if scorer == "bm25":
-        return float(_bm25_contrib(np.array([mx]), np.array([0.0]), t.df, n_docs, avgdl, t.qtf)[0])
-    return float(_tfidf_contrib(np.array([mx]), t.cum_tf, t.qtf)[0])
-
-
-def _cur_doc(t: _TermCtx) -> int:
-    return t.cur
-
-
-_I64_MAX = np.iinfo(np.int64).max
-
-
-def _kernel_wand(terms, scorer, n_docs, avgdl, k):
-    """Document-at-a-time block-max WAND (Broder et al. 2003; Ding & Suel
-    2011 block-max variant) for OR semantics.
-
-    Pointers advance by binary search; a pivot is only evaluated when the sum
-    of term upper bounds reaches θ − _CUT_SLACK AND the sum of the current
-    *block* maxima does too (the block-max check) — otherwise we jump past
-    the smallest block boundary. θ is the k-th best raw score seen so far,
-    and the slack keeps every doc the part's cut (``_part_cut``) would keep:
-    a skipped doc scores below θ − slack ≤ final θ − slack. Every evaluated
-    doc is rescored in ascending-(term, qtf) order for bit-stable floats
-    and returned; the cut then picks the survivors.
-
-    Hot-loop notes (measured on BENCH/profile_wand.py): per-term idf is
-    hoisted (one np.log per term — the same ufunc the array path applies, so
-    pivot scores stay bit-identical to _bm25_contrib), block upper bounds
-    are memoized per (term, block), pointers and current docs live in slots
-    (no per-resort dict lookups), and ndarray.searchsorted is called as a
-    method (the np.searchsorted dispatcher was ~30% of kernel time).
-    """
-    bm25 = scorer == "bm25"
-    for t in terms:
-        t.ub = _term_upper_bound(t, scorer, n_docs, avgdl)
-        t.idf = (
-            float(np.log(1.0 + (n_docs - t.df + 0.5) / (t.df + 0.5))) if bm25 else 0.0
-        )
-        t.ptr = 0
-        t.cur = int(t.ids[0]) if len(t.ids) else -1
-        t.blk_ubs = {}
-    heap: list[tuple[float, int]] = []  # (score, doc) min-heap of size k
-    bound = -np.inf  # θ − slack; −∞ until the heap holds k docs
-    alive = [t for t in terms if len(t.ids)]
-    evaluated: list[int] = []
-    k1p1 = K1 + 1.0
-    one_minus_b = 1.0 - B
-    while alive:
-        alive.sort(key=_cur_doc)
-        # find pivot: smallest doc where cumulative UB reaches the bound
-        acc_ub = 0.0
-        pivot_i = -1
-        for i, t in enumerate(alive):
-            acc_ub += t.ub
-            if acc_ub >= bound:
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break
-        pivot_doc = alive[pivot_i].cur
-        # every list positioned ON the pivot can score it: include them all
-        # in the block-max check, or a pivot could be skipped on a partial
-        # bound
-        while pivot_i + 1 < len(alive) and alive[pivot_i + 1].cur == pivot_doc:
-            pivot_i += 1
-        if alive[0].cur == pivot_doc:
-            # block-max check: tighter bound from the current blocks
-            blk_ub = 0.0
-            min_block_end = _I64_MAX
-            for t in alive[: pivot_i + 1]:
-                blk = int(t.block_last.searchsorted(pivot_doc))
-                last = len(t.block_last) - 1
-                if blk > last:
-                    blk = last
-                ub = t.blk_ubs.get(blk)
-                if ub is None:
-                    ub = _block_ub(t, blk, scorer, n_docs, avgdl)
-                    t.blk_ubs[blk] = ub
-                blk_ub += ub
-                be = int(t.block_last[blk])
-                if be < min_block_end:
-                    min_block_end = be
-            if blk_ub >= bound:
-                evaluated.append(pivot_doc)
-                score = 0.0
-                for t in terms:  # (term, qtf) order — deterministic sum
-                    ids = t.ids
-                    p = ids.searchsorted(pivot_doc)
-                    if p < len(ids) and ids[p] == pivot_doc:
-                        tf = float(t.tfs[p])
-                        if bm25:
-                            # literal _bm25_contrib op order on scalars
-                            # (IEEE +,*,/ are bit-equal scalar vs array)
-                            dl = float(t.dls[p])
-                            score += t.qtf * t.idf * (
-                                tf * k1p1 / (tf + K1 * (one_minus_b + B * dl / avgdl))
-                            )
-                        else:
-                            score += (t.qtf * tf) / t.cum_tf
-                if len(heap) < k:
-                    heapq.heappush(heap, (score, pivot_doc))
-                    if len(heap) == k:
-                        bound = heap[0][0] - _CUT_SLACK
-                elif score > heap[0][0]:
-                    heapq.heapreplace(heap, (score, pivot_doc))
-                    bound = heap[0][0] - _CUT_SLACK
-                # advance all pointers at pivot_doc
-                for t in alive:
-                    if t.cur == pivot_doc:
-                        p = t.ptr + 1
-                        t.ptr = p
-                        if p < len(t.ids):
-                            t.cur = int(t.ids[p])
-            else:
-                # skip whole blocks: jump past the smallest current block end
-                target = min(min_block_end, pivot_doc) + 1
-                for t in alive[: pivot_i + 1]:
-                    if t.cur < target:
-                        p = int(t.ids.searchsorted(target))
-                        t.ptr = p
-                        if p < len(t.ids):
-                            t.cur = int(t.ids[p])
-        else:
-            # advance the leading lists to the pivot
-            for t in alive[:pivot_i]:
-                if t.cur < pivot_doc:
-                    p = int(t.ids.searchsorted(pivot_doc))
-                    t.ptr = p
-                    if p < len(t.ids):
-                        t.cur = int(t.ids[p])
-        alive = [t for t in alive if t.ptr < len(t.ids)]
-    docs = np.unique(np.asarray(evaluated, dtype=np.int64))
-    return docs, _exact_scores(terms, docs, scorer, n_docs, avgdl)
-
-
 def _part_cut(scores: np.ndarray, k: int) -> np.ndarray:
     """Indices of the part's docs that can still reach the global top-k:
     every doc whose RAW score is ≥ the part's k-th raw score − _CUT_SLACK
@@ -325,24 +175,12 @@ def _part_cut(scores: np.ndarray, k: int) -> np.ndarray:
     return np.flatnonzero(scores >= kth - _CUT_SLACK)
 
 
-def _score_part(terms, op, n_clauses, kernel, scorer, n_docs, avgdl, k):
-    """One part's (doc_id, raw score) candidates from the chosen scorer."""
+def _score_part(terms, op, n_clauses, scorer, n_docs, avgdl):
+    """One part's (doc_id, raw score) candidates: intersect for AND, the
+    dense accumulator for OR."""
     if op == "and":
         return _kernel_and(terms, n_clauses, scorer, n_docs, avgdl)
-    if kernel == "wand":
-        return _kernel_wand(terms, scorer, n_docs, avgdl, k)
-    if kernel == "taat" or scorer != "bm25":
-        return _kernel_taat(terms, scorer, n_docs, avgdl)
-    # auto: on this numpy substrate the dense-accumulator TAAT scan beats
-    # the Python pivot loop (26× at 450k postings, narrowing to ~3× at 1.8M
-    # after the r5 pivot micro-opts) until volume is enormous (measured,
-    # BENCH/wand_profile_{1M,4M}.json: 1M docs / 450k postings → TAAT
-    # 0.023 s vs WAND 0.61 s; 4M/1.8M → 0.77 s vs 2.1 s; identical top-k).
-    # WAND's skipping only pays once a partition's decoded postings exceed
-    # the cutoff — per-partition state stays O(capacity) either way.
-    if sum(len(t.ids) for t in terms) <= _TAAT_CUTOFF:
-        return _kernel_taat(terms, scorer, n_docs, avgdl)
-    return _kernel_wand(terms, scorer, n_docs, avgdl, k)
+    return _kernel_taat(terms, scorer, n_docs, avgdl)
 
 
 def _keys_of(terms: list[_TermCtx], winners: np.ndarray) -> np.ndarray:
@@ -366,8 +204,7 @@ def _part_terms(rows, entries_by_term, neg_terms, stats, time_range):
     """Decode one part's packed rows into its (term, qtf, clause) contexts,
     sorted by (term, qtf, clause). Negated and removed doc ids and (under a
     timeRange) out-of-range keys leave every positive list BEFORE any
-    scoring. Block metadata stays as packed — block maxima remain valid
-    upper bounds for the surviving ids (pruning only gets less tight)."""
+    scoring."""
     drop = [np.array([r["removed_id"]], np.int64) for r in rows if r["removed_id"] is not None]
     drop += [codec.delta_unpack(r["ids"]) for r in rows if r["term"] in neg_terms]
     excluded = np.unique(np.concatenate(drop)) if drop else None
@@ -391,11 +228,8 @@ def _part_terms(rows, entries_by_term, neg_terms, stats, time_range):
         if not len(ids):
             continue
         df, cum_tf = stats[r["term"]]
-        block_last = np.asarray(r["block_last"], dtype=np.int64)
-        block_max_tf = np.asarray(r["block_max_tf"], dtype=np.int64)
         out.extend(
-            _TermCtx(r["term"], qtf, clause, df, cum_tf, ids, tfs, dls, keys,
-                     block_last, block_max_tf)
+            _TermCtx(r["term"], qtf, clause, df, cum_tf, ids, tfs, dls, keys)
             for qtf, clause in ents
         )
     out.sort(key=lambda t: (t.term, t.qtf, t.clause))
@@ -406,12 +240,10 @@ def _empty_result(index: IndexHandle) -> DataFrame:
     return local_frame(index.packed.sparkSession, [], "doc long, score double")
 
 
-def packed_topk(index: IndexHandle, spec: QuerySpec, kernel: str = "auto") -> DataFrame:
+def packed_topk(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     """(doc, score) top-k of a flat BM25 / tf-idf spec with no constraint or
     authz mask: term-pruned packed scan → one Arrow kernel per part (decode,
-    mask, ordered fold, per-part cut) → JVM round + TakeOrdered. ``kernel``
-    picks the per-part OR scorer (``auto``/``taat``/``wand``); AND queries
-    always intersect."""
+    mask, ordered fold, per-part cut) → JVM round + TakeOrdered."""
     if spec.scorer not in ("bm25", "miru_tfidf"):
         raise ValueError(f"unknown scorer {spec.scorer}")
     expanded = expand_clauses(index, spec)
@@ -439,7 +271,7 @@ def packed_topk(index: IndexHandle, spec: QuerySpec, kernel: str = "auto") -> Da
         return _empty_result(index)
     scan_terms = sorted(set(entries_by_term) | set(neg_terms))
     rel = index.packed.filter(F.col("term").isin(scan_terms)).select(
-        "part", "term", "ids", "tfs", "dls", "keys", "block_last", "block_max_tf",
+        "part", "term", "ids", "tfs", "dls", "keys",
         F.lit(None).cast("int").alias("removed_id"),
     )
     if index.removed is not None:
@@ -470,7 +302,7 @@ def packed_topk(index: IndexHandle, spec: QuerySpec, kernel: str = "auto") -> Da
             terms = _part_terms(rows, entries_by_term, negs, stats, time_range)
             if not terms:
                 continue
-            docs, scores = _score_part(terms, op, n_clauses, kernel, sc, n_docs, avgdl, kk)
+            docs, scores = _score_part(terms, op, n_clauses, sc, n_docs, avgdl)
             keep = _part_cut(scores, kk)
             if len(keep):
                 docs_out.append(_keys_of(terms, docs[keep]))
@@ -490,7 +322,7 @@ def packed_topk(index: IndexHandle, spec: QuerySpec, kernel: str = "auto") -> Da
 
 
 def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
-              scorer: str = "bm25", kernel: str = "auto") -> DataFrame:
+              scorer: str = "bm25") -> DataFrame:
     """Top-k via the per-partition packed-postings kernel + global ordered
     LIMIT (``packed_topk``). Result is rank- and score-identical to
     fulltext.top_k."""
@@ -518,4 +350,4 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
         from miru_spark.operators import fulltext as _ft
 
         return _ft.top_k(index, spec)
-    return packed_topk(index, spec, kernel)
+    return packed_topk(index, spec)

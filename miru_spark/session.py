@@ -80,10 +80,7 @@ def get_spark(
         # ~130 MB each — humongous G1 allocations that stall the
         # JVM→Python feed pipeline under concurrency (measured 2.2-3.7× on
         # the 500k-doc fused build at local[32] together with 32m regions)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -69,12 +69,12 @@ def main() -> None:
             fulltext.top_k(idx, parse_query("spark AND (join OR merge) NOT window", k=100)),
         ),
         (
-            "Block-max WAND kernel (packed postings)",
-            "Term-pruned scan of packed blocks (self-contained rows: tf+dl+"
-            "doc_key per posting) -> grouped-map kernel; NO doclens relation "
-            "anywhere in the plan, no cogroup when the removal index is "
-            "empty.",
-            wand.wand_topk(idx, "spark OR vector OR dup", k=100, kernel="wand"),
+            "Packed top-k kernel (wand_topk over packed postings)",
+            "Term-pruned scan of packed rows (self-contained: tf+dl+doc_key "
+            "per posting, no block metadata read) -> ONE mapInArrow kernel "
+            "(decode, mask, dense-accumulator OR, per-part cut) -> JVM round "
+            "+ TakeOrdered; no join, no aggregate, no doclens relation.",
+            wand.wand_topk(idx, "spark OR vector OR dup", k=100),
         ),
         (
             "Gather (winners -> stored fields)",

@@ -270,13 +270,15 @@ def test_loaded_flat_top_k_is_one_arrow_kernel(loaded_index):
     """A loaded index's flat query is scan → one MapInArrow (decode, mask,
     ordered fold, per-part cut) → JVM round + TakeOrdered: no interpreted
     fold aggregate, no broadcast join, and — every fixture query fits one
-    task's decode budget — no exchange."""
+    task's decode budget — no exchange. The scan reads no block metadata."""
     for q in ["spark OR vector", "spark AND join", "spark NOT window", "cust*",
               "s* OR sc*"]:
         df = fulltext.top_k(loaded_index, q, k=10)
         assert df.collect(), q
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInArrow") == 1, (q, plan)
+        assert "ReadSchema" in plan, plan
+        assert "block_last" not in plan and "block_max_tf" not in plan, (q, plan)
         for node in ("ObjectHashAggregate", "BroadcastHashJoin", "Exchange"):
             assert node not in plan, (q, node, plan)
 

@@ -58,7 +58,7 @@ def test_queryset_rank_identical_to_oracle(qset, doc_index, duck):
 
 
 def test_queryset_wand_kernel_parity(qset, doc_index):
-    # the packed-postings kernels (block-max WAND pinned) must return the
+    # the packed-postings kernel must return the
     # SAME ids and scores as the DataFrame path (itself oracle-identical
     # above) for every flat query in the set — sweep coverage for the
     # kernel, not just the two gated specs
@@ -71,7 +71,7 @@ def test_queryset_wand_kernel_parity(qset, doc_index):
             continue  # nested specs delegate by design
         df_path = fulltext.top_k(doc_index, spec).toPandas().reset_index(drop=True)
         spec2 = parse_query(rec["query"], k=rec["k"], scorer=rec["scorer"])
-        kern = wand_ops.wand_topk(doc_index, spec2, kernel="wand").toPandas().reset_index(drop=True)
+        kern = wand_ops.wand_topk(doc_index, spec2).toPandas().reset_index(drop=True)
         if not (
             len(df_path) == len(kern)
             and df_path["doc"].astype("int64").equals(kern["doc"].astype("int64"))

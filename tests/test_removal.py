@@ -52,16 +52,8 @@ def test_removed_docs_excluded_from_flat_and_wand_and_time(docs, base_index):
     want = _truth(docs, ["spark"], lambda r: r.doc_id % 7 == 0)
     flat = {r["doc"] for r in fulltext.top_k(idx, "spark", k=1000).collect()}
     assert flat == want and len(want) > 0
-    wand = {
-        r["doc"]
-        for r in wand_ops.wand_topk(idx, "spark", k=1000, kernel="wand").collect()
-    }
+    wand = {r["doc"] for r in wand_ops.wand_topk(idx, "spark", k=1000).collect()}
     assert wand == want
-    taat = {
-        r["doc"]
-        for r in wand_ops.wand_topk(idx, "spark", k=1000, kernel="taat").collect()
-    }
-    assert taat == want
     spec = parse_query("spark", k=1000, scorer="time")
     time_docs = {r["doc"] for r in fulltext.top_k(idx, spec).collect()}
     assert time_docs == want

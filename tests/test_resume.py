@@ -4,6 +4,7 @@ to an uninterrupted build — the FullTextGatherer sip-cursor pattern."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
@@ -282,14 +283,16 @@ def test_wand_survives_terms_tombstoned_out_of_stats(spark, documents, tmp_path_
     assert idx.packed.filter(F.col("term") == "zzzunique").count() > 0
 
     # OR with the dead term: no crash, identical to the DataFrame path
+    # (lazy=False routes the same handle's top_k to the DataFrame fold)
+    fold = dataclasses.replace(idx, lazy=False)
     a = [(int(r["doc"]), r["score"]) for r in
-         wand_ops.wand_topk(idx, "zzzunique OR spark", k=10, kernel="wand").collect()]
+         wand_ops.wand_topk(idx, "zzzunique OR spark", k=10).collect()]
     b = [(int(r["doc"]), r["score"]) for r in
-         fulltext.top_k(idx, "zzzunique OR spark", k=10).collect()]
+         fulltext.top_k(fold, "zzzunique OR spark", k=10).collect()]
     assert a == b and len(a) > 0
     # the dead term alone: empty on both paths
     assert wand_ops.wand_topk(idx, "zzzunique", k=10).count() == 0
-    assert fulltext.top_k(idx, "zzzunique", k=10).count() == 0
+    assert fulltext.top_k(fold, "zzzunique", k=10).count() == 0
 
 
 def test_build_persistent_releases_its_docs_cache(spark, documents, tmp_path):

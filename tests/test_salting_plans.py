@@ -198,7 +198,7 @@ def test_wand_without_removal_skips_cogroup(doc_index):
     from miru_spark.operators import wand as wand_ops
 
     assert doc_index.removed is None
-    out = wand_ops.wand_topk(doc_index, "spark OR join", k=10, kernel="taat")
+    out = wand_ops.wand_topk(doc_index, "spark OR join", k=10)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # (the cached build's own Arrow maps show in the in-memory relation)
     assert plan.count("MapInArrow score_parts") == 1, plan

@@ -19,7 +19,7 @@ from miru_spark.operators import wand as wand_ops
 
 @pytest.fixture(scope="module")
 def loaded(spark, documents, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("seed") / "idx")
+    d = str(tmp_path_factory.mktemp("timerange") / "idx")
     build_persistent(
         documents, d, text_col="text", dense_id_col="doc_id", capacity=128,
         wave_size=2, merge_partitions=4,
@@ -66,10 +66,14 @@ def test_timerange_prunes_scan_and_matches_unpruned(spark, loaded):
 
 
 def test_wand_timerange_pruning_matches_dataframe_path(loaded):
+    # lazy=False routes the same handle's top_k to the DataFrame fold
+    # (score_candidates), the packed kernel's independent reference
+    fold = dataclasses.replace(loaded, lazy=False)
     spec = parse_query("spark OR join", k=50, time_range=(100, 400))
-    a = _rows(wand_ops.wand_topk(loaded, spec, kernel="wand"))
-    b = _rows(fulltext.top_k(loaded, spec))
+    a = _rows(wand_ops.wand_topk(loaded, spec))
+    b = _rows(fulltext.top_k(fold, spec))
     assert a == b and len(a) > 0
     empty_spec = parse_query("spark OR join", k=10, time_range=(1 << 60, (1 << 60) + 5))
-    assert wand_ops.wand_topk(loaded, empty_spec, kernel="wand").count() == 0
+    assert wand_ops.wand_topk(loaded, empty_spec).count() == 0
+    assert fulltext.top_k(fold, empty_spec).count() == 0
 

@@ -1,5 +1,6 @@
-"""WAND / TAAT / AND kernels over packed postings must be rank- AND
-score-identical to the DataFrame query path (itself oracle-verified)."""
+"""The packed top-k kernel (AND intersection, OR dense accumulator) must be
+rank- AND score-identical to the DataFrame query path (itself
+oracle-verified)."""
 
 from __future__ import annotations
 
@@ -8,28 +9,27 @@ import pytest
 from miru_spark.filters import parse_query
 from miru_spark.operators import fulltext, wand
 
+# (query, scorer); explicit ids keep the names earlier results recorded
 CASES = [
-    ("spark", "bm25", "auto"),
-    ("dup", "bm25", "auto"),
-    ("spark AND join", "bm25", "auto"),
-    ("spark join merge", "bm25", "auto"),
-    ("spark OR vector OR dup", "bm25", "wand"),
-    ("spark OR vector OR dup", "bm25", "taat"),
-    ("merge NOT window", "bm25", "auto"),
-    ("s*", "bm25", "wand"),
-    ("s*", "bm25", "taat"),
-    ("dup AND s*", "bm25", "auto"),
-    ("spark OR join", "miru_tfidf", "auto"),
+    pytest.param("spark", "bm25", id="spark-bm25-auto"),
+    pytest.param("dup", "bm25", id="dup-bm25-auto"),
+    pytest.param("spark AND join", "bm25", id="spark AND join-bm25-auto"),
+    pytest.param("spark join merge", "bm25", id="spark join merge-bm25-auto"),
+    pytest.param("spark OR vector OR dup", "bm25", id="spark OR vector OR dup-bm25-taat"),
+    pytest.param("merge NOT window", "bm25", id="merge NOT window-bm25-auto"),
+    pytest.param("s*", "bm25", id="s*-bm25-taat"),
+    pytest.param("dup AND s*", "bm25", id="dup AND s*-bm25-auto"),
+    pytest.param("spark OR join", "miru_tfidf", id="spark OR join-miru_tfidf-auto"),
 ]
 
 
-@pytest.mark.parametrize("q,scorer,kernel", CASES)
-def test_wand_matches_dataframe_path(doc_index, q, scorer, kernel):
+@pytest.mark.parametrize("q,scorer", CASES)
+def test_wand_matches_dataframe_path(doc_index, q, scorer):
     spec = parse_query(q, k=50, scorer=scorer)
     want = fulltext.top_k(doc_index, spec).toPandas()
-    got = wand.wand_topk(doc_index, spec, kernel=kernel).toPandas()
-    assert list(got["doc"]) == list(want["doc"]), f"{q} ({kernel}) ids diverge"
-    assert list(got["score"]) == list(want["score"]), f"{q} ({kernel}) scores diverge"
+    got = wand.wand_topk(doc_index, spec).toPandas()
+    assert list(got["doc"]) == list(want["doc"]), f"{q} ids diverge"
+    assert list(got["score"]) == list(want["score"]), f"{q} scores diverge"
 
 
 def test_wand_unknown_term_empty(doc_index):
@@ -37,9 +37,9 @@ def test_wand_unknown_term_empty(doc_index):
 
 
 def test_wand_prunes(doc_index):
-    # sanity: the WAND kernel returns exactly k when more docs match
+    # sanity: the packed kernel returns exactly k when more docs match
     spec = parse_query("spark OR merge", k=7)
-    got = wand.wand_topk(doc_index, spec, kernel="wand").toPandas()
+    got = wand.wand_topk(doc_index, spec).toPandas()
     assert len(got) == 7
 
 
@@ -72,11 +72,7 @@ def test_term_in_two_clauses_matches_oracle(doc_index, loaded_index, duck, q):
     want = list(zip(want["doc"].astype("int64").tolist(), want["score"].astype("float64").tolist()))
     assert len(want) == 100, q
     for index in (doc_index, loaded_index):
-        for got in (
-            fulltext.top_k(index, spec),
-            wand.wand_topk(index, spec),
-            wand.wand_topk(index, spec, kernel="wand"),
-        ):
+        for got in (fulltext.top_k(index, spec), wand.wand_topk(index, spec)):
             assert [(int(r["doc"]), r["score"]) for r in got.collect()] == want, q
 
 
@@ -111,16 +107,17 @@ def test_part_cut_keeps_both_sides_of_a_rounding_tie(spark):
     assert wand._part_cut(scores, 0).tolist() == []
 
 
-def test_wand_kernel_keeps_what_taat_keeps_on_skewed_blocks():
-    """Block-max WAND against the exhaustive TAAT accumulator on seeded
-    random parts whose tf is mostly 1 with rare spikes, so block maxima sit
-    well below the list maxima and several lists often stand on the same
-    pivot: the per-part cut of both kernels must keep the same (doc, score)
-    set. The block-max check must bound a pivot with EVERY list positioned
-    on it; summing only the lists up to the pivot index skipped docs here."""
+def test_part_scorers_match_plain_sum_on_skewed_parts():
+    """_part_cut(_score_part(...)) for both ops and both scorers against a
+    plain-Python per-doc sum in (term, qtf, clause) order, bit for bit, on
+    seeded random parts: tf mostly 1 with rare spikes, and some terms serve
+    two clauses (scored once per clause; an AND counts them for both)."""
     import numpy as np
 
+    from miru_spark.operators.fulltext import K1, B
+
     rng = np.random.default_rng(0)
+    parts = []
     for _ in range(60):
         n = int(rng.integers(50, 1500))
         terms = []
@@ -129,21 +126,43 @@ def test_wand_kernel_keeps_what_taat_keeps_on_skewed_blocks():
             ids = np.sort(rng.choice(n, df, replace=False)).astype(np.int64)
             tfs = (1 + (rng.random(df) < 0.03) * rng.integers(1, 20, df)).astype(np.int64)
             dls = rng.integers(1, 50, df).astype(np.int64)
-            starts = np.arange(0, df, 16)
-            block_last = ids[np.minimum(starts + 15, df - 1)]
-            block_max = np.maximum.reduceat(tfs, starts)
             entries = [(1, i)] + ([(2, i + 10)] if rng.random() < 0.3 else [])
             terms.extend(
                 wand._TermCtx(f"t{i}", qtf, clause, float(3 * df), float(tfs.sum()),
-                              ids, tfs, dls, ids, block_last, block_max)
+                              ids, tfs, dls, ids)
                 for qtf, clause in entries
             )
-        k = int(rng.integers(1, 50))
+        parts.append((n, terms, int(rng.integers(1, 50))))
 
-        def kept(docs, scores):
-            keep = wand._part_cut(scores, k)
-            return sorted(zip(docs[keep].tolist(), scores[keep].tolist()))
+    def contrib(t, j, scorer, n_docs, avgdl):
+        tf = float(t.tfs[j])
+        if scorer == "miru_tfidf":
+            return (t.qtf * tf) / t.cum_tf
+        # idf is np.log of a scalar, as in _bm25_contrib
+        idf = float(np.log(1.0 + (n_docs - t.df + 0.5) / (t.df + 0.5)))
+        dl = float(t.dls[j])
+        return t.qtf * idf * (tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / 20.0)))
 
-        assert kept(*wand._kernel_wand(terms, "bm25", 3 * n, 20.0, k)) == kept(
-            *wand._kernel_taat(terms, "bm25", 3 * n, 20.0)
-        )
+    def plain(terms, op, scorer, n_docs, k):
+        sums: dict[int, float] = {}
+        clauses: dict[int, set] = {}
+        for t in terms:  # (term, qtf, clause) order, as _part_terms sorts
+            for j, d in enumerate(t.ids.tolist()):
+                sums[d] = sums.get(d, 0.0) + contrib(t, j, scorer, n_docs, 20.0)
+                clauses.setdefault(d, set()).add(t.clause)
+        if op == "and":
+            n_clauses = len({t.clause for t in terms})
+            sums = {d: s for d, s in sums.items() if len(clauses[d]) == n_clauses}
+        if len(sums) <= k:
+            return sorted(sums.items())
+        kth = sorted(sums.values(), reverse=True)[k - 1]
+        return sorted((d, s) for d, s in sums.items() if s >= kth - wand._CUT_SLACK)
+
+    for op in ("or", "and"):
+        for scorer in ("bm25", "miru_tfidf"):
+            for n, terms, k in parts:
+                n_clauses = len({t.clause for t in terms})
+                docs, scores = wand._score_part(terms, op, n_clauses, scorer, 3 * n, 20.0)
+                keep = wand._part_cut(scores, k)
+                got = sorted(zip(docs[keep].tolist(), scores[keep].tolist()))
+                assert got == plain(terms, op, scorer, 3 * n, k), (op, scorer, n, k)
