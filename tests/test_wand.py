@@ -9,27 +9,34 @@ import pytest
 from miru_spark.filters import parse_query
 from miru_spark.operators import fulltext, wand
 
-# (query, scorer); explicit ids keep the names earlier results recorded
+# (query, scorer, index fixture); explicit ids keep the names earlier
+# results recorded. The -wand ids run the packed kernel on the persisted and
+# loaded copy of the corpus, the others on the in-memory build.
 CASES = [
-    pytest.param("spark", "bm25", id="spark-bm25-auto"),
-    pytest.param("dup", "bm25", id="dup-bm25-auto"),
-    pytest.param("spark AND join", "bm25", id="spark AND join-bm25-auto"),
-    pytest.param("spark join merge", "bm25", id="spark join merge-bm25-auto"),
-    pytest.param("spark OR vector OR dup", "bm25", id="spark OR vector OR dup-bm25-taat"),
-    pytest.param("merge NOT window", "bm25", id="merge NOT window-bm25-auto"),
-    pytest.param("s*", "bm25", id="s*-bm25-taat"),
-    pytest.param("dup AND s*", "bm25", id="dup AND s*-bm25-auto"),
-    pytest.param("spark OR join", "miru_tfidf", id="spark OR join-miru_tfidf-auto"),
+    pytest.param("spark", "bm25", "doc_index", id="spark-bm25-auto"),
+    pytest.param("dup", "bm25", "doc_index", id="dup-bm25-auto"),
+    pytest.param("spark AND join", "bm25", "doc_index", id="spark AND join-bm25-auto"),
+    pytest.param("spark join merge", "bm25", "doc_index", id="spark join merge-bm25-auto"),
+    pytest.param("spark OR vector OR dup", "bm25", "loaded_index",
+                 id="spark OR vector OR dup-bm25-wand"),
+    pytest.param("spark OR vector OR dup", "bm25", "doc_index",
+                 id="spark OR vector OR dup-bm25-taat"),
+    pytest.param("merge NOT window", "bm25", "doc_index", id="merge NOT window-bm25-auto"),
+    pytest.param("s*", "bm25", "loaded_index", id="s*-bm25-wand"),
+    pytest.param("s*", "bm25", "doc_index", id="s*-bm25-taat"),
+    pytest.param("dup AND s*", "bm25", "doc_index", id="dup AND s*-bm25-auto"),
+    pytest.param("spark OR join", "miru_tfidf", "doc_index", id="spark OR join-miru_tfidf-auto"),
 ]
 
 
-@pytest.mark.parametrize("q,scorer", CASES)
-def test_wand_matches_dataframe_path(doc_index, q, scorer):
+@pytest.mark.parametrize("q,scorer,index_fixture", CASES)
+def test_wand_matches_dataframe_path(request, doc_index, q, scorer, index_fixture):
     spec = parse_query(q, k=50, scorer=scorer)
     want = fulltext.top_k(doc_index, spec).toPandas()
-    got = wand.wand_topk(doc_index, spec).toPandas()
-    assert list(got["doc"]) == list(want["doc"]), f"{q} ids diverge"
-    assert list(got["score"]) == list(want["score"]), f"{q} scores diverge"
+    index = request.getfixturevalue(index_fixture)
+    got = wand.wand_topk(index, spec).toPandas()
+    assert list(got["doc"]) == list(want["doc"]), f"{q} ({index_fixture}) ids diverge"
+    assert list(got["score"]) == list(want["score"]), f"{q} ({index_fixture}) scores diverge"
 
 
 def test_wand_unknown_term_empty(doc_index):
