@@ -30,7 +30,7 @@ persisted, so each of the two writes runs the tokenize kernel; doclens/ is
 Σtf over the forward wave just written (JVM-only, no further tokenize, no
 decode of the segments); then the manifest commits the wave. A final
 merge stage range-partitions all segments by term (the north_rule's
-repartitionByRange merge; hot terms span multiple (part) rows so the range
+range-partitioned merge; hot terms span multiple (part) rows so the range
 partitioner splits them across output files — and in-wave, one posting list
 is bounded by ``capacity``). A killed build resumes at wave granularity
 without recomputing finished waves.
@@ -43,6 +43,14 @@ relation (same term-sorted parquet, so `term IN` pruning still pushes into
 both branches), its per-term stat adjustments land in stats_delta/, and
 ``compact()`` folds deltas into the merged layout under an explicit
 largest-first posting budget — never as a side effect of a repair.
+
+Each rule of that cycle has one private function: ``_ready_manifest``
+gates remove/upsert/compact/load (ready, this ``FORMAT_VERSION``);
+``_write_merged`` writes the merged postings/stats/aux for the build's merge
+stage and ``compact``; ``_with_deltas`` unions a merged relation with its
+listed delta waves and ``_fold_stats`` folds the stats, for ``load_index``
+and ``compact``; ``_generation_dirs`` lists the compaction generations that
+a fresh build and ``compact`` sweep.
 """
 
 from __future__ import annotations
@@ -71,15 +79,34 @@ from miru_spark.session import local_frame
 # manifest-listed, per-part doc_key ranges for timeRange partition pruning,
 # generation-named compaction output). Part of the fingerprint, so an index
 # written by older code forces a clean rebuild instead of mixing schemas
-# across waves; load_index refuses older dirs outright.
+# across waves; _ready_manifest refuses older dirs outright.
 FORMAT_VERSION = 5
 
 _BASE_DIRS = {"postings": "postings", "stats": "stats", "aux": "aux"}
 
 
-def _read_manifest(index_dir: str) -> dict:
+def _ready_manifest(index_dir: str) -> tuple[dict, frozenset | None, str | None]:
+    """(manifest, stopwords, stemmer) of a built index. Refuses an index
+    whose build has not committed ``ready`` and one of another
+    ``format_version``: older layouts lack columns like packed.first_id,
+    and mixing them corrupts queries silently."""
     with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)
+        mdata = json.load(f)
+    if not mdata["stages"].get("ready"):
+        raise ValueError(f"index at {index_dir} is not ready — build (or resume) it first")
+    fp = mdata.get("fingerprint", {})
+    if fp.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has format_version={fp.get('format_version')} "
+            f"(need {FORMAT_VERSION}) — rebuild it"
+        )
+    stopwords = frozenset(fp["stopwords"].split(",")) if fp.get("stopwords") else None
+    return mdata, stopwords, fp.get("stemmer") or None
+
+
+def _generation_dirs(index_dir: str) -> list[str]:
+    """Every compaction generation on disk: postings_gN/, stats_gN/, aux_gN/."""
+    return [p for base in _BASE_DIRS for p in _glob.glob(f"{index_dir}/{base}_g*")]
 
 
 def _dirs(mdata: dict) -> dict:
@@ -106,6 +133,58 @@ def _read_committed(spark: SparkSession, index_dir: str, sub: str, waves: list[i
         .filter(F.col("wave").isin(waves))
         .drop("wave")
     )
+
+
+def _with_deltas(
+    spark: SparkSession, index_dir: str, base: str, delta_sub: str, waves: list[int],
+    optional: bool = False,
+) -> DataFrame:
+    """The merged relation ``base`` ∪ ``{delta_sub}/wave=K`` for each listed
+    K: one scan per wave, unioned in order. Delta segments share the merged
+    term-sorted layout, so `term IN` pushes into every branch. A listed
+    wave's directory must exist unless ``optional`` (aux_delta/)."""
+    out = spark.read.parquet(f"{index_dir}/{base}")
+    for k in waves:
+        p = f"{index_dir}/{delta_sub}/wave={k}"
+        if not optional or os.path.isdir(p):
+            out = out.unionByName(spark.read.parquet(p))
+    return out
+
+
+def _fold_stats(stats: DataFrame) -> DataFrame:
+    """One (term, df, cum_tf) row per term of merged stats ∪ their deltas:
+    exact integer sums; a term whose every posting was repaired away drops."""
+    return (
+        stats.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cum_tf").alias("cum_tf"))
+        .filter(F.col("df") > 0)
+    )
+
+
+def _write_merged(
+    index_dir: str, suffix: str, postings: DataFrame, stats: DataFrame,
+    aux: DataFrame | None, merge_partitions: int | None,
+) -> None:
+    """Write postings{suffix}/, stats{suffix}/ and (given aux rows)
+    aux{suffix}/: postings range-partitioned by (term, part) and sorted, so
+    each file holds one ascending term range that `term IN` prunes; stats in
+    4 files; aux by term range. Idempotent overwrites, invisible until the
+    caller's manifest commit."""
+    n_merge = merge_partitions or max(4, postings.sparkSession.sparkContext.defaultParallelism)
+    (
+        postings.repartitionByRange(n_merge, "term", "part")
+        .sortWithinPartitions("term", "part")
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/postings{suffix}")
+    )
+    stats.coalesce(4).write.mode("overwrite").parquet(f"{index_dir}/stats{suffix}")
+    if aux is not None:
+        (
+            aux.repartitionByRange(max(2, n_merge // 4), "term")
+            .sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .parquet(f"{index_dir}/aux{suffix}")
+        )
 
 
 def _write_wave(
@@ -247,9 +326,7 @@ def build_persistent(
                 p = f"{index_dir}/{sub}"
                 if os.path.isdir(p):
                     shutil.rmtree(p)
-            for p in _glob.glob(f"{index_dir}/postings_g*") + _glob.glob(
-                f"{index_dir}/stats_g*"
-            ) + _glob.glob(f"{index_dir}/aux_g*"):
+            for p in _generation_dirs(index_dir):
                 shutil.rmtree(p, ignore_errors=True)
 
         parts = sorted(r["part"] for r in docs.select("part").distinct().collect())
@@ -273,26 +350,12 @@ def build_persistent(
         # merge stage: global term-range layout + stats (idempotent overwrite)
         if not manifest.stage_done("ready") or waves_run:
             all_segments = spark.read.parquet(f"{index_dir}/segments/wave=*")
-            n_merge = merge_partitions or max(4, spark.sparkContext.defaultParallelism)
-            (
-                all_segments.repartitionByRange(n_merge, "term", "part")
-                .sortWithinPartitions("term", "part")
-                .write.mode("overwrite")
-                .parquet(f"{index_dir}/postings")
-            )
-            stats = B.term_stats(
-                all_segments.select("term", "df_part", "cum_tf_part")
-            )
-            stats.coalesce(4).write.mode("overwrite").parquet(f"{index_dir}/stats")
+            aux = None
             if aux_fields or numeric_aux_fields:
-                # single-term field postings, term-sorted for scan pruning
-                (
-                    B.aux_postings(docs, aux_fields or [], numeric_aux_fields)
-                    .repartitionByRange(max(2, n_merge // 4), "term")
-                    .sortWithinPartitions("term")
-                    .write.mode("overwrite")
-                    .parquet(f"{index_dir}/aux")
-                )
+                aux = B.aux_postings(docs, aux_fields or [], numeric_aux_fields)
+            _write_merged(
+                index_dir, "", all_segments, B.term_stats(all_segments), aux, merge_partitions
+            )
             all_lens = spark.read.parquet(f"{index_dir}/doclens/wave=*")
             row = all_lens.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -331,9 +394,7 @@ def remove_docs(spark: SparkSession, index_dir: str, doc_keys: list[int]) -> int
     directory that the next batch simply overwrites). Idempotent at read
     time (the mask is a set); a fingerprint-mismatch rebuild wipes
     ``removed/`` because a rebuilt index assigns fresh doc identities."""
-    mdata = _read_manifest(index_dir)
-    if not mdata["stages"].get("ready"):
-        raise ValueError(f"index at {index_dir} is not ready — build it first")
+    mdata, _, _ = _ready_manifest(index_dir)
     keys = local_frame(spark, [(int(k),) for k in doc_keys], "doc_key long")
     # tombstones are INSTANCES (part, doc_id, doc_key), resolved against the
     # committed doc-length relation: after a version repair the same doc_key
@@ -394,16 +455,10 @@ def upsert_docs(
     inserts (the reference's set-with-no-prior). Repair batches are expected
     ≪ capacity (the reference repairs doc-at-a-time); the old-instance set is
     collected driver-side to pin the pre-repair instance listing."""
-    mdata = _read_manifest(index_dir)
-    if not mdata["stages"].get("ready"):
-        raise ValueError(f"index at {index_dir} is not ready — build it first")
+    mdata, stopwords, stemmer = _ready_manifest(index_dir)
     fp = mdata["fingerprint"]
-    if fp.get("format_version") != FORMAT_VERSION:
-        raise ValueError(f"index format {fp.get('format_version')} != {FORMAT_VERSION}")
     text_col = fp["text_col"]
     capacity = int(fp["capacity"])
-    stopwords = frozenset(fp["stopwords"].split(",")) if fp.get("stopwords") else None
-    stemmer = fp.get("stemmer") or None
     aux_fields = [c for c in fp.get("aux", "").split(",") if c]
     num_aux = [c for c in fp.get("num_aux", "").split(",") if c]
     key_col = doc_key_col or fp["id"]
@@ -488,10 +543,7 @@ def upsert_docs(
     # diverges from a fresh build. Plain remove_docs deliberately does NOT
     # adjust stats (the reference keeps global cells; the removal oracle
     # models that); repair must, because the replacement re-contributes.
-    wave_seg = spark.read.parquet(f"{index_dir}/segments/wave={wave_id}")
-    delta_stats = wave_seg.groupBy("term").agg(
-        F.sum("df_part").alias("df"), F.sum("cum_tf_part").alias("cum_tf")
-    )
+    delta_stats = B.term_stats(spark.read.parquet(f"{index_dir}/segments/wave={wave_id}"))
     if old_inst:
         old_parts = sorted({r["part"] for r in old_inst})
         old_df = local_frame(
@@ -588,29 +640,22 @@ def compact(
     the remaining delta list, then the old generation is deleted
     best-effort. A crash anywhere leaves the old manifest pointing at the
     old, untouched generation; orphan staging dirs are swept on retry."""
-    mdata = _read_manifest(index_dir)
-    if not mdata["stages"].get("ready"):
-        raise ValueError(f"index at {index_dir} is not ready — build it first")
-    fp = mdata["fingerprint"]
-    if fp.get("format_version") != FORMAT_VERSION:
-        raise ValueError(f"index format {fp.get('format_version')} != {FORMAT_VERSION}")
+    mdata, _, _ = _ready_manifest(index_dir)
     deltas = _delta_waves(mdata)
     if not deltas:
         return {"merged": [], "remaining": [], "gen": mdata.get("gen", 0)}
     dirs = _dirs(mdata)
 
     # sweep staging orphans from crashed compactions (dirs not pointed at)
-    live = {dirs[k] for k in dirs}
-    for p in _glob.glob(f"{index_dir}/postings_g*") + _glob.glob(
-        f"{index_dir}/stats_g*"
-    ) + _glob.glob(f"{index_dir}/aux_g*"):
+    live = set(dirs.values())
+    for p in _generation_dirs(index_dir):
         if os.path.basename(p) not in live:
             shutil.rmtree(p, ignore_errors=True)
     # also reclaim the un-suffixed generation-0 dirs: a crash between the
     # FIRST compaction's manifest commit and its old-dir delete leaves
     # base postings/stats/aux orphaned, and the generation glob above
     # never matches them (r6 ADVICE — disk leak only, reads stay correct)
-    for base in ("postings", "stats", "aux"):
+    for base in _BASE_DIRS:
         if dirs.get(base, base) != base and os.path.isdir(f"{index_dir}/{base}"):
             shutil.rmtree(f"{index_dir}/{base}", ignore_errors=True)
 
@@ -630,58 +675,26 @@ def compact(
     remaining = [k for k in deltas if k not in selected]
 
     gen = int(mdata.get("gen", 0)) + 1
-    n_merge = merge_partitions or max(4, spark.sparkContext.defaultParallelism)
-
-    new_postings = spark.read.parquet(f"{index_dir}/{dirs['postings']}")
-    for k in selected:
-        new_postings = new_postings.unionByName(
-            spark.read.parquet(f"{index_dir}/segments/wave={k}")
-        )
-    (
-        new_postings.repartitionByRange(n_merge, "term", "part")
-        .sortWithinPartitions("term", "part")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/postings_g{gen}")
-    )
-
-    new_stats = spark.read.parquet(f"{index_dir}/{dirs['stats']}")
-    for k in selected:
-        new_stats = new_stats.unionByName(
-            spark.read.parquet(f"{index_dir}/stats_delta/wave={k}")
-        )
-    (
-        new_stats.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cum_tf").alias("cum_tf"))
-        .filter(F.col("df") > 0)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/stats_g{gen}")
-    )
-
     new_dirs = {"postings": f"postings_g{gen}", "stats": f"stats_g{gen}", "aux": dirs["aux"]}
-    has_aux = os.path.isdir(f"{index_dir}/{dirs['aux']}")
-    if has_aux:
-        new_aux = spark.read.parquet(f"{index_dir}/{dirs['aux']}")
-        for k in selected:
-            p = f"{index_dir}/aux_delta/wave={k}"
-            if os.path.isdir(p):
-                new_aux = new_aux.unionByName(spark.read.parquet(p))
+    new_aux = None
+    if os.path.isdir(f"{index_dir}/{dirs['aux']}"):
+        new_aux = _with_deltas(spark, index_dir, dirs["aux"], "aux_delta", selected, optional=True)
         # drop tombstoned instances' ghost aux rows (ADVICE r5): they are
         # masked at query time anyway — compaction reclaims the space
         batches = mdata.get("removal_batches", [])
         if batches:
             rm = _read_removed(spark, index_dir, batches)
             new_aux = new_aux.join(rm, ["part", "doc_id"], "left_anti")
-        (
-            new_aux.repartitionByRange(max(2, n_merge // 4), "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/aux_g{gen}")
-        )
         new_dirs["aux"] = f"aux_g{gen}"
+    _write_merged(
+        index_dir, f"_g{gen}",
+        _with_deltas(spark, index_dir, dirs["postings"], "segments", selected),
+        _fold_stats(_with_deltas(spark, index_dir, dirs["stats"], "stats_delta", selected)),
+        new_aux, merge_partitions,
+    )
 
     # THE commit point
-    old_dirs = [dirs["postings"], dirs["stats"]] + ([dirs["aux"]] if has_aux else [])
+    old_dirs = [d for k, d in dirs.items() if new_dirs[k] != d]
     mdata["dirs"] = new_dirs
     mdata["gen"] = gen
     mdata["delta_waves"] = remaining
@@ -715,48 +728,24 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
     mutation never started. Delta waves (un-compacted repairs) union into
     the postings/stats/aux relations; `term IN` pruning pushes into every
     branch because delta segments share the term-sorted parquet layout."""
-    mdata = _read_manifest(index_dir)
-    if not mdata["stages"].get("ready"):
-        raise ValueError(f"index at {index_dir} is not ready (resume the build)")
-    fp = mdata.get("fingerprint", {})
-    if fp.get("format_version") != FORMAT_VERSION:
-        raise ValueError(
-            f"index at {index_dir} has format_version={fp.get('format_version')} "
-            f"(need {FORMAT_VERSION}) — rebuild it (older layouts lack columns "
-            f"like packed.first_id; mixing them corrupts queries silently)"
-        )
+    mdata, stopwords, stemmer = _ready_manifest(index_dir)
     info = mdata.get("stage_info", {}).get("ready", {})
     committed = _committed_waves(mdata)
     deltas = _delta_waves(mdata)
     dirs = _dirs(mdata)
 
-    packed = spark.read.parquet(f"{index_dir}/{dirs['postings']}")
-    for k in deltas:
-        packed = packed.unionByName(spark.read.parquet(f"{index_dir}/segments/wave={k}"))
-
-    stats = spark.read.parquet(f"{index_dir}/{dirs['stats']}")
+    packed = _with_deltas(spark, index_dir, dirs["postings"], "segments", deltas)
+    stats = _with_deltas(spark, index_dir, dirs["stats"], "stats_delta", deltas)
     if deltas:
-        for k in deltas:
-            stats = stats.unionByName(
-                spark.read.parquet(f"{index_dir}/stats_delta/wave={k}")
-            )
         # term is the grouping key, so query-term predicates (IN / LIKE)
         # still push below this aggregate into every parquet branch
-        stats = (
-            stats.groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cum_tf").alias("cum_tf"))
-            .filter(F.col("df") > 0)
-        )
+        stats = _fold_stats(stats)
 
     lens = _read_committed(spark, index_dir, "doclens", committed)
 
     aux = None
     if os.path.isdir(os.path.join(index_dir, dirs["aux"])):
-        aux = spark.read.parquet(f"{index_dir}/{dirs['aux']}")
-        for k in deltas:
-            p = f"{index_dir}/aux_delta/wave={k}"
-            if os.path.isdir(p):
-                aux = aux.unionByName(spark.read.parquet(p))
+        aux = _with_deltas(spark, index_dir, dirs["aux"], "aux_delta", deltas, optional=True)
     # every committed wave wrote forward/, so the committed glob is complete
     forward = _read_committed(spark, index_dir, "forward", committed)
     removed = None
@@ -784,9 +773,7 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
         aux=aux,
         forward=forward,
         removed=removed,
-        stopwords=(
-            frozenset(fp["stopwords"].split(",")) if fp.get("stopwords") else None
-        ),
-        stemmer=fp.get("stemmer") or None,
+        stopwords=stopwords,
+        stemmer=stemmer,
         part_ranges=part_ranges or None,
     )

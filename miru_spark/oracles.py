@@ -303,24 +303,8 @@ FROM dl
 # Context-operator oracles (events / lineitem) — SURVEY.md §2.5
 # ---------------------------------------------------------------------------
 
-def distinct_values_sql(table: str, field: str) -> str:
-    return f"SELECT DISTINCT {field} AS value FROM {table}"
-
-
-def uniques_sql(table: str, field: str) -> str:
-    return f"SELECT count(DISTINCT {field}) AS n_unique FROM {table}"
-
-
 def distinct_count_sql(table: str, field: str, where: str) -> str:
     return f"SELECT count(DISTINCT {field}) AS n_distinct FROM {table} WHERE {where}"
-
-
-def aggregate_counts_sql(table: str, group_field: str, ts_col: str) -> str:
-    return f"""
-SELECT {group_field} AS group_value, count(*) AS n,
-       min({ts_col}) AS oldest_ts, max({ts_col}) AS latest_ts
-FROM {table} GROUP BY 1
-"""
 
 
 def waveform_sql(table: str, ts_col: str, group_field: str, bucket: str = "hour") -> str:

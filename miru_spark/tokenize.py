@@ -10,18 +10,14 @@ matches the reference's multiTermCardinality fields
 
 The hot path is a pure Catalyst expression (JVM-side, whole-stage codegen) —
 NOT a UDF. The same spec is expressible in DuckDB SQL (``duckdb_tokens_sql``)
-so the driver's oracle tokenizes identically, and in pandas
-(``tokenize_pandas``) for the brute-force BM25 oracle in tests.
-
-A vectorized Arrow variant with optional camelCase/snake_case sub-splitting
-(``tokens_udf``) exists for code-aware indexing; it is off the default path.
+so the driver's oracle tokenizes identically, and in Python
+(``tokenize_py``) for query-side analysis and the tests.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -76,25 +72,6 @@ def tokenize_py(
     if stopwords:
         toks = [t for t in toks if t not in stopwords]
     return toks
-
-
-def tokenize_pandas(texts: pd.Series, sub_split_camel: bool = False) -> pd.Series:
-    if sub_split_camel:
-        texts = texts.str.replace(_CAMEL, " ", regex=True)
-    return texts.str.lower().str.split(TOKEN_SPLIT_RE, regex=True).map(
-        lambda ts: [t for t in ts if t] if isinstance(ts, list) else []
-    )
-
-
-def tokens_udf(sub_split_camel: bool = True):
-    """Arrow-vectorized tokenizer with camelCase sub-splitting (code-aware)."""
-    from pyspark.sql.types import ArrayType, StringType
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(texts: pd.Series) -> pd.Series:
-        return tokenize_pandas(texts, sub_split_camel=sub_split_camel)
-
-    return _tok
 
 
 def content_sha_col(text: Column | str) -> Column:

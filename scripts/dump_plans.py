@@ -55,10 +55,12 @@ def main() -> None:
 
     sections: list[tuple[str, str, object]] = [
         (
-            "BM25 AND (flat DataFrame path, loaded index)",
-            "`term IN (...)` reaches the parquet scan (PushedFilters); the "
-            "only join is the broadcast query-term relation (stats folded "
-            "in); ONE groupBy = one shuffle of term-pruned postings only.",
+            "BM25 AND (top_k on a loaded index: the packed top-k kernel)",
+            "`term IN (...)` reaches the parquet scan (PushedFilters); a "
+            "loaded index's flat top_k runs wand.packed_topk -> ONE "
+            "mapInArrow kernel (decode, rarest-first intersection, exact "
+            "scores, per-part cut) -> JVM round + TakeOrdered; no join, no "
+            "aggregate, no exchange.",
             fulltext.top_k(idx, "spark AND join", k=100),
         ),
         (

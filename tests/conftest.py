@@ -102,3 +102,31 @@ def check_wave_artifacts(spark):
         return n_lens
 
     return check
+
+
+@pytest.fixture(scope="session")
+def check_term_ranges():
+    """check(parquet_dir): the merged term-range layout — each file's rows
+    are sorted by term, and the files' [min, max] term ranges (from the
+    footer statistics) ascend in file order. Returns the number of
+    non-empty files checked."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def check(parquet_dir: str) -> int:
+        ranges = []
+        for f in sorted(glob.glob(f"{parquet_dir}/part-*.parquet")):
+            meta = pq.ParquetFile(f).metadata
+            if meta.num_rows == 0:
+                continue
+            col = meta.schema.to_arrow_schema().get_field_index("term")
+            stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
+            ranges.append((f, min(s.min for s in stats), max(s.max for s in stats)))
+            terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+            assert terms == sorted(terms), f"{f}: rows not sorted by term"
+        for (f0, _, hi), (f1, lo, _) in zip(ranges, ranges[1:]):
+            assert hi <= lo, f"{f0} ends at {hi!r} after {f1} starts at {lo!r}"
+        return len(ranges)
+
+    return check

@@ -14,11 +14,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from miru_spark.index_store import (
+    FORMAT_VERSION,
     build_persistent,
     compact,
     load_index,
@@ -221,3 +224,47 @@ def test_remove_after_repair_and_compact(spark, documents, repaired_dir):
     assert fulltext.top_k(idx, "zzzdelta", k=20).filter(
         F.col("doc") == victim
     ).count() == 0
+
+
+def test_compacted_postings_are_term_ranges(spark, repaired_dir, check_term_ranges):
+    """compact() writes the build's merged layout: each postings_gN/ file is
+    term-sorted, the files' term ranges ascend, and a loaded compacted
+    handle still pushes the query terms into the parquet scan."""
+    d, _ = repaired_dir
+    compact(spark, d)  # a no-op once the compaction test above has run
+    with open(os.path.join(d, "manifest.json")) as f:
+        postings = json.load(f)["dirs"]["postings"]
+    assert postings.startswith("postings_g")
+    assert check_term_ranges(os.path.join(d, postings)) >= 2
+    idx = load_index(spark, d)
+    plan = fulltext.top_k(idx, "spark AND join", k=10)._jdf.queryExecution().toString()
+    pushed = [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if "term" in m]
+    assert any("In(term" in p or "EqualTo(term" in p for p in pushed), pushed
+
+
+@pytest.mark.parametrize("defect", ["not_ready", "old_format"])
+@pytest.mark.parametrize("entry", ["remove_docs", "upsert_docs", "compact", "load_index"])
+def test_manifest_gate_refuses(spark, documents, repaired_dir, tmp_path, entry, defect):
+    """Every entry point into a built index refuses an unfinished build and
+    an index of another format_version, before it reads or writes anything."""
+    d = str(tmp_path / "idx")
+    shutil.copytree(repaired_dir[0], d)
+    path = os.path.join(d, "manifest.json")
+    with open(path) as f:
+        m = json.load(f)
+    if defect == "not_ready":
+        del m["stages"]["ready"]
+    else:
+        m["fingerprint"]["format_version"] = FORMAT_VERSION - 1
+    with open(path, "w") as f:
+        json.dump(m, f)
+    call = {
+        "remove_docs": lambda: remove_docs(spark, d, [0]),
+        "upsert_docs": lambda: upsert_docs(spark, d, documents.limit(1)),
+        "compact": lambda: compact(spark, d),
+        "load_index": lambda: load_index(spark, d),
+    }[entry]
+    before = _snapshot(d, "")
+    with pytest.raises(ValueError):
+        call()
+    assert _snapshot(d, "") == before

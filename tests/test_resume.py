@@ -99,6 +99,13 @@ def test_loaded_index_term_pushdown(spark, documents, built_dirs):
     assert any("In(term" in p or "EqualTo(term" in p for p in pushed), pushed
 
 
+def test_merged_postings_are_term_ranges(built_dirs, check_term_ranges):
+    # the merge stage's layout: per-file term order + ascending file ranges,
+    # which the `term IN` pushdown above relies on to prune files
+    clean_dir, _, _ = built_dirs
+    assert check_term_ranges(f"{clean_dir}/postings") >= 2
+
+
 def test_manifest_lineage_counters(documents, built_dirs):
     clean_dir, _, _ = built_dirs
     with open(os.path.join(clean_dir, "manifest.json")) as f:
