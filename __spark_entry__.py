@@ -332,17 +332,21 @@ def _multimodal_decode_result(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _loaded_index(spark: SparkSession, sf_dir: str):
     """A PERSISTED index built via index_store.build_persistent and reopened
     with load_index — the lazy/loaded query path (term-pruned packed decode,
-    metadata first/latest, forward-index gather). Resumable: a rerun over
-    the same fingerprint skips completed waves."""
+    metadata first/latest, forward-index gather). The index lives in a
+    directory of this process, removed at exit, so it is always built by
+    the code that queries it."""
     key = f"{id(spark)}:{sf_dir}:loaded"
     if key not in _INDEX_CACHE:
+        import atexit
+        import shutil
         import tempfile
 
         from miru_spark.index_store import build_persistent, load_index
 
         _ship_package(spark)
         tag = os.path.basename(sf_dir.rstrip("/"))
-        idx_dir = os.path.join(tempfile.gettempdir(), f"miru_idx_{tag}")
+        idx_dir = tempfile.mkdtemp(prefix=f"miru_idx_{tag}_")
+        atexit.register(shutil.rmtree, idx_dir, True)
         build_persistent(
             _docs(spark, sf_dir),
             idx_dir,

@@ -12,8 +12,16 @@ Layout under ``index_dir``:
                              query-time `term IN (...)` prunes row groups)
     postings/                merged term-range layout (compaction bumps a
                              generation: postings_gN/, tracked in manifest)
-    stats/                   global (term, df, cum_tf); repair deltas live
-                             in stats_delta/wave=K and fold at load
+    stats/                   global (term, df, cum_tf) as 4 ascending term
+                             ranges, each file sorted by term (stats_gN/
+                             after compaction); repair deltas live in
+                             stats_delta/wave=K. ``load_index`` records
+                             these directories and reads none of them:
+                             the query path's term and prefix lookups read
+                             and fold them on the driver with pyarrow
+                             (fulltext.term_stats), footer term ranges
+                             pruning the files. Old unsorted stats answer
+                             the same, only without the pruning.
     doclens/wave=K/          (part, doc_id, doc_key, dl, content_sha)
     forward/wave=K/          forward index (part, doc_id, term, tf) — the
                              reference's activity/row index
@@ -167,9 +175,10 @@ def _write_merged(
 ) -> None:
     """Write postings{suffix}/, stats{suffix}/ and (given aux rows)
     aux{suffix}/: postings range-partitioned by (term, part) and sorted, so
-    each file holds one ascending term range that `term IN` prunes; stats in
-    4 files; aux by term range. Idempotent overwrites, invisible until the
-    caller's manifest commit."""
+    each file holds one ascending term range that `term IN` prunes; stats
+    as 4 sorted term ranges, so a driver-side lookup opens only the files
+    whose range covers its terms; aux by term range. Idempotent overwrites,
+    invisible until the caller's manifest commit."""
     n_merge = merge_partitions or max(4, postings.sparkSession.sparkContext.defaultParallelism)
     (
         postings.repartitionByRange(n_merge, "term", "part")
@@ -177,7 +186,6 @@ def _write_merged(
         .write.mode("overwrite")
         .parquet(f"{index_dir}/postings{suffix}")
     )
-    stats.coalesce(4).write.mode("overwrite").parquet(f"{index_dir}/stats{suffix}")
     if aux is not None:
         (
             aux.repartitionByRange(max(2, n_merge // 4), "term")
@@ -185,6 +193,14 @@ def _write_merged(
             .write.mode("overwrite")
             .parquet(f"{index_dir}/aux{suffix}")
         )
+    # last: its range sample must not shift the RDD-id-seeded split points
+    # of the postings and aux written above
+    (
+        stats.repartitionByRange(4, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/stats{suffix}")
+    )
 
 
 def _write_wave(
@@ -735,10 +751,13 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
     dirs = _dirs(mdata)
 
     packed = _with_deltas(spark, index_dir, dirs["postings"], "segments", deltas)
+    # the query path's term and prefix lookups read these directories on
+    # the driver (fulltext.term_stats); the relation serves every other reader
+    stats_dirs = [f"{index_dir}/{dirs['stats']}"] + [
+        f"{index_dir}/stats_delta/wave={k}" for k in deltas
+    ]
     stats = _with_deltas(spark, index_dir, dirs["stats"], "stats_delta", deltas)
     if deltas:
-        # term is the grouping key, so query-term predicates (IN / LIKE)
-        # still push below this aggregate into every parquet branch
         stats = _fold_stats(stats)
 
     lens = _read_committed(spark, index_dir, "doclens", committed)
@@ -767,6 +786,7 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
         flat=B.unpack_postings(packed),
         packed=packed,
         stats=stats,
+        stats_dirs=stats_dirs,
         lens=lens.select("part", "doc_id", "doc_key", "dl"),
         corpus=B.CorpusStats(n_docs=int(info["n_docs"]), avgdl=float(info["avgdl"])),
         lazy=True,

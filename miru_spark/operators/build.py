@@ -788,6 +788,13 @@ class IndexHandle:
     # fulltext.term_stats / fulltext._expand_prefix.
     term_stats_cache: dict | None = None
     prefix_cache: dict | None = None
+    # a loaded index's committed stats directories (the merged stats*/ and
+    # each listed stats_delta/wave=K): term_stats and _expand_prefix read
+    # and fold them on the driver, with no Spark job. ``stats_dataset`` is
+    # the pyarrow dataset over their files, opened at the first lookup.
+    # None on an in-memory build, whose lookups filter ``stats``.
+    stats_dirs: list | None = None
+    stats_dataset: object | None = None
     # every relation this build cached/persisted — freed by unpersist() so
     # repeated builds in one session don't accumulate BlockManager entries
     cached: list = dataclass_field(default_factory=list)

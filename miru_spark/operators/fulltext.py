@@ -19,6 +19,13 @@ results are bit-stable across partition counts and match the DuckDB oracle's
 are rounded to 6 decimals (``F.round``, HALF_UP) and the rounded value is
 the sort key.
 
+Planning runs no Spark job on a loaded index: the term dictionary — each
+query term's (df, cum_tf) and each prefix clause's expansion — is read on
+the driver from the stats files (pyarrow, pruned by their footer term
+ranges; delta waves folded as at load) and memoized per handle
+(``term_stats`` / ``_expand_prefix``). A prefix is literal: the term range
+[prefix, upper_exclusive(prefix)), not a SQL ``LIKE``.
+
 Plan shape at scale: the only big-table touch is the postings scan with the
 query terms pushed down (`term IN (...)` reaches the parquet reader). A
 LOADED index's flat BM25 / tf-idf query without constraint or authz masks
@@ -37,6 +44,9 @@ it runs no Python worker. The winners→docs gather join happens after LIMIT
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,6 +60,7 @@ from miru_spark.filters import (
 )
 from miru_spark.operators.build import IndexHandle
 from miru_spark.session import local_frame
+from miru_spark.termcomp import prefix_range
 
 K1 = 1.2
 B = 0.75
@@ -147,20 +158,61 @@ def _decode_width(index: IndexHandle, terms: list[str]) -> int | None:
 
 _STATS_CACHE_MAX = 1_000_000
 _PREFIX_CACHE_MAX = 16_384
+_STATS_SCHEMA = pa.schema([("term", pa.string()), ("df", pa.int64()), ("cum_tf", pa.int64())])
+
+
+def _read_stats(
+    index: IndexHandle, flt: pc.Expression, limit: int | None = None
+) -> list[tuple[str, int, int]]:
+    """(term, df, cum_tf) rows of a loaded handle's stats files that match
+    the pyarrow filter ``flt``, ascending by term and cut to the first
+    ``limit``, read on the driver: no Spark job. Delta-wave rows fold as
+    index_store._fold_stats folds them: exact integer sums per term, terms
+    with df ≤ 0 dropped. The first lookup reads every file's footer once;
+    later ones open only the files whose row-group term ranges the filter
+    can match."""
+    dset = index.stats_dataset
+    if dset is None:
+        files = [f for d in index.stats_dirs for f in ds.dataset(d, format="parquet").files]
+        dset = ds.dataset(files, schema=_STATS_SCHEMA, format="parquet")
+        for frag in dset.get_fragments():
+            frag.ensure_complete_metadata()
+        index.stats_dataset = dset
+    # one thread: a lookup reads a few row groups, and the query's CPU
+    # stays on the calling thread
+    t = (
+        dset.to_table(filter=flt, use_threads=False)
+        .group_by("term", use_threads=False)
+        .aggregate([("df", "sum"), ("cum_tf", "sum")])
+        .filter(pc.field("df_sum") > 0)
+        .sort_by("term")
+        .slice(0, limit)
+    )
+    return list(zip(*(t[c].to_pylist() for c in ("term", "df_sum", "cum_tf_sum"))))
+
+
+def _term_in(terms: list[str]) -> pc.Expression:
+    """OR of ``term == t``: footer statistics prune it, where pyarrow cannot
+    prune an ``is_in``. Balanced, so a long term list nests shallowly."""
+    if len(terms) == 1:
+        return pc.field("term") == terms[0]
+    half = len(terms) // 2
+    return _term_in(terms[:half]) | _term_in(terms[half:])
 
 
 def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int]]:
-    """Per-handle memoized (df, cum_tf) lookups over the stats relation.
+    """Per-handle memoized (df, cum_tf) lookups of the term dictionary.
 
     The reference serves term cardinalities from the open partition's
     resident field index (MiruFieldIndex.multiGet / getGlobalCardinality —
     m-plugin/index/MiruFieldIndex.java:18-42 — memory/LAB-backed, never a
     re-scan per query); an IndexHandle is an immutable snapshot of one
     index generation (upsert/compact produce a NEW handle via load_index),
-    so memoization cannot go stale. Cold terms fetch in ONE
-    term-pruned stats job; warm terms — including absent ones, memoized as
-    None — cost no job at all, which removes the fixed per-query stats scan
-    from the steady-state latency (BENCH/p95 protocol)."""
+    so memoization cannot go stale. On a loaded index cold terms are read
+    on the driver from the stats files (``_read_stats`` over ``_term_in``),
+    so no lookup runs a Spark job; an in-memory build filters its cached
+    ``stats`` relation in one job. Warm terms — including absent ones,
+    memoized as None — cost nothing."""
     cache = index.term_stats_cache
     if cache is None:
         cache = index.term_stats_cache = {}
@@ -171,10 +223,15 @@ def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int
         cache.clear()
     missing = [t for t in terms if t not in cache]
     if missing:
-        fetched = {
-            r["term"]: (r["df"], r["cum_tf"])
-            for r in index.stats.filter(F.col("term").isin(missing)).collect()
-        }
+        if index.stats_dirs is not None:
+            rows = _read_stats(index, _term_in(missing))
+        else:
+            rows = (
+                index.stats.filter(F.col("term").isin(missing))
+                .select("term", "df", "cum_tf")
+                .collect()
+            )
+        fetched = {t: (df, cum_tf) for t, df, cum_tf in rows}
         for t in missing:
             cache[t] = fetched.get(t)
     return {t: cache[t] for t in terms if cache.get(t) is not None}
@@ -183,8 +240,11 @@ def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int
 def _expand_prefix(index: IndexHandle, prefix: str, max_expansion: int) -> list[str]:
     """Memoized lexicographic dictionary range scan for one prefix clause,
     capped at max_expansion (MiruAggregateUtil.java:826-839 +
-    MiruTermComposer.makeUpperExclusive). Same snapshot argument as
-    term_stats — a handle's dictionary never changes under it."""
+    MiruTermComposer.makeUpperExclusive): the terms in
+    [prefix, upper_exclusive(prefix)), so the prefix is literal. The
+    expanded terms' (df, cum_tf) seed the term_stats memo, so scoring them
+    needs no second lookup. Same snapshot argument as term_stats — a
+    handle's dictionary never changes under it."""
     cache = index.prefix_cache
     if cache is None:
         cache = index.prefix_cache = {}
@@ -193,14 +253,21 @@ def _expand_prefix(index: IndexHandle, prefix: str, max_expansion: int) -> list[
     if hit is None:
         if len(cache) > _PREFIX_CACHE_MAX:
             cache.clear()
-        hit = cache[key] = [
-            r["term"]
-            for r in index.stats.filter(F.col("term").like(prefix + "%"))
-            .select("term")
-            .orderBy("term")
-            .limit(max_expansion)
-            .collect()
-        ]
+        if index.stats_dirs is not None:
+            rows = _read_stats(index, prefix_range(pc.field("term"), prefix), max_expansion)
+        else:
+            rows = (
+                index.stats.filter(prefix_range(F.col("term"), prefix))
+                .select("term", "df", "cum_tf")
+                .orderBy("term")
+                .limit(max_expansion)
+                .collect()
+            )
+        if index.term_stats_cache is None:
+            index.term_stats_cache = {}
+        for t, df, cum_tf in rows:
+            index.term_stats_cache[t] = (df, cum_tf)
+        hit = cache[key] = [t for t, _, _ in rows]
     return hit
 
 
@@ -236,7 +303,7 @@ def expand_negatives(index: IndexHandle, spec: QuerySpec) -> list[str]:
 def _query_relation(index: IndexHandle, expanded: list[tuple[str, int, int]]):
     """ONE broadcast relation (term, qtf, clause, df, cum_tf) for the scoring
     join: the ≤max_expansion per-term stats rows come from the per-handle
-    term_stats memo (one term-pruned stats job on cold terms, none warm) and
+    term_stats memo (a driver-side read on a loaded index's cold terms) and
     fold into the query-term table, so the hot path pays a single broadcast
     join instead of two. The table is built on the driver as an Arrow
     ``LocalRelation`` (``local_frame``): the broadcast's build side is a
@@ -362,7 +429,7 @@ def leaf_doc_set(index: IndexHandle, leaf: Leaf, max_expansion: int = 100) -> Da
             )
         composite = f"{leaf.field}:{leaf.term}"
         pred = (
-            F.col("term").like(composite + "%")
+            prefix_range(F.col("term"), composite)
             if leaf.prefix
             else F.col("term") == composite
         )
@@ -587,7 +654,7 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
 
     # resolve every leaf to a predicate over the scan's `term` column;
     # content terms are collected so the scan predicate is ONE pushable
-    # `term IN (...)`, aux predicates stay as =/LIKE (StartsWith pushes too)
+    # `term IN (...)`, aux predicates stay as = / prefix ranges (both push)
     content_terms: set[str] = set()
     preds: list[F.Column] = []
     aux_preds: list[F.Column] = []
@@ -603,7 +670,7 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
             else:
                 composite = f"{lf.field}:{lf.term}"
                 p = (
-                    F.col("term").like(composite + "%")
+                    prefix_range(F.col("term"), composite)
                     if lf.prefix
                     else F.col("term") == composite
                 )

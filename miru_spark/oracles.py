@@ -22,6 +22,11 @@ K1 = 1.2
 B = 0.75
 
 
+def _lit(s: str) -> str:
+    """``s`` as a SQL string literal (tokens may hold a quote)."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def _q_cte(spec: QuerySpec, max_expansion: int) -> str:
     """Query-term table (term, qtf, clause), expanding prefix clauses from
     the term dictionary exactly like the engine does."""
@@ -30,11 +35,11 @@ def _q_cte(spec: QuerySpec, max_expansion: int) -> str:
         if cl.prefix:
             parts.append(
                 f"SELECT term, {cl.qtf} AS qtf, {cid} AS clause FROM "
-                f"(SELECT term FROM stats WHERE term LIKE '{cl.term}%' "
+                f"(SELECT term FROM stats WHERE starts_with(term, {_lit(cl.term)}) "
                 f"ORDER BY term LIMIT {max_expansion})"
             )
         else:
-            parts.append(f"SELECT '{cl.term}' AS term, {cl.qtf} AS qtf, {cid} AS clause")
+            parts.append(f"SELECT {_lit(cl.term)} AS term, {cl.qtf} AS qtf, {cid} AS clause")
     return " UNION ALL ".join(parts)
 
 
@@ -44,9 +49,9 @@ def _neg_pred(spec: QuerySpec) -> str:
     conds = []
     for cl in spec.negative:
         if cl.prefix:
-            conds.append(f"term LIKE '{cl.term}%'")
+            conds.append(f"starts_with(term, {_lit(cl.term)})")
         else:
-            conds.append(f"term = '{cl.term}'")
+            conds.append(f"term = {_lit(cl.term)}")
     return (
         "AND doc_id NOT IN (SELECT doc_id FROM tf WHERE " + " OR ".join(conds) + ")"
     )
@@ -125,15 +130,19 @@ def _leaf_set_sql(leaf: Leaf, table: str, id_col: str, max_exp: int) -> str:
                 f"WHERE {leaf.field} BETWEEN {int(lo)} AND {int(hi)}"
             )
         col = f"lower(CAST({leaf.field} AS VARCHAR))"
-        pred = f"{col} LIKE '{leaf.term}%'" if leaf.prefix else f"{col} = '{leaf.term}'"
+        pred = (
+            f"starts_with({col}, {_lit(leaf.term)})"
+            if leaf.prefix
+            else f"{col} = {_lit(leaf.term)}"
+        )
         return f"SELECT {id_col} AS doc_id FROM {table} WHERE {pred}"
     if leaf.prefix:
         return (
             "SELECT DISTINCT doc_id FROM tf WHERE term IN "
-            f"(SELECT term FROM (SELECT term FROM stats WHERE term LIKE '{leaf.term}%' "
+            f"(SELECT term FROM (SELECT term FROM stats WHERE starts_with(term, {_lit(leaf.term)}) "
             f"ORDER BY term LIMIT {max_exp}))"
         )
-    return f"SELECT DISTINCT doc_id FROM tf WHERE term = '{leaf.term}'"
+    return f"SELECT DISTINCT doc_id FROM tf WHERE term = {_lit(leaf.term)}"
 
 
 def _tree_set_sql(node, table: str, id_col: str, max_exp: int) -> str:
@@ -196,11 +205,11 @@ def filtered_topk_sql(
             if pfx:
                 q_parts.append(
                     f"SELECT term, {qtf} AS qtf, {cid} AS clause FROM "
-                    f"(SELECT term FROM stats WHERE term LIKE '{t}%' "
+                    f"(SELECT term FROM stats WHERE starts_with(term, {_lit(t)}) "
                     f"ORDER BY term LIMIT {spec.max_expansion})"
                 )
             else:
-                q_parts.append(f"SELECT '{t}' AS term, {qtf} AS qtf, {cid} AS clause")
+                q_parts.append(f"SELECT {_lit(t)} AS term, {qtf} AS qtf, {cid} AS clause")
         q_cte = " UNION ALL ".join(q_parts) if q_parts else "SELECT NULL AS term, 0 AS qtf, 0 AS clause WHERE FALSE"
     else:
         # flat spec routed here because of time_range/constraints: candidate

@@ -15,6 +15,11 @@ engine indexes — lengths, counts, ids, epoch times — is nonnegative).
 
 Both sides of the gate share the encoding: ``numeric_composite_col`` runs
 JVM-side at index build, ``numeric_composite_py`` composes query bounds.
+
+Prefix clauses scan the same way: ``prefix_range`` is the term range
+[prefix, ``upper_exclusive(prefix)``), so a prefix is literal (``_`` and
+``%`` match themselves, unlike SQL ``LIKE``) and parquet footer statistics
+prune the scan.
 """
 
 from __future__ import annotations
@@ -52,3 +57,29 @@ def numeric_composite_col(field: str, col: Column) -> Column:
         ).cast("long"),
     ).otherwise(v)
     return F.concat(F.lit(field + ":"), F.lpad(F.lower(F.hex(guarded)), WIDTH, "0"))
+
+
+def upper_exclusive(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix`` —
+    ``MiruTermComposer.makeUpperExclusive``: bump the last code point,
+    dropping trailing maximal ones (U+10FFFF) and skipping surrogates, so
+    the bound stays valid UTF-8 and code point order ≡ UTF-8 byte order.
+    None when no string bounds them (an empty or all-maximal prefix)."""
+    while prefix:
+        c = ord(prefix[-1]) + 1
+        if c == 0xD800:
+            c = 0xE000
+        if c <= 0x10FFFF:
+            return prefix[:-1] + chr(c)
+        prefix = prefix[:-1]
+    return None
+
+
+def prefix_range(col, prefix: str):
+    """``col`` starts with ``prefix``, as the range predicate
+    [prefix, upper_exclusive(prefix)). ``col`` is a Spark Column or a
+    pyarrow dataset field: both overload the comparisons, and both prune a
+    range by footer statistics (pyarrow cannot prune a starts_with)."""
+    pred = col >= prefix
+    upper = upper_exclusive(prefix)
+    return pred if upper is None else pred & (col < upper)

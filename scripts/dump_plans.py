@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,18 +33,26 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "BENCH", "PLANS.md")
 
+    from miru_spark.session import get_spark
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark("dump_plans", master=f"local[{nproc}]", shuffle_partitions=nproc)
+    idx_dir = tempfile.mkdtemp(prefix="miru_plans_idx_")
+    try:
+        write_plans(spark, sf_dir, out_md, idx_dir)
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
+        spark.stop()
+
+
+def write_plans(spark, sf_dir: str, out_md: str, idx_dir: str) -> None:
     from pyspark.sql import functions as F
 
     from miru_spark.filters import parse_query
     from miru_spark.index_store import build_persistent, load_index
     from miru_spark.operators import fulltext, wand
-    from miru_spark.session import get_spark
 
-    spark = get_spark("dump_plans", master="local[8]", shuffle_partitions=8)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx_dir = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), f"miru_plans_idx_{os.getpid()}"
-    )
     build_persistent(
         docs, idx_dir, text_col="text", dense_id_col="doc_id",
         capacity=1024, wave_size=8, merge_partitions=8,
@@ -114,7 +124,6 @@ def main() -> None:
     with open(out_md, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out_md} ({len(sections)} plans)")
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -130,3 +130,25 @@ def check_term_ranges():
         return len(ranges)
 
     return check
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """jobs(fn) -> (fn(), the number of Spark jobs fn started), counted by
+    the status tracker under a job group of fn's own."""
+    import itertools
+
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def jobs(fn):
+        group = f"spark_jobs_{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

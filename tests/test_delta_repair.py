@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from miru_spark.index_store import (
     FORMAT_VERSION,
+    _fold_stats,
+    _with_deltas,
     build_persistent,
     compact,
     load_index,
@@ -127,6 +129,44 @@ def test_repair_waves_forward_and_doclens_match_segments(
     )
     assert len(waves) == 2
     assert check_wave_artifacts(d, waves) == 3  # one repaired doc + two inserts
+
+
+def _folded_stats(spark, index_dir):
+    """(every term of the stats files, the folded {term: (df, cum_tf)})."""
+    with open(os.path.join(index_dir, "manifest.json")) as f:
+        waves = json.load(f)["delta_waves"]
+    unfolded = _with_deltas(spark, index_dir, "stats", "stats_delta", waves)
+    every = sorted({r["term"] for r in unfolded.select("term").collect()})
+    return every, {r["term"]: (r["df"], r["cum_tf"]) for r in _fold_stats(unfolded).collect()}
+
+
+def test_repaired_term_lookups_fold_on_the_driver(
+    spark, documents, repaired_dir, tmp_path, spark_jobs
+):
+    """On a handle with delta waves, cold term and prefix lookups run no
+    Spark job and equal the folded stats relation: a term only delta waves
+    hold is present, a term whose df folds to 0 is absent."""
+    d, victim = repaired_dir
+    # a copy with a third wave that repairs the victim again: "fresh", which
+    # only its first repair held, folds to df 0
+    d3 = str(tmp_path / "idx")
+    shutil.copytree(d, d3)
+    upsert_docs(
+        spark, d3,
+        documents.filter(F.col("doc_id") == victim).withColumn("text", F.lit("zzzagain spark")),
+    )
+    base = {r["term"] for r in spark.read.parquet(f"{d}/stats").select("term").collect()}
+    for index_dir in (d, d3):
+        every, want = _folded_stats(spark, index_dir)
+        idx = load_index(spark, index_dir)
+        got, n_terms = spark_jobs(lambda: fulltext.term_stats(idx, every))
+        assert n_terms == 0 and got == want
+        idx = load_index(spark, index_dir)
+        exp, n_prefix = spark_jobs(lambda: fulltext._expand_prefix(idx, "zzz", 100))
+        assert n_prefix == 0 and exp == sorted(t for t in want if t.startswith("zzz"))
+        assert {t: idx.term_stats_cache[t] for t in exp} == {t: want[t] for t in exp}
+    assert "zzzdelta" in want and "zzzagain" in want and not {"zzzdelta", "zzzagain"} & base
+    assert "fresh" in every and "fresh" not in want
 
 
 def test_compact_preserves_results_and_clears_deltas(spark, documents, repaired_dir):
@@ -240,6 +280,17 @@ def test_compacted_postings_are_term_ranges(spark, repaired_dir, check_term_rang
     plan = fulltext.top_k(idx, "spark AND join", k=10)._jdf.queryExecution().toString()
     pushed = [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if "term" in m]
     assert any("In(term" in p or "EqualTo(term" in p for p in pushed), pushed
+
+
+def test_compacted_stats_are_term_ranges(spark, repaired_dir, check_term_ranges):
+    """compact() writes stats_gN/ as the build writes stats/: term-sorted
+    files whose ranges ascend, which the driver-side lookups prune by."""
+    d, _ = repaired_dir
+    compact(spark, d)  # a no-op once the compaction test above has run
+    with open(os.path.join(d, "manifest.json")) as f:
+        stats = json.load(f)["dirs"]["stats"]
+    assert stats.startswith("stats_g")
+    assert check_term_ranges(os.path.join(d, stats)) >= 2
 
 
 @pytest.mark.parametrize("defect", ["not_ready", "old_format"])

@@ -340,3 +340,68 @@ def test_term_stats_memo_eviction_keeps_current_query_terms(doc_index, monkeypat
         assert "join" in got
     finally:
         doc_index.term_stats_cache = None
+
+
+def test_loaded_term_lookups_run_no_spark_job(loaded_index, doc_index, spark_jobs):
+    """A loaded index reads cold term and prefix lookups from its stats
+    files on the driver: no Spark job, the in-memory build's answers, and a
+    prefix expansion seeds the term memo with its terms' stats."""
+    terms = ["spark", "join", "zzznotaterm"]
+    try:
+        for idx in (loaded_index, doc_index):
+            idx.term_stats_cache = idx.prefix_cache = None
+        got, n_terms = spark_jobs(lambda: fulltext.term_stats(loaded_index, terms))
+        exp, n_prefix = spark_jobs(lambda: fulltext._expand_prefix(loaded_index, "s", 3))
+        assert (n_terms, n_prefix) == (0, 0)
+        assert got == fulltext.term_stats(doc_index, terms) and set(got) == {"spark", "join"}
+        assert exp == fulltext._expand_prefix(doc_index, "s", 3) and len(exp) == 3
+        memo = loaded_index.term_stats_cache
+        assert {t: memo[t] for t in exp} == fulltext.term_stats(doc_index, exp)
+    finally:
+        for idx in (loaded_index, doc_index):
+            idx.term_stats_cache = idx.prefix_cache = None
+
+
+def test_prefix_is_literal(spark, tmp_path):
+    """A prefix clause is the literal term range [p, p⁺): `_` matches only
+    itself, as `%` would. Checked on an in-memory handle, a loaded handle
+    and the DuckDB oracle, over terms that a SQL LIKE would confuse."""
+    import duckdb
+
+    from miru_spark.index_store import build_persistent, load_index
+    from miru_spark.operators.build import build_index
+    from miru_spark.oracles import filtered_topk_sql
+
+    pdf = pd.DataFrame({
+        "doc_id": [0, 1, 2, 3],
+        "text": ["get_value alpha", "getxvalue alpha", "__init__ beta", "ab gamma"],
+        "tag": ["get_x", "getxx", "none", "none"],
+    })
+    docs = spark.createDataFrame(pdf)
+    kw = dict(text_col="text", dense_id_col="doc_id", capacity=128, aux_fields=["tag"])
+    build_persistent(docs, str(tmp_path / "idx"), **kw)
+    handles = {"memory": build_index(docs, **kw), "loaded": load_index(spark, str(tmp_path / "idx"))}
+    duck = duckdb.connect()
+    duck.register("documents", pdf)
+    cases = {
+        "get_*": [0],
+        "__*": [2],
+        "get_* OR __*": [0, 2],
+        "alpha NOT get_*": [1],
+        "tag:get_*": [0],
+    }
+    try:
+        for name, idx in handles.items():
+            assert fulltext._expand_prefix(idx, "get_", 100) == ["get_value"], name
+            assert fulltext._expand_prefix(idx, "__", 100) == ["__init__"], name
+        for q, want in cases.items():
+            spec = parse_query(q, k=10)
+            sql = fulltext_topk_sql(spec) if spec.tree is None else filtered_topk_sql(spec)
+            oracle = [(int(d), s) for d, s in duck.execute(sql).fetchall()]
+            assert sorted(d for d, _ in oracle) == want, (q, oracle)
+            for name, idx in handles.items():
+                got = [(int(r["doc"]), r["score"]) for r in fulltext.top_k(idx, spec).collect()]
+                assert got == oracle, (q, name, got)
+    finally:
+        handles["memory"].unpersist()
+        duck.close()

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from miru_spark.filters import QueryParseError, parse_query
 from miru_spark.operators import fulltext
 from miru_spark.operators.build import build_index
-from miru_spark.termcomp import numeric_composite_py
+from miru_spark.termcomp import numeric_composite_py, upper_exclusive
 
 
 def test_numeric_composite_is_order_preserving():
@@ -22,6 +22,22 @@ def test_numeric_composite_is_order_preserving():
     assert enc == sorted(enc)  # lexicographic ≡ numeric
     with pytest.raises(ValueError, match="nonnegative"):
         numeric_composite_py("f", -1)
+
+
+@pytest.mark.parametrize(
+    "prefix,upper",
+    [("get_", "get`"), ("a\U0010ffff", "b"), ("a\ud7ff", "a\ue000"), ("\U0010ffff", None), ("", None)],
+)
+def test_upper_exclusive_bounds_every_extension(prefix, upper):
+    """upper_exclusive(p) is the least string above every string starting
+    with p, in UTF-8 byte order — the prefix range scan's exclusive end."""
+    assert upper_exclusive(prefix) == upper
+    if upper is None:
+        return
+    enc = upper.encode()
+    for tail in ("", "a", "\U0010ffff" * 3):
+        assert (prefix + tail).encode() < enc
+    assert prefix.encode() < enc and not enc.startswith(prefix.encode())
 
 
 def test_range_query_parses_to_range_leaf():

@@ -106,6 +106,13 @@ def test_merged_postings_are_term_ranges(built_dirs, check_term_ranges):
     assert check_term_ranges(f"{clean_dir}/postings") >= 2
 
 
+def test_merged_stats_are_term_ranges(built_dirs, check_term_ranges):
+    # term-sorted stats files with ascending ranges: a driver-side term or
+    # prefix lookup opens only the files whose range covers its terms
+    clean_dir, _, _ = built_dirs
+    assert check_term_ranges(f"{clean_dir}/stats") >= 2
+
+
 def test_manifest_lineage_counters(documents, built_dirs):
     clean_dir, _, _ = built_dirs
     with open(os.path.join(clean_dir, "manifest.json")) as f:
