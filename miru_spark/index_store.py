@@ -15,13 +15,12 @@ Layout under ``index_dir``:
     stats/                   global (term, df, cum_tf) as 4 ascending term
                              ranges, each file sorted by term (stats_gN/
                              after compaction); repair deltas live in
-                             stats_delta/wave=K. ``load_index`` records
-                             these directories and reads none of them:
-                             the query path's term and prefix lookups read
-                             and fold them on the driver with pyarrow
-                             (fulltext.term_stats), footer term ranges
-                             pruning the files. Old unsorted stats answer
-                             the same, only without the pruning.
+                             stats_delta/wave=K. The query path's term
+                             and prefix lookups read and fold them on the
+                             driver with pyarrow (fulltext.term_stats),
+                             footer term ranges pruning the row groups.
+                             Old unsorted stats answer the same, only
+                             without the pruning.
     doclens/wave=K/          (part, doc_id, doc_key, dl, content_sha)
     forward/wave=K/          forward index (part, doc_id, term, tf) — the
                              reference's activity/row index
@@ -59,6 +58,12 @@ stage and ``compact``; ``_with_deltas`` unions a merged relation with its
 listed delta waves and ``_fold_stats`` folds the stats, for ``load_index``
 and ``compact``; ``_generation_dirs`` lists the compaction generations that
 a fresh build and ``compact`` sweep.
+
+Every read names its directories — manifest-listed waves, never a
+``wave=*`` glob — and declares its artifact's schema (``_SCHEMAS``), so no
+read opens a footer to infer one. ``load_index`` also lists, unopened, the
+files the driver reads with pyarrow (``index_files.IndexFiles``): the
+stats, the packed postings and the removal batches.
 """
 
 from __future__ import annotations
@@ -72,8 +77,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from miru_spark.checkpoint import Manifest
+from miru_spark.index_files import IndexFiles
 from miru_spark.operators import build as B
 from miru_spark.schema import resolve_fields
 from miru_spark.session import local_frame
@@ -130,17 +138,51 @@ def _committed_waves(mdata: dict) -> list[int]:
     return sorted(int(k) for k in mdata["waves"])
 
 
+# Each artifact's declared schema, by the directory that holds it (a delta
+# directory holds its merged artifact's rows). Every read declares its
+# schema, so none opens a footer to infer one (~80 ms a relation);
+# _ready_manifest refuses the older layouts a declared schema would not fit.
+_SCHEMAS = {
+    "postings": B.PACKED_SCHEMA,
+    "stats": "term string, df long, cum_tf long",
+    "aux": "part int, doc_id int, doc_key long, term string",
+    "doclens": "part int, doc_id int, doc_key long, content_sha string, dl long",
+    "forward": "part int, doc_id int, term string, tf int",
+    "removed": "part int, doc_id int, doc_key long",
+}
+_SCHEMAS.update(segments=_SCHEMAS["postings"], stats_delta=_SCHEMAS["stats"],
+                aux_delta=_SCHEMAS["aux"])
+
+
+def _read(spark: SparkSession, sub: str, *paths: str) -> DataFrame:
+    """The parquet directories ``paths`` of artifact ``sub`` as one scan,
+    with its declared schema."""
+    return spark.read.schema(_SCHEMAS[sub]).parquet(*paths)
+
+
+def _files(sub: str, paths: list[str]) -> IndexFiles:
+    """The parquet files under ``paths`` of artifact ``sub``, for the
+    driver's pyarrow reads (hidden and ``_`` files skipped, as Spark does)."""
+    files = [
+        os.path.join(p, f) for p in paths for f in sorted(os.listdir(p))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+    return IndexFiles(files, to_arrow_schema(StructType.fromDDL(_SCHEMAS[sub])))
+
+
 def _read_committed(spark: SparkSession, index_dir: str, sub: str, waves: list[int]) -> DataFrame:
-    """Union of {sub}/wave=K for manifest-COMMITTED waves only — directories a
-    crashed (uncommitted) mutation left behind are invisible to readers. The
-    wave partition column prunes the unselected directories."""
-    base = f"{index_dir}/{sub}"
-    return (
-        spark.read.option("basePath", base)
-        .parquet(f"{base}/wave=*")
-        .filter(F.col("wave").isin(waves))
-        .drop("wave")
-    )
+    """{sub}/wave=K for manifest-COMMITTED waves only, in one scan —
+    directories a crashed (uncommitted) mutation left behind are invisible
+    to readers."""
+    return _read(spark, sub, *(f"{index_dir}/{sub}/wave={k}" for k in waves))
+
+
+def _delta_paths(index_dir: str, base: str, delta_sub: str, waves: list[int],
+                 optional: bool = False) -> list[str]:
+    """``base`` and ``{delta_sub}/wave=K`` for each listed K. A listed
+    wave's directory must exist unless ``optional`` (aux_delta/)."""
+    deltas = [f"{index_dir}/{delta_sub}/wave={k}" for k in waves]
+    return [f"{index_dir}/{base}"] + [p for p in deltas if not optional or os.path.isdir(p)]
 
 
 def _with_deltas(
@@ -149,13 +191,11 @@ def _with_deltas(
 ) -> DataFrame:
     """The merged relation ``base`` ∪ ``{delta_sub}/wave=K`` for each listed
     K: one scan per wave, unioned in order. Delta segments share the merged
-    term-sorted layout, so `term IN` pushes into every branch. A listed
-    wave's directory must exist unless ``optional`` (aux_delta/)."""
-    out = spark.read.parquet(f"{index_dir}/{base}")
-    for k in waves:
-        p = f"{index_dir}/{delta_sub}/wave={k}"
-        if not optional or os.path.isdir(p):
-            out = out.unionByName(spark.read.parquet(p))
+    term-sorted layout, so `term IN` pushes into every branch."""
+    paths = _delta_paths(index_dir, base, delta_sub, waves, optional)
+    out = _read(spark, delta_sub, paths[0])
+    for p in paths[1:]:
+        out = out.unionByName(_read(spark, delta_sub, p))
     return out
 
 
@@ -334,7 +374,7 @@ def build_persistent(
         if not manifest.data["waves"]:
             # fresh manifest (new build OR fingerprint-mismatch restart): delete
             # any stale wave/stage directories from a previous fingerprint so
-            # wave=* globs can never mix old and new data
+            # a listed wave=K directory can never hold old data
             for sub in (
                 "segments", "doclens", "forward", "postings", "stats", "aux",
                 "removed", "aux_delta", "stats_delta",
@@ -365,14 +405,15 @@ def build_persistent(
 
         # merge stage: global term-range layout + stats (idempotent overwrite)
         if not manifest.stage_done("ready") or waves_run:
-            all_segments = spark.read.parquet(f"{index_dir}/segments/wave=*")
+            committed = _committed_waves(manifest.data)
+            all_segments = _read_committed(spark, index_dir, "segments", committed)
             aux = None
             if aux_fields or numeric_aux_fields:
                 aux = B.aux_postings(docs, aux_fields or [], numeric_aux_fields)
             _write_merged(
                 index_dir, "", all_segments, B.term_stats(all_segments), aux, merge_partitions
             )
-            all_lens = spark.read.parquet(f"{index_dir}/doclens/wave=*")
+            all_lens = _read_committed(spark, index_dir, "doclens", committed)
             row = all_lens.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.avg("dl").alias("avgdl"),
@@ -730,7 +771,7 @@ def _read_removed(spark: SparkSession, index_dir: str, batches: list[str]) -> Da
     into every query plan of a repaired index."""
     out = None
     for b in batches:
-        df = spark.read.parquet(f"{index_dir}/removed/{b}").select("part", "doc_id")
+        df = _read(spark, "removed", f"{index_dir}/removed/{b}").select("part", "doc_id")
         out = df if out is None else out.unionByName(df)
     return out
 
@@ -738,12 +779,15 @@ def _read_removed(spark: SparkSession, index_dir: str, batches: list[str]) -> Da
 def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = None) -> B.IndexHandle:
     """Open a persisted index as an IndexHandle (flat view decoded lazily).
 
-    Readers see only manifest-COMMITTED state: wave globs filter to listed
-    waves, removal batches and delta waves come from the manifest — so an
+    Readers see only manifest-COMMITTED state: waves, removal batches and
+    delta waves are read from the directories the manifest lists — so an
     index with a crashed (uncommitted) mutation loads exactly as if the
-    mutation never started. Delta waves (un-compacted repairs) union into
-    the postings/stats/aux relations; `term IN` pruning pushes into every
-    branch because delta segments share the term-sorted parquet layout."""
+    mutation never started. Every relation declares its schema, so the
+    load opens no parquet file. Delta waves (un-compacted repairs) union
+    into the postings/stats/aux relations; `term IN` pruning pushes into
+    every branch because delta segments share the term-sorted parquet
+    layout. The files the driver reads (stats, packed postings, removal
+    batches) are listed on the handle, unopened."""
     mdata, stopwords, stemmer = _ready_manifest(index_dir)
     info = mdata.get("stage_info", {}).get("ready", {})
     committed = _committed_waves(mdata)
@@ -751,11 +795,6 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
     dirs = _dirs(mdata)
 
     packed = _with_deltas(spark, index_dir, dirs["postings"], "segments", deltas)
-    # the query path's term and prefix lookups read these directories on
-    # the driver (fulltext.term_stats); the relation serves every other reader
-    stats_dirs = [f"{index_dir}/{dirs['stats']}"] + [
-        f"{index_dir}/stats_delta/wave={k}" for k in deltas
-    ]
     stats = _with_deltas(spark, index_dir, dirs["stats"], "stats_delta", deltas)
     if deltas:
         stats = _fold_stats(stats)
@@ -767,10 +806,11 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
         aux = _with_deltas(spark, index_dir, dirs["aux"], "aux_delta", deltas, optional=True)
     # every committed wave wrote forward/, so the committed glob is complete
     forward = _read_committed(spark, index_dir, "forward", committed)
-    removed = None
+    removed = removed_files = None
     batches = mdata.get("removal_batches", [])
     if batches:
         removed = _read_removed(spark, index_dir, batches)
+        removed_files = _files("removed", [f"{index_dir}/removed/{b}" for b in batches])
 
     # per-part doc_key ranges (timeRange partition pruning) from the wave
     # counters — repair instances keep their ORIGINAL doc_key in a fresh
@@ -786,7 +826,12 @@ def load_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
         flat=B.unpack_postings(packed),
         packed=packed,
         stats=stats,
-        stats_dirs=stats_dirs,
+        # the query path's term lookups and bounded top-k read these on the
+        # driver (fulltext.term_stats, wand.packed_topk); the relations
+        # serve every other reader
+        stats_files=_files("stats", _delta_paths(index_dir, dirs["stats"], "stats_delta", deltas)),
+        packed_files=_files("segments", _delta_paths(index_dir, dirs["postings"], "segments", deltas)),
+        removed_files=removed_files,
         lens=lens.select("part", "doc_id", "doc_key", "dl"),
         corpus=B.CorpusStats(n_docs=int(info["n_docs"]), avgdl=float(info["avgdl"])),
         lazy=True,

@@ -29,24 +29,23 @@ ranges; delta waves folded as at load) and memoized per handle
 Plan shape at scale: the only big-table touch is the postings scan with the
 query terms pushed down (`term IN (...)` reaches the parquet reader). A
 LOADED index's flat BM25 / tf-idf query without constraint or authz masks
-then runs one Arrow kernel per part (``wand.packed_topk``, shared with
-``wand_topk``): the scan — plus the removal index's rows — reaches the
-kernel in one task while Σdf fits ``_DECODE_POSTINGS_PER_TASK``, else hashed
-by part; the kernel decodes, masks, sums each doc's contributions in the
-same ascending order and cuts each part to its top-k, and the JVM rounds
-and takes the ordered LIMIT — no join, no aggregate. Every other query —
-in-memory indexes, trees, masks, TIME — folds relationally: the query-term
-table, per-term stats folded in, is a driver-built Arrow ``LocalRelation``
-(``session.local_frame``) on the build side of a broadcast join, so shipping
-it runs no Python worker. The winners→docs gather join happens after LIMIT
+runs one per-part kernel (``wand.packed_topk``, shared with ``wand_topk``)
+that decodes, masks, sums each doc's contributions in the same ascending
+order, cuts each part to its top-k and rounds — no join, no aggregate.
+While Σdf fits ``_DECODE_POSTINGS_PER_TASK`` the kernel runs on the driver
+over the handle's packed files and the answer is a local relation (no
+Spark job); past it the scan — plus the removal index's rows — feeds one
+``mapInArrow``, hashed by part, and the JVM takes the ordered LIMIT. Every
+other query — in-memory indexes, trees, masks, TIME — folds relationally:
+the query-term table, per-term stats folded in, is a driver-built Arrow
+``LocalRelation`` (``session.local_frame``) on the build side of a
+broadcast join, so shipping it runs no Python worker. The winners→docs gather join happens after LIMIT
 (lazy materialization, FullText.java:204-217).
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,7 +59,7 @@ from miru_spark.filters import (
 )
 from miru_spark.operators.build import IndexHandle
 from miru_spark.session import local_frame
-from miru_spark.termcomp import prefix_range
+from miru_spark.termcomp import prefix_range, upper_exclusive
 
 K1 = 1.2
 B = 0.75
@@ -158,46 +157,21 @@ def _decode_width(index: IndexHandle, terms: list[str]) -> int | None:
 
 _STATS_CACHE_MAX = 1_000_000
 _PREFIX_CACHE_MAX = 16_384
-_STATS_SCHEMA = pa.schema([("term", pa.string()), ("df", pa.int64()), ("cum_tf", pa.int64())])
 
 
-def _read_stats(
-    index: IndexHandle, flt: pc.Expression, limit: int | None = None
-) -> list[tuple[str, int, int]]:
-    """(term, df, cum_tf) rows of a loaded handle's stats files that match
-    the pyarrow filter ``flt``, ascending by term and cut to the first
-    ``limit``, read on the driver: no Spark job. Delta-wave rows fold as
-    index_store._fold_stats folds them: exact integer sums per term, terms
-    with df ≤ 0 dropped. The first lookup reads every file's footer once;
-    later ones open only the files whose row-group term ranges the filter
-    can match."""
-    dset = index.stats_dataset
-    if dset is None:
-        files = [f for d in index.stats_dirs for f in ds.dataset(d, format="parquet").files]
-        dset = ds.dataset(files, schema=_STATS_SCHEMA, format="parquet")
-        for frag in dset.get_fragments():
-            frag.ensure_complete_metadata()
-        index.stats_dataset = dset
-    # one thread: a lookup reads a few row groups, and the query's CPU
-    # stays on the calling thread
+def _read_stats(index: IndexHandle, limit: int | None = None, **where) -> list[tuple[str, int, int]]:
+    """(term, df, cum_tf) rows of a loaded handle's stats files whose term
+    ``where`` selects (``IndexFiles.read``: a term list or a range),
+    ascending by term and cut to the first ``limit``, read on the driver:
+    no Spark job. Delta-wave rows fold as index_store._fold_stats folds
+    them: exact integer sums per term, terms with df ≤ 0 dropped."""
     t = (
-        dset.to_table(filter=flt, use_threads=False)
+        index.stats_files.read(["term", "df", "cum_tf"], **where)
         .group_by("term", use_threads=False)
         .aggregate([("df", "sum"), ("cum_tf", "sum")])
-        .filter(pc.field("df_sum") > 0)
-        .sort_by("term")
-        .slice(0, limit)
     )
+    t = t.filter(pc.greater(t["df_sum"], 0)).sort_by("term").slice(0, limit)
     return list(zip(*(t[c].to_pylist() for c in ("term", "df_sum", "cum_tf_sum"))))
-
-
-def _term_in(terms: list[str]) -> pc.Expression:
-    """OR of ``term == t``: footer statistics prune it, where pyarrow cannot
-    prune an ``is_in``. Balanced, so a long term list nests shallowly."""
-    if len(terms) == 1:
-        return pc.field("term") == terms[0]
-    half = len(terms) // 2
-    return _term_in(terms[:half]) | _term_in(terms[half:])
 
 
 def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -209,8 +183,8 @@ def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int
     re-scan per query); an IndexHandle is an immutable snapshot of one
     index generation (upsert/compact produce a NEW handle via load_index),
     so memoization cannot go stale. On a loaded index cold terms are read
-    on the driver from the stats files (``_read_stats`` over ``_term_in``),
-    so no lookup runs a Spark job; an in-memory build filters its cached
+    on the driver from the stats files (``_read_stats``), so no lookup runs
+    a Spark job; an in-memory build filters its cached
     ``stats`` relation in one job. Warm terms — including absent ones,
     memoized as None — cost nothing."""
     cache = index.term_stats_cache
@@ -223,8 +197,8 @@ def term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int
         cache.clear()
     missing = [t for t in terms if t not in cache]
     if missing:
-        if index.stats_dirs is not None:
-            rows = _read_stats(index, _term_in(missing))
+        if index.stats_files is not None:
+            rows = _read_stats(index, terms=missing)
         else:
             rows = (
                 index.stats.filter(F.col("term").isin(missing))
@@ -253,8 +227,8 @@ def _expand_prefix(index: IndexHandle, prefix: str, max_expansion: int) -> list[
     if hit is None:
         if len(cache) > _PREFIX_CACHE_MAX:
             cache.clear()
-        if index.stats_dirs is not None:
-            rows = _read_stats(index, prefix_range(pc.field("term"), prefix), max_expansion)
+        if index.stats_files is not None:
+            rows = _read_stats(index, max_expansion, lo=prefix, hi=upper_exclusive(prefix))
         else:
             rows = (
                 index.stats.filter(prefix_range(F.col("term"), prefix))
@@ -818,8 +792,9 @@ def top_k(index: IndexHandle, query: str | QuerySpec, k: int = 100, scorer: str 
     if spec.tree is not None:
         return top_k_tree(index, spec)
     if index.lazy and not spec.constraints and spec.authz is None:
-        # a loaded index's flat query scores in one Arrow kernel per part
-        # (decode, mask, ordered fold, per-part cut) — wand.packed_topk
+        # a loaded index's flat query scores in the per-part kernel
+        # (decode, mask, ordered fold, per-part cut, round) — on the driver
+        # while its Σdf is bounded — wand.packed_topk
         from miru_spark.operators.wand import packed_topk
 
         return packed_topk(index, spec)

@@ -1,21 +1,30 @@
 """Per-partition top-k kernels over packed postings (SURVEY.md §2.4, §3.2).
 
 This is the physical query path the north_rule names: the query terms'
-delta+varint posting rows are scanned term-pruned (and part-pruned under a
-timeRange), every part's rows land in one task, and ONE Arrow kernel per task
-decodes them, scores each part and keeps that part's top-k; a JVM round and
-ordered LIMIT merge the parts — the reference's per-partition
-``FullTextCustomQuestion.askLocal`` + ``FullTextAnswerMerger`` shape
-(miru-stream-plugins/.../fulltext/FullTextCustomQuestion.java:53-118,
-FullTextAnswerMerger.java:31-68). ``packed_topk`` builds that plan; it serves
-``wand_topk`` and ``fulltext.top_k``'s flat queries on a loaded index, so
-both answer through one scoring implementation.
+delta+varint posting rows are read term-pruned (and part-pruned under a
+timeRange), every part's rows meet in one kernel call, and ONE per-part
+kernel (``_candidates``) decodes them, scores each part, keeps that part's
+top-k and rounds the survivors; an ordered merge of the parts gives the
+answer — the reference's per-partition ``FullTextCustomQuestion.askLocal``
++ ``FullTextAnswerMerger`` shape (miru-stream-plugins/.../fulltext/
+FullTextCustomQuestion.java:53-118, FullTextAnswerMerger.java:31-68).
+``packed_topk`` serves ``wand_topk`` and ``fulltext.top_k``'s flat queries
+on a loaded index, so both answer through one scoring implementation.
 
-Plan: scan (``term IN`` pushed to parquet) ∪ the removal index's
-(part, doc_id) marker rows → ``coalesce(1)`` when the query's Σdf fits one
-task's decode budget, else ``repartition(width, "part")`` → ``mapInArrow``
-→ ``F.round(score, 6)`` → TakeOrdered(score desc, doc desc). No pandas, no
-join, no aggregate.
+Two hosts run the one kernel; the query's Σdf (positive and negative scan
+terms, known from the term memo) picks between them:
+  * the driver — a loaded handle whose Σdf fits
+    ``_DECODE_POSTINGS_PER_TASK``: the handle's packed files and removal
+    batches are read with pyarrow on the calling thread
+    (``index_files.IndexFiles``, row groups pruned by their footer term
+    ranges), the kernel runs, and the first k of its output by (score desc,
+    doc desc) return as a local relation: no Spark job, as the reference
+    answers from the partition's resident index in the serving process;
+  * Spark — larger queries and in-memory handles: the packed scan
+    (``term IN`` pushed to parquet) ∪ the removal index's (part, doc_id)
+    marker rows → ``coalesce(1)`` while Σdf fits one task's decode budget,
+    else ``repartition(width, "part")`` → ``mapInArrow`` (the kernel) →
+    TakeOrdered(score desc, doc desc). No pandas, no join, no aggregate.
 
 Per part the kernel drops negated, removed and out-of-range docs BEFORE any
 scoring (filtering after a top-k cut would let masked docs take heap
@@ -30,8 +39,12 @@ Two per-part scorers, one per query op, both exact:
                        contrib, fully vectorized: every OR query, bm25 and
                        tf-idf alike (the accumulate-then-cut top-k shape).
 The part's cut keeps the RAW score of every doc ≥ its k-th raw score −
-``_CUT_SLACK``; rounding then happens once, JVM-side (HALF_UP, as the
-oracle), so no numpy rounding can disagree with the final order.
+``_CUT_SLACK``, and the same cut runs once more across the kernel's parts.
+Rounding happens once, on both hosts inside the kernel, on the survivors:
+HALF_UP at 6 decimals of each double's shortest decimal form
+(``_round6``), which is Spark's ``F.round`` and the oracle's round. The
+final order is on the rounded scores; the Spark host's JVM only orders
+and limits.
 
 No block-max skipping: a packed row stores each term's whole per-part list
 as ONE delta+varint stream (ids are prefix sums of the gaps, and no block's
@@ -47,15 +60,19 @@ not read them.
 
 Scale note: per-partition state is O(capacity) (the dense accumulator) —
 bounded by the partition rollover capacity exactly like the reference's
-per-partition bitmaps, independent of corpus size.
+per-partition bitmaps, independent of corpus size. The driver host holds
+one bounded query's rows, at most ``_DECODE_POSTINGS_PER_TASK`` postings.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,7 +95,8 @@ from miru_spark.session import local_frame
 # round(x, 6) moves a score by ≤ 5e-7, so a doc below the cut rounds
 # strictly below k docs of its own part and cannot reach the global top-k,
 # whatever the rounding mode; ties in the rounded score (ordered by doc)
-# always survive to the JVM merge.
+# always survive to the final merge. The same holds for the cut across
+# the parts of one kernel call.
 _CUT_SLACK = 2e-6
 
 
@@ -164,8 +182,8 @@ def _kernel_taat(terms, scorer, n_docs, avgdl):
 def _part_cut(scores: np.ndarray, k: int) -> np.ndarray:
     """Indices of the part's docs that can still reach the global top-k:
     every doc whose RAW score is ≥ the part's k-th raw score − _CUT_SLACK
-    (all of them when the part has ≤ k docs). The final HALF_UP round and
-    (score, doc) order are the JVM's, so ties at the k-th place survive."""
+    (all of them when the part has ≤ k docs). The HALF_UP round and the
+    (score, doc) order come after, so ties at the k-th place survive."""
     n = len(scores)
     if k <= 0:
         return np.empty(0, np.int64)
@@ -205,7 +223,7 @@ def _part_terms(rows, entries_by_term, neg_terms, stats, time_range):
     sorted by (term, qtf, clause). Negated and removed doc ids and (under a
     timeRange) out-of-range keys leave every positive list BEFORE any
     scoring."""
-    drop = [np.array([r["removed_id"]], np.int64) for r in rows if r["removed_id"] is not None]
+    drop = [np.array([r["removed_id"]], np.int64) for r in rows if r.get("removed_id") is not None]
     drop += [codec.delta_unpack(r["ids"]) for r in rows if r["term"] in neg_terms]
     excluded = np.unique(np.concatenate(drop)) if drop else None
     out = []
@@ -236,14 +254,104 @@ def _part_terms(rows, entries_by_term, neg_terms, stats, time_range):
     return out
 
 
+@dataclass(frozen=True)
+class _Query:
+    """What the per-part kernel needs of one expanded flat query."""
+
+    entries_by_term: dict  # term -> [(qtf, clause)]
+    neg_terms: frozenset
+    stats: dict  # term -> (df, cum_tf)
+    op: str
+    n_clauses: int
+    scorer: str
+    k: int
+    n_docs: int
+    avgdl: float
+    time_range: tuple | None
+
+
+_MICRO = Decimal("0.000001")
+
+
+def _round6(scores: np.ndarray) -> np.ndarray:
+    """Each score rounded HALF_UP at 6 decimals from its shortest decimal
+    form — what Spark's ``F.round`` computes
+    (``BigDecimal.valueOf(d).setScale(6, HALF_UP)``) and the oracle's
+    round(score, 6)."""
+    return np.array(
+        [float(Decimal(repr(s)).quantize(_MICRO, ROUND_HALF_UP)) for s in scores.tolist()],
+        np.float64,
+    )
+
+
+def _candidates(tables, q: _Query) -> tuple[np.ndarray, np.ndarray]:
+    """The per-part kernel both hosts run, over Arrow tables or batches of
+    packed rows and removal markers: group the rows by part; per part
+    ``_part_terms`` → ``_score_part`` → ``_part_cut`` → ``_keys_of``; the
+    same cut once more across the parts; then round. Returns the
+    (doc_key, rounded score) of every doc that can still reach the top-k,
+    unordered."""
+    by_part: dict[int, list[dict]] = {}
+    for t in tables:
+        for r in t.to_pylist():
+            by_part.setdefault(r["part"], []).append(r)
+    docs_out: list[np.ndarray] = []
+    scores_out: list[np.ndarray] = []
+    for rows in by_part.values():
+        terms = _part_terms(rows, q.entries_by_term, q.neg_terms, q.stats, q.time_range)
+        if not terms:
+            continue
+        docs, scores = _score_part(terms, q.op, q.n_clauses, q.scorer, q.n_docs, q.avgdl)
+        keep = _part_cut(scores, q.k)
+        if len(keep):
+            docs_out.append(_keys_of(terms, docs[keep]))
+            scores_out.append(scores[keep])
+    if not docs_out:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    docs, scores = np.concatenate(docs_out), np.concatenate(scores_out)
+    keep = _part_cut(scores, q.k)
+    return docs[keep], _round6(scores[keep])
+
+
+_SCAN_COLUMNS = ["part", "term", "ids", "tfs", "dls", "keys"]
+
+
+def _driver_topk(index: IndexHandle, q: _Query, scan_terms: list[str],
+                 pparts: list[int] | None) -> DataFrame:
+    """The kernel on the calling thread, over the loaded handle's packed
+    files (term-pruned) and removal batches; the top-k as a local relation,
+    whose collect runs no Spark job."""
+    tables = [index.packed_files.read(_SCAN_COLUMNS, terms=scan_terms)]
+    if index.removed_files is not None:
+        tables.append(
+            index.removed_files.read(["part", "doc_id"]).rename_columns(["part", "removed_id"])
+        )
+    rows = pa.concat_tables(tables, promote_options="default")
+    if pparts is not None:
+        rows = rows.filter(pc.is_in(rows["part"], value_set=pa.array(pparts, pa.int32())))
+    docs, scores = _candidates([rows], q)
+    return local_frame(
+        index.packed.sparkSession, _ordered(docs, scores, q.k), "doc long, score double"
+    )
+
+
+def _ordered(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """The first k (doc, score) pairs by score desc, doc desc: the order of
+    the Spark host's TakeOrdered."""
+    top = sorted(zip(scores.tolist(), docs.tolist()), reverse=True)[:k]
+    return [(d, s) for s, d in top]
+
+
 def _empty_result(index: IndexHandle) -> DataFrame:
     return local_frame(index.packed.sparkSession, [], "doc long, score double")
 
 
 def packed_topk(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     """(doc, score) top-k of a flat BM25 / tf-idf spec with no constraint or
-    authz mask: term-pruned packed scan → one Arrow kernel per part (decode,
-    mask, ordered fold, per-part cut) → JVM round + TakeOrdered."""
+    authz mask, through the per-part kernel (decode, mask, ordered fold,
+    per-part cut, round): on the calling thread for a loaded handle whose
+    Σdf fits ``_DECODE_POSTINGS_PER_TASK``, else in one ``mapInArrow`` over
+    the term-pruned packed scan, then a JVM TakeOrdered."""
     if spec.scorer not in ("bm25", "miru_tfidf"):
         raise ValueError(f"unknown scorer {spec.scorer}")
     expanded = expand_clauses(index, spec)
@@ -269,10 +377,17 @@ def packed_topk(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     pparts = parts_for_time_range(index, spec.time_range)
     if not entries_by_term or (pparts is not None and not pparts):
         return _empty_result(index)
+    q = _Query(
+        entries_by_term, frozenset(neg_terms), stats, spec.op, n_clauses, spec.scorer,
+        spec.k, index.corpus.n_docs, index.corpus.avgdl, spec.time_range,
+    )
     scan_terms = sorted(set(entries_by_term) | set(neg_terms))
+    total = sum(stats[t][0] for t in scan_terms if t in stats)
+    if index.packed_files is not None and total <= _DECODE_POSTINGS_PER_TASK:
+        return _driver_topk(index, q, scan_terms, pparts)
+
     rel = index.packed.filter(F.col("term").isin(scan_terms)).select(
-        "part", "term", "ids", "tfs", "dls", "keys",
-        F.lit(None).cast("int").alias("removed_id"),
+        *_SCAN_COLUMNS, F.lit(None).cast("int").alias("removed_id"),
     )
     if index.removed is not None:
         # removal-index marker rows ride the same scan into the kernel
@@ -283,41 +398,21 @@ def packed_topk(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     rel = _part_pruned(rel, pparts)
     # every row of a part must reach one task: a single task while Σdf fits
     # one task's decode budget (no exchange), else hash by part
-    total = sum(stats[t][0] for t in scan_terms if t in stats)
     width = max(1, -(-int(total) // _DECODE_POSTINGS_PER_TASK))
     rel = rel.coalesce(1) if width == 1 else rel.repartition(width, "part")
 
-    op, sc, kk, time_range = spec.op, spec.scorer, spec.k, spec.time_range
-    n_docs, avgdl = index.corpus.n_docs, index.corpus.avgdl
-    negs = frozenset(neg_terms)
-
     def score_parts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        by_part: dict[int, list[dict]] = {}
-        for batch in batches:
-            for r in batch.to_pylist():
-                by_part.setdefault(r["part"], []).append(r)
-        docs_out: list[np.ndarray] = []
-        scores_out: list[np.ndarray] = []
-        for rows in by_part.values():
-            terms = _part_terms(rows, entries_by_term, negs, stats, time_range)
-            if not terms:
-                continue
-            docs, scores = _score_part(terms, op, n_clauses, sc, n_docs, avgdl)
-            keep = _part_cut(scores, kk)
-            if len(keep):
-                docs_out.append(_keys_of(terms, docs[keep]))
-                scores_out.append(scores[keep])
-        if docs_out:
+        docs, scores = _candidates(batches, q)
+        if len(docs):
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(docs_out)), pa.array(np.concatenate(scores_out))],
+                [pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
                 names=["doc", "score"],
             )
 
     return (
         rel.mapInArrow(score_parts, "doc long, score double")
-        .withColumn("score", F.round("score", 6))
         .orderBy(F.desc("score"), F.desc("doc"))
-        .limit(kk)
+        .limit(spec.k)
     )
 
 

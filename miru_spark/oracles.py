@@ -44,12 +44,18 @@ def _q_cte(spec: QuerySpec, max_expansion: int) -> str:
 
 
 def _neg_pred(spec: QuerySpec) -> str:
+    """Drop docs holding a negated term. A negated prefix reaches its first
+    ``max_expansion`` terms in term order, as a positive one does
+    (MiruAggregateUtil.java:826-839)."""
     if not spec.negative:
         return ""
     conds = []
     for cl in spec.negative:
         if cl.prefix:
-            conds.append(f"starts_with(term, {_lit(cl.term)})")
+            conds.append(
+                "term IN (SELECT term FROM stats WHERE "
+                f"starts_with(term, {_lit(cl.term)}) ORDER BY term LIMIT {spec.max_expansion})"
+            )
         else:
             conds.append(f"term = {_lit(cl.term)}")
     return (

@@ -75,11 +75,11 @@ def upper_exclusive(prefix: str) -> str | None:
     return None
 
 
-def prefix_range(col, prefix: str):
+def prefix_range(col: Column, prefix: str) -> Column:
     """``col`` starts with ``prefix``, as the range predicate
-    [prefix, upper_exclusive(prefix)). ``col`` is a Spark Column or a
-    pyarrow dataset field: both overload the comparisons, and both prune a
-    range by footer statistics (pyarrow cannot prune a starts_with)."""
+    [prefix, upper_exclusive(prefix)), which parquet footer statistics
+    prune. The driver's pyarrow reads take the same range as
+    ``IndexFiles.read(lo=prefix, hi=upper_exclusive(prefix))``."""
     pred = col >= prefix
     upper = upper_exclusive(prefix)
     return pred if upper is None else pred & (col < upper)

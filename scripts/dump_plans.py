@@ -63,15 +63,37 @@ def write_plans(spark, sf_dir: str, out_md: str, idx_dir: str) -> None:
         spark, idx_dir, docs.withColumn("doc_key", F.col("doc_id").cast("long"))
     )
 
+    # past the bound: the decode budget lowered below the queries' Σdf, so
+    # the per-part kernel runs in Spark instead of on the driver
+    budget = wand._DECODE_POSTINGS_PER_TASK
+    wand._DECODE_POSTINGS_PER_TASK = 4096
+    try:
+        and_past = fulltext.top_k(idx, "spark AND join", k=100)
+        or_past = wand.wand_topk(idx, "spark OR vector OR dup", k=100)
+    finally:
+        wand._DECODE_POSTINGS_PER_TASK = budget
+
     sections: list[tuple[str, str, object]] = [
         (
-            "BM25 AND (top_k on a loaded index: the packed top-k kernel)",
-            "`term IN (...)` reaches the parquet scan (PushedFilters); a "
-            "loaded index's flat top_k runs wand.packed_topk -> ONE "
-            "mapInArrow kernel (decode, rarest-first intersection, exact "
-            "scores, per-part cut) -> JVM round + TakeOrdered; no join, no "
-            "aggregate, no exchange.",
+            "BM25 AND, bounded (top_k on a loaded index: the per-part kernel on the driver)",
+            "The query's Σdf fits wand._DECODE_POSTINGS_PER_TASK (262,144 "
+            "postings), so wand.packed_topk reads the handle's packed files "
+            "with pyarrow on the calling thread (row groups pruned by their "
+            "footer term ranges), runs the per-part kernel (decode, "
+            "rarest-first intersection, exact scores, per-part cut, HALF_UP "
+            "round) and returns the ordered top-k as ONE LocalTableScan: "
+            "collecting it runs no Spark job.",
             fulltext.top_k(idx, "spark AND join", k=100),
+        ),
+        (
+            "BM25 AND, past the bound (the per-part kernel in Spark)",
+            "Generated with the budget lowered to 4,096 postings, below the "
+            "query's Σdf. `term IN (...)` reaches the parquet scan "
+            "(PushedFilters); the rows are hashed by part into "
+            "ceil(Σdf / budget) tasks, ONE mapInArrow runs the same kernel, "
+            "and the JVM only orders and limits (TakeOrdered); no join, no "
+            "aggregate, no block metadata read.",
+            and_past,
         ),
         (
             "Nested boolean tree (single-scan evaluator)",
@@ -81,12 +103,13 @@ def write_plans(spark, sf_dir: str, out_md: str, idx_dir: str) -> None:
             fulltext.top_k(idx, parse_query("spark AND (join OR merge) NOT window", k=100)),
         ),
         (
-            "Packed top-k kernel (wand_topk over packed postings)",
-            "Term-pruned scan of packed rows (self-contained: tf+dl+doc_key "
-            "per posting, no block metadata read) -> ONE mapInArrow kernel "
-            "(decode, mask, dense-accumulator OR, per-part cut) -> JVM round "
-            "+ TakeOrdered; no join, no aggregate, no doclens relation.",
-            wand.wand_topk(idx, "spark OR vector OR dup", k=100),
+            "Packed top-k kernel (wand_topk over packed postings, past the bound)",
+            "Budget lowered as above. Term-pruned scan of packed rows "
+            "(self-contained: tf+dl+doc_key per posting, no block metadata "
+            "read) -> ONE mapInArrow kernel (decode, mask, dense-accumulator "
+            "OR, per-part cut, round) -> TakeOrdered; no join, no aggregate, "
+            "no doclens relation.",
+            or_past,
         ),
         (
             "Gather (winners -> stored fields)",

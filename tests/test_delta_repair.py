@@ -266,10 +266,14 @@ def test_remove_after_repair_and_compact(spark, documents, repaired_dir):
     ).count() == 0
 
 
-def test_compacted_postings_are_term_ranges(spark, repaired_dir, check_term_ranges):
+def test_compacted_postings_are_term_ranges(
+    spark, repaired_dir, check_term_ranges, spark_jobs, monkeypatch
+):
     """compact() writes the build's merged layout: each postings_gN/ file is
     term-sorted, the files' term ranges ascend, and a loaded compacted
-    handle still pushes the query terms into the parquet scan."""
+    handle still pushes the query terms into the parquet scan. A bounded
+    query reads the files on the driver (no Spark job), so the scan is
+    checked past the bound, where the Spark host gives the same answer."""
     d, _ = repaired_dir
     compact(spark, d)  # a no-op once the compaction test above has run
     with open(os.path.join(d, "manifest.json")) as f:
@@ -277,7 +281,12 @@ def test_compacted_postings_are_term_ranges(spark, repaired_dir, check_term_rang
     assert postings.startswith("postings_g")
     assert check_term_ranges(os.path.join(d, postings)) >= 2
     idx = load_index(spark, d)
-    plan = fulltext.top_k(idx, "spark AND join", k=10)._jdf.queryExecution().toString()
+    bounded, jobs = spark_jobs(lambda: fulltext.top_k(idx, "spark AND join", k=10).collect())
+    assert bounded and jobs == 0, jobs
+    monkeypatch.setattr(wand_ops, "_DECODE_POSTINGS_PER_TASK", -1)
+    df = fulltext.top_k(idx, "spark AND join", k=10)
+    assert df.collect() == bounded
+    plan = df._jdf.queryExecution().toString()
     pushed = [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if "term" in m]
     assert any("In(term" in p or "EqualTo(term" in p for p in pushed), pushed
 

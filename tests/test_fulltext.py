@@ -222,13 +222,16 @@ class _PoisonStats:
         raise AssertionError(f"stats relation touched ({name}) on warm terms")
 
 
-def test_query_relations_are_local(spark, doc_index, loaded_index):
-    """Driver-built relations on the query path — the query-term table and
-    the empty results — plan as JVM LocalTableScans, never as an
-    ExistingRDD (a createDataFrame over a Python list, which parallelizes
-    through Python-worker tasks on every query). Checked on the in-memory
-    and on a loaded index, for every scoring route of top_k; a loaded
-    index's flat queries ship no query relation at all (one Arrow kernel)."""
+def test_query_relations_are_local(spark, doc_index, loaded_index, spark_jobs, monkeypatch):
+    """Driver-built relations on the query path — the query-term table, the
+    empty results and a bounded loaded query's answer — plan as JVM
+    LocalTableScans, never as an ExistingRDD (a createDataFrame over a
+    Python list, which parallelizes through Python-worker tasks on every
+    query). Checked on the in-memory and on a loaded index, for every
+    scoring route of top_k. A loaded index's bounded flat query is answered
+    on the driver: a LocalTableScan, and no Spark job to plan or collect
+    it. Past the bound it ships no query relation at all (one Arrow
+    kernel)."""
     from miru_spark.filters import parse_query
     from miru_spark.operators import wand
 
@@ -246,15 +249,19 @@ def test_query_relations_are_local(spark, doc_index, loaded_index):
         rows = df.collect()
         return rows, df._jdf.queryExecution().executedPlan().toString()
 
+    def loaded_flat(index, q, scorer):
+        return index.lazy and scorer != "time" and parse_query(q).tree is None
+
     for index in (doc_index, loaded_index):
         for q, scorer in scored:
-            rows, plan = executed(fulltext.top_k(index, q, k=10, scorer=scorer))
+            (rows, plan), jobs = spark_jobs(
+                lambda: executed(fulltext.top_k(index, q, k=10, scorer=scorer))
+            )
             assert rows, (q, scorer)
             assert "ExistingRDD" not in plan, (q, scorer, plan)
-            if index.lazy and scorer != "time" and parse_query(q).tree is None:
-                assert plan.count("MapInArrow") == 1, (q, scorer, plan)
-            else:
-                assert "LocalTableScan" in plan, (q, scorer, plan)
+            assert "LocalTableScan" in plan, (q, scorer, plan)
+            if loaded_flat(index, q, scorer):
+                assert jobs == 0 and "\n" not in plan.strip(), (q, scorer, plan)
         # an unknown term, and a prefix expanding to no term (wand's
         # empty-expansion early return)
         for df in (
@@ -264,17 +271,39 @@ def test_query_relations_are_local(spark, doc_index, loaded_index):
             rows, plan = executed(df)
             assert not rows
             assert "ExistingRDD" not in plan, plan
+    # past the bound (no Σdf fits it): the Spark host's one Arrow kernel
+    monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", -1)
+    for q, scorer in scored:
+        if loaded_flat(loaded_index, q, scorer):
+            rows, plan = executed(fulltext.top_k(loaded_index, q, k=10, scorer=scorer))
+            assert rows, (q, scorer)
+            assert "ExistingRDD" not in plan, (q, scorer, plan)
+            assert plan.count("MapInArrow") == 1, (q, scorer, plan)
 
 
-def test_loaded_flat_top_k_is_one_arrow_kernel(loaded_index):
-    """A loaded index's flat query is scan → one MapInArrow (decode, mask,
-    ordered fold, per-part cut) → JVM round + TakeOrdered: no interpreted
-    fold aggregate, no broadcast join, and — every fixture query fits one
-    task's decode budget — no exchange. The scan reads no block metadata."""
-    for q in ["spark OR vector", "spark AND join", "spark NOT window", "cust*",
-              "s* OR sc*"]:
+def test_loaded_flat_top_k_is_one_arrow_kernel(loaded_index, spark_jobs, monkeypatch):
+    """A loaded index's bounded flat query runs the per-part kernel on the
+    driver: the answer is one LocalTableScan, and planning and collecting
+    it start no Spark job. Past the bound — below every query's Σdf, where
+    the width still floors at one task — the same query is scan → one
+    MapInArrow (decode, mask, ordered fold, per-part cut, round) → JVM
+    TakeOrdered, with the same answer: no interpreted fold aggregate, no
+    broadcast join, no exchange, and the scan reads no block metadata."""
+    from miru_spark.operators import wand
+
+    queries = ["spark OR vector", "spark AND join", "spark NOT window", "cust*", "s* OR sc*"]
+    bounded = {}
+    for q in queries:
+        df, jobs = spark_jobs(lambda: fulltext.top_k(loaded_index, q, k=10))
+        rows, more = spark_jobs(df.collect)
+        assert rows and jobs + more == 0, (q, jobs, more)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.strip().startswith("LocalTableScan") and len(plan.strip().splitlines()) == 1, plan
+        bounded[q] = rows
+    monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", -1)
+    for q in queries:
         df = fulltext.top_k(loaded_index, q, k=10)
-        assert df.collect(), q
+        assert df.collect() == bounded[q], q
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInArrow") == 1, (q, plan)
         assert "ReadSchema" in plan, plan
@@ -405,3 +434,22 @@ def test_prefix_is_literal(spark, tmp_path):
     finally:
         handles["memory"].unpersist()
         duck.close()
+
+
+def test_negative_prefix_is_capped_at_max_expansion(doc_index, loaded_index, duck, spark_jobs):
+    """A negated prefix reaches only its first max_expansion terms in term
+    order, as a positive one does (MiruAggregateUtil.java:826-839): the
+    in-memory fold, the loaded handle's driver kernel (no Spark job) and
+    the oracle agree, and the cap changes the answer."""
+    import dataclasses
+
+    spec = dataclasses.replace(parse_query("join NOT s*", k=100), max_expansion=2)
+    want = [(int(d), s) for d, s in duck.execute(fulltext_topk_sql(spec)).fetchall()]
+    uncapped = duck.execute(
+        fulltext_topk_sql(dataclasses.replace(spec, max_expansion=10**6))
+    ).fetchall()
+    assert len(want) > len(uncapped), (len(want), len(uncapped))
+    for index in (doc_index, loaded_index):
+        rows, jobs = spark_jobs(lambda: fulltext.top_k(index, spec).collect())
+        assert [(int(r["doc"]), r["score"]) for r in rows] == want, index.lazy
+        assert jobs == 0 or not index.lazy, jobs

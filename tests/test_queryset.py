@@ -98,13 +98,11 @@ def test_queryset_loaded_index_parity(qset, doc_index, loaded_index):
     assert not failures, f"loaded-index mismatches: {failures}"
 
 
-def test_queryset_repaired_index_parity(qset, documents, spark, tmp_path_factory):
-    # the same check after version repair: tombstoned instances (the removal
-    # index), delta waves and corrected stats. The reference is the DataFrame
-    # fold over the SAME loaded handle (lazy=False routes top_k through
-    # score_candidates and _apply_masks), plus a timeRange and an and_not query
-    import dataclasses
-
+@pytest.fixture(scope="module")
+def repaired(documents, spark, tmp_path_factory):
+    """The corpus persisted, version-repaired (four victims rewritten: a
+    delta wave, a removal batch, corrected stats) and loaded; plus the
+    query set's specs and two more, a timeRange and an and_not query."""
     from miru_spark.index_store import build_persistent, load_index, upsert_docs
 
     idx_dir = str(tmp_path_factory.mktemp("qs_repaired") / "idx")
@@ -121,13 +119,67 @@ def test_queryset_repaired_index_parity(qset, documents, spark, tmp_path_factory
     )
     loaded = load_index(spark, idx_dir)
     assert loaded.removed is not None and loaded.removed.count() == len(victims)
+    return loaded, [
+        parse_query("spark OR join OR zzzrepaired", k=60, time_range=(100, 400)),
+        parse_query("spark AND NOT zzzrepaired", k=100),
+    ]
+
+
+def test_queryset_repaired_index_parity(qset, repaired):
+    # the same check after version repair: tombstoned instances (the removal
+    # index), delta waves and corrected stats. The reference is the DataFrame
+    # fold over the SAME loaded handle (lazy=False routes top_k through
+    # score_candidates and _apply_masks), plus a timeRange and an and_not query
+    import dataclasses
+
+    loaded, extra = repaired
     fold = dataclasses.replace(loaded, lazy=False)
-    specs = [parse_query(r["query"], k=r["k"], scorer=r["scorer"]) for r in qset]
-    specs.append(parse_query("spark OR join OR zzzrepaired", k=60, time_range=(100, 400)))
-    specs.append(parse_query("spark AND NOT zzzrepaired", k=100))
+    specs = [parse_query(r["query"], k=r["k"], scorer=r["scorer"]) for r in qset] + extra
     failures = []
     for spec in specs:
         got = _rows(fulltext.top_k(loaded, spec))
         if not got or got != _rows(fulltext.top_k(fold, spec)):
             failures.append(spec)
     assert not failures, f"{len(failures)} repaired-index mismatches: {failures[:3]}"
+
+
+def _handles(qset, loaded_index, repaired):
+    specs = [parse_query(r["query"], k=r["k"], scorer=r["scorer"]) for r in qset]
+    return [("loaded", loaded_index, specs), ("repaired", repaired[0], specs + repaired[1])]
+
+
+def test_queryset_bounded_queries_run_no_spark_job(qset, loaded_index, repaired, spark_jobs):
+    """Every query of the set is bounded (its Σdf fits one task's decode
+    budget), so on a loaded and on a repaired handle top_k and wand_topk
+    answer on the driver: planning and collecting start no Spark job."""
+    from miru_spark.operators import wand
+
+    for name, index, specs in _handles(qset, loaded_index, repaired):
+        for spec in specs:
+            terms = {t for t, _, _ in fulltext.expand_clauses(index, spec)}
+            terms |= set(fulltext.expand_negatives(index, spec))
+            sigma_df = sum(df for df, _ in fulltext.term_stats(index, sorted(terms)).values())
+            assert sigma_df <= wand._DECODE_POSTINGS_PER_TASK, (name, spec)
+            for run in (fulltext.top_k, wand.wand_topk):
+                rows, jobs = spark_jobs(lambda: run(index, spec).collect())
+                assert jobs == 0, (name, run.__name__, spec, jobs)
+
+
+def test_queryset_driver_and_spark_hosts_agree(qset, loaded_index, repaired, monkeypatch):
+    """The per-part kernel answers every query identically on the driver
+    host and on the Spark host (forced with a budget below every Σdf), on
+    a loaded and on a repaired handle."""
+    from miru_spark.operators import wand
+
+    handles = _handles(qset, loaded_index, repaired)
+    driver = {name: [_rows(fulltext.top_k(index, s)) for s in specs]
+              for name, index, specs in handles}
+    monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", -1)
+    failures = []
+    for name, index, specs in handles:
+        for spec, want in zip(specs, driver[name]):
+            df = fulltext.top_k(index, spec)
+            assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+            if _rows(df) != want:
+                failures.append((name, spec))
+    assert not failures, f"{len(failures)} host mismatches: {failures[:3]}"

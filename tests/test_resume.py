@@ -85,13 +85,23 @@ def test_loaded_index_answers_queries(spark, documents, doc_index, built_dirs):
     assert list(got["score"]) == list(want["score"])
 
 
-def test_loaded_index_term_pushdown(spark, documents, built_dirs):
+def test_loaded_index_term_pushdown(spark, documents, built_dirs, spark_jobs, monkeypatch):
     # the persisted-index query path must filter the packed parquet scan on
     # term BEFORE the Python unpack map — Catalyst cannot push predicates
-    # through mapInArrow, so an unpushed plan decodes EVERY posting list
+    # through mapInArrow, so an unpushed plan decodes EVERY posting list.
+    # A bounded query scans nothing in Spark (wand.packed_topk reads the
+    # term-pruned row groups on the driver), so the plan is checked past
+    # the bound, where the same answer comes from the Spark host
+    from miru_spark.operators import wand
+
     clean_dir, _, _ = built_dirs
     idx = load_index(spark, clean_dir, documents)
-    plan = fulltext.top_k(idx, "spark AND join", k=10)._jdf.queryExecution().toString()
+    bounded, jobs = spark_jobs(lambda: fulltext.top_k(idx, "spark AND join", k=10).collect())
+    assert bounded and jobs == 0, jobs
+    monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", -1)
+    df = fulltext.top_k(idx, "spark AND join", k=10)
+    assert df.collect() == bounded
+    plan = df._jdf.queryExecution().toString()
     assert "PushedFilters" in plan
     import re
 

@@ -51,15 +51,19 @@ def test_parts_for_time_range_intersects(loaded):
     assert fulltext.parts_for_time_range(loaded, (hi + 10, hi + 20)) == []
 
 
-def test_timerange_prunes_scan_and_matches_unpruned(spark, loaded):
+def test_timerange_prunes_scan_and_matches_unpruned(spark, loaded, monkeypatch):
     spec = parse_query("spark OR join", k=50, time_range=(100, 400))
+    # results identical with pruning info withheld (mask-only evaluation),
+    # on the driver host (bounded) and on the Spark host (past the bound)
+    blind = _rows(fulltext.top_k(dataclasses.replace(loaded, part_ranges=None), spec))
+    assert _rows(fulltext.top_k(loaded, spec)) == blind and blind
+    monkeypatch.setattr(wand_ops, "_DECODE_POSTINGS_PER_TASK", -1)
     pruned = fulltext.top_k(loaded, spec)
     # the part predicate reaches the packed parquet scan
     plan = pruned._jdf.queryExecution().toString()
     assert "In(part" in plan or "EqualTo(part" in plan, plan[:3000]
-    # results identical with pruning info withheld (mask-only evaluation)
-    blind = fulltext.top_k(dataclasses.replace(loaded, part_ranges=None), spec)
-    assert _rows(pruned) == _rows(blind) and pruned.count() > 0
+    assert _rows(pruned) == blind
+    assert _rows(fulltext.top_k(dataclasses.replace(loaded, part_ranges=None), spec)) == blind
     # disjoint range → empty, on both paths
     empty_spec = parse_query("spark", k=10, time_range=(1 << 60, (1 << 60) + 5))
     assert fulltext.top_k(loaded, empty_spec).count() == 0

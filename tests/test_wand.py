@@ -84,34 +84,92 @@ def test_term_in_two_clauses_matches_oracle(doc_index, loaded_index, duck, q):
 
 
 def test_part_cut_keeps_both_sides_of_a_rounding_tie(spark):
-    """0.6015625 (= 77/128) is a 7th-decimal tie: HALF_UP — F.round and the
-    oracle — gives 0.601563, numpy's half-even np.round gives 0.601562, the
-    value 0.6015624 rounds to as well. At k=1 the two rounding modes pick
-    different winners, so the per-part cut must keep both and leave the
-    decision to the JVM round."""
+    """0.6015625 (= 77/128) is a 7th-decimal tie: HALF_UP — F.round, the
+    oracle and the kernel's _round6 — gives 0.601563, numpy's half-even
+    np.round gives 0.601562, the value 0.6015624 rounds to as well. At k=1
+    the two rounding modes pick different winners, so the per-part cut
+    must keep both, and both hosts' finishes — the driver's ordering and the
+    JVM's TakeOrdered over the kernel's output — pick the HALF_UP winner."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     scores = np.array([0.6015624, 0.5, 0.6015625])
     docs = np.array([2, 7, 1])
     assert np.round(0.6015625, 6) == np.round(0.6015624, 6) == 0.601562
     keep = wand._part_cut(scores, 1)
     assert sorted(keep.tolist()) == [0, 2]
+    rounded = wand._round6(scores[keep])
+    assert sorted(rounded.tolist()) == [0.601562, 0.601563]
+    assert wand._ordered(docs[keep], rounded, 1) == [(1, 0.601563)]
     survivors = spark.createDataFrame(
-        [(int(d), float(s)) for d, s in zip(docs[keep], scores[keep])],
+        [(int(d), float(s)) for d, s in zip(docs[keep], rounded)],
         "doc long, score double",
     )
-    from pyspark.sql import functions as F
-
-    top = (
-        survivors.withColumn("score", F.round("score", 6))
-        .orderBy(F.desc("score"), F.desc("doc"))
-        .limit(1)
-        .collect()
-    )
+    top = survivors.orderBy(F.desc("score"), F.desc("doc")).limit(1).collect()
     assert [(r["doc"], r["score"]) for r in top] == [(1, 0.601563)]
+    # the JVM's own round agrees
+    jvm = spark.createDataFrame([(0.6015625,)], "x double").select(F.round("x", 6)).first()[0]
+    assert jvm == 0.601563
     # fewer docs than k: all survive; k=0: none
     assert wand._part_cut(scores, 5).tolist() == [0, 1, 2]
     assert wand._part_cut(scores, 0).tolist() == []
+
+
+def test_half_up_tie_on_both_hosts(spark, tmp_path, monkeypatch):
+    """A tf-idf score of exactly 77/128 = 0.6015625 comes out HALF_UP as
+    0.601563 from a loaded handle on the driver host and on the Spark host,
+    as from the in-memory fold (F.round) and the oracle."""
+    import duckdb
+    import pandas as pd
+
+    from miru_spark.index_store import build_persistent, load_index
+    from miru_spark.operators.build import build_index
+    from miru_spark.oracles import fulltext_topk_sql
+
+    pdf = pd.DataFrame({"doc_id": [0, 1, 2], "text": ["x " * 77, "x " * 51, "y"]})
+    docs = spark.createDataFrame(pdf)
+    kw = dict(text_col="text", dense_id_col="doc_id", capacity=128)
+    build_persistent(docs, str(tmp_path / "idx"), **kw)
+    loaded = load_index(spark, str(tmp_path / "idx"))
+    memory = build_index(docs, **kw)
+    spec = parse_query("x", k=10, scorer="miru_tfidf")
+    want = [(0, 0.601563), (1, 0.398438)]
+    duck = duckdb.connect()
+    try:
+        duck.register("documents", pdf)
+        assert [(int(d), s) for d, s in duck.execute(fulltext_topk_sql(spec)).fetchall()] == want
+        assert [tuple(r) for r in fulltext.top_k(memory, spec).collect()] == want
+        assert [tuple(r) for r in fulltext.top_k(loaded, spec).collect()] == want
+        monkeypatch.setattr(wand, "_DECODE_POSTINGS_PER_TASK", -1)
+        df = fulltext.top_k(loaded, spec)
+        assert [tuple(r) for r in df.collect()] == want
+        assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        memory.unpersist()
+        duck.close()
+
+
+def test_round6_agrees_with_spark_round(spark):
+    """The kernel's rounding equals Spark's F.round(x, 6) on 120k seeded
+    doubles: 7th-decimal ties across the score range, their nextafter
+    neighbours on both sides, and random scores."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(20261020)
+    ties = (rng.integers(0, 40_000_000, 30_000) + 0.5) / 1e6
+    xs = np.concatenate([
+        ties, np.nextafter(ties, np.inf), np.nextafter(ties, -np.inf),
+        rng.random(30_000) * 40.0,
+    ])
+    src = spark.createDataFrame(pa.table({"i": np.arange(len(xs)), "x": xs}))
+    got = (
+        src.repartition(4).select("i", F.round("x", 6).alias("r")).orderBy("i").toPandas()
+    )
+    mine = wand._round6(xs)
+    bad = np.flatnonzero(got["r"].to_numpy() != mine)
+    assert len(xs) == 120_000 and not len(bad), [(xs[i], got["r"][i], mine[i]) for i in bad[:5]]
 
 
 def test_part_scorers_match_plain_sum_on_skewed_parts():
